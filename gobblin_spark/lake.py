@@ -30,6 +30,7 @@ parts"). ``compact()`` drops tombstones once they are no longer needed.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import shutil
@@ -169,11 +170,14 @@ class CommitConflictError(RuntimeError):
     and its pointer swap — the Iceberg ``ValidationException`` analogue
     (org.apache.iceberg SnapshotProducer's commit validation; the reference
     leans on it via IcebergMetadataWriter.java:893 commitTransaction).
-    Rebasable commit shapes retry automatically against the refreshed head
-    (delta MERGE generation appends — commutative under LWW — and
-    property-only commits); rewrite-shape commits (compact, rewrite MERGE,
-    delete_where) re-raise, because their written data derives from a stale
-    read of the target and must be recomputed."""
+    Rebasable commits — ``update_properties``, ``alter_schema``,
+    ``delete_where(mode="delta")`` and delta MERGE generation appends
+    (commutative under LWW) — retry automatically through the table's one
+    retry loop, ``SnapshotTable._commit_rebasable``, against the refreshed
+    head. Rewrite-shape commits (compact, rewrite MERGE, rewrite
+    delete_where, replace_sort_order) re-raise, because their written data
+    or their decision derives from a stale read of the target and must be
+    recomputed."""
 
     def __init__(self, ref: str, expected, actual):
         super().__init__(
@@ -281,8 +285,25 @@ class SnapshotTable:
         return self.manifest()["n_buckets"]
 
     def schema(self) -> T.StructType:
-        m = self.manifest()
-        return T.StructType.fromJson(m["schemas"][str(m["current_schema_id"])])
+        return self._era_schema(self.manifest())
+
+    @staticmethod
+    def _era_schema(m: dict, schema_id: int | None = None) -> T.StructType:
+        """Visible schema of era ``schema_id`` in ``m`` (default: current)."""
+        sid = m["current_schema_id"] if schema_id is None else schema_id
+        return T.StructType.fromJson(m["schemas"][str(sid)])
+
+    @classmethod
+    def _schema_change(cls, head: dict, schema: T.StructType) -> dict:
+        """Manifest fields that make ``schema`` current on top of ``head``:
+        the head's schema id when nothing changed, else a new id."""
+        sid = int(head["current_schema_id"])
+        if schema == cls._era_schema(head):
+            return {"current_schema_id": sid, "schemas": head["schemas"]}
+        return {
+            "current_schema_id": sid + 1,
+            "schemas": {**head["schemas"], str(sid + 1): schema.jsonValue()},
+        }
 
     def bucket_expr(self, col: str | None = None, n: int | None = None):
         """Deterministic layout bucket of the merge key (xxhash64, the same
@@ -369,12 +390,9 @@ class SnapshotTable:
                 "alter_schema: rename sources and targets overlap "
                 f"({sorted(overlap)}); issue sequential alter_schema calls"
             )
-        last: CommitConflictError | None = None
-        for attempt in range(5):
-            if attempt:
-                self._manifest = None
-            m = dict(self.manifest())
-            if m.get("delete_preds"):
+
+        def build(head: dict) -> dict:
+            if head.get("delete_preds"):
                 # a pending merge-on-read delete predicate is a SQL string
                 # that may reference a column being renamed/dropped — it
                 # would stop resolving at read time. Materialize first.
@@ -382,7 +400,7 @@ class SnapshotTable:
                     "alter_schema with pending delete_preds: run compact() "
                     "to materialize the purge first"
                 )
-            cur = self.schema()
+            cur = self._era_schema(head)
             names = set(cur.fieldNames())
             missing = touched - names
             if missing:
@@ -390,29 +408,28 @@ class SnapshotTable:
             surviving = (names - set(renames) - set(drops)) | set(renames.values())
             if len(surviving) != len(names) - len(drops):
                 raise ValueError(f"alter_schema: rename collides with an existing column")
-            fields = []
-            for f in cur.fields:
-                if f.name in drops:
-                    continue
-                fields.append(T.StructField(renames.get(f.name, f.name), f.dataType, True))
-            new_id = int(m["current_schema_id"]) + 1
-            m["schemas"] = {**m["schemas"], str(new_id): T.StructType(fields).jsonValue()}
-            m["current_schema_id"] = new_id
+            fields = [
+                T.StructField(renames.get(f.name, f.name), f.dataType, True)
+                for f in cur.fields
+                if f.name not in drops
+            ]
+            new = self._successor(
+                head,
+                **self._schema_change(head, T.StructType(fields)),
+                # sort orders referencing a renamed/dropped column follow along
+                sort_order=[
+                    renames.get(c, c) for c in head.get("sort_order") or [] if c not in drops
+                ],
+            )
+            new_id = str(new["current_schema_id"])
             if renames:
-                m["schema_renames"] = {**(m.get("schema_renames") or {}), str(new_id): renames}
+                new["schema_renames"] = {**(head.get("schema_renames") or {}), new_id: renames}
             if drops:
-                m["schema_drops"] = {**(m.get("schema_drops") or {}), str(new_id): drops}
-            m["parent"] = m["version"]
-            m["version"] = self._next_version(m["version"] + 1)
-            # sort orders referencing a renamed/dropped column follow along
-            so = [renames.get(c, c) for c in m.get("sort_order") or [] if c not in drops]
-            m["sort_order"] = so
-            try:
-                self._commit(m)
-                return {"version": m["version"], "schema_id": new_id}
-            except CommitConflictError as e:
-                last = e
-        raise last  # pragma: no cover - >5 conflicting writers
+                new["schema_drops"] = {**(head.get("schema_drops") or {}), new_id: drops}
+            return new
+
+        new = self._commit_rebasable(build)
+        return {"version": new["version"], "schema_id": new["current_schema_id"]}
 
     def replace_sort_order(self, cols: list[str]) -> None:
         """Metadata-only commit (≈ Iceberg ReplaceSortOrder): applies to
@@ -422,11 +439,7 @@ class SnapshotTable:
         bad = [c for c in cols if c not in names]
         if bad:
             raise ValueError(f"sort_order columns not in schema: {bad}")
-        m = dict(self.manifest())
-        m["sort_order"] = list(cols)
-        m["parent"] = m["version"]
-        m["version"] = self._next_version(m["version"] + 1)
-        self._commit(m)
+        self._commit(self._successor(self.manifest(), sort_order=list(cols)))
 
     def _clustered(self, df: DataFrame, m: dict, n_parts: int | None = None) -> DataFrame:
         """Bucket-partitioned and (when a sort order is set) sorted within
@@ -619,9 +632,56 @@ class SnapshotTable:
                 os.makedirs(os.path.join(self.root, "data"), exist_ok=True)
         raise RuntimeError(f"could not claim a data dir for v{version}")
 
+    def _successor(self, head: dict, properties: dict | None = None, **fields) -> dict:
+        """The manifest that commits on top of ``head``: the next version,
+        ``head`` as its parent (what ``_commit_locked`` validates against the
+        disk head), ``properties`` merged over the head's and ``fields``
+        replacing the head's; everything else carries forward. Every commit
+        after ``create`` builds its manifest here."""
+        return {
+            **head,
+            **fields,
+            "version": self._next_version(head["version"] + 1),
+            "parent": head["version"],
+            "properties": {**head["properties"], **(properties or {})},
+        }
+
+    def _commit_rebasable(self, build) -> dict:
+        """Optimistic retry loop (Iceberg SnapshotProducer's commit retries)
+        for commits that can be re-derived from any head: ``build(head)``
+        returns the successor manifest for ``head`` and depends on nothing
+        else the table holds. A conflict refreshes the head and rebuilds;
+        anything ``build`` raises — including a CommitConflictError for a
+        head it cannot rebase onto — propagates. Returns the committed
+        manifest."""
+        last: CommitConflictError | None = None
+        for attempt in range(5):
+            if attempt:
+                self._manifest = None  # refresh to the new head and rebase
+            new = build(self.manifest())
+            try:
+                self._commit(new)
+                return new
+            except CommitConflictError as e:
+                last = e
+        raise last  # pragma: no cover - >5 conflicting writers
+
     def _commit(self, manifest: dict) -> None:
         with self._commit_lock():
             self._commit_locked(manifest)
+
+    def _swap_head(self, version: int) -> None:
+        """Point this handle's ref at ``version`` by atomic rename — THE
+        commit point (``meta/_current`` for main, the ref file for a
+        branch). Callers hold the commit lock."""
+        if self.ref != "main":
+            self._write_ref(self.ref, version, "branch")
+            return
+        meta = os.path.join(self.root, "meta")
+        fd, tmp = tempfile.mkstemp(dir=meta)
+        with os.fdopen(fd, "w") as f:
+            f.write(str(version))
+        os.replace(tmp, os.path.join(meta, "_current"))
 
     def _commit_locked(self, manifest: dict) -> None:
         self._assert_writable()  # tags refuse commits
@@ -718,38 +778,22 @@ class SnapshotTable:
             fresh = LazyBucketIndex(self.root, pointers, n_shards)
             fresh._loaded = seeded
             manifest = {**manifest, "buckets": fresh}
+        elif not isinstance(manifest["buckets"], dict):
+            # inline manifests JSON-serialize the index, so an O(batch)
+            # overlay materializes here; sharded mode keeps it (above)
+            manifest = persisted = {**manifest, "buckets": dict(manifest["buckets"])}
         path = os.path.join(meta, f"v{manifest['version']:06d}.json")
         with open(path + ".tmp", "w") as f:
             json.dump(persisted, f, indent=1)
         os.replace(path + ".tmp", path)
-        if self.ref == "main":
-            fd, tmp = tempfile.mkstemp(dir=meta)
-            with os.fdopen(fd, "w") as f:
-                f.write(str(manifest["version"]))
-            os.replace(tmp, os.path.join(meta, "_current"))  # THE atomic commit point
-        else:
-            # branch handle: same atomic-rename commit point, on the ref file
-            self._write_ref(self.ref, manifest["version"], "branch")
+        self._swap_head(manifest["version"])
         self._manifest = manifest
 
     def update_properties(self, delta: dict) -> None:
         """Metadata-only commit (≈ change_property GMCE). Property deltas
         are trivially rebasable, so a concurrent-commit conflict retries
         against the refreshed head automatically."""
-        last: CommitConflictError | None = None
-        for attempt in range(5):
-            if attempt:
-                self._manifest = None  # refresh to the new head and rebase
-            m = dict(self.manifest())
-            m["properties"] = {**m["properties"], **delta}
-            m["parent"] = m["version"]
-            m["version"] = self._next_version(m["version"] + 1)
-            try:
-                self._commit(m)
-                return
-            except CommitConflictError as e:
-                last = e
-        raise last  # pragma: no cover - >5 conflicting writers
+        self._commit_rebasable(lambda head: self._successor(head, delta))
 
     # ----------------------------------------------------- named refs (WAP)
     # Iceberg-style branches and tags (SnapshotRef): a ref is a named pointer
@@ -899,14 +943,7 @@ class SnapshotTable:
                     f"cannot fast-forward {self.ref!r} (v{cur}) to {from_ref!r} "
                     f"(v{head}): histories diverged"
                 )
-            meta = os.path.join(self.root, "meta")
-            if self.ref == "main":
-                fd, tmp = tempfile.mkstemp(dir=meta)
-                with os.fdopen(fd, "w") as f:
-                    f.write(str(head))
-                os.replace(tmp, os.path.join(meta, "_current"))
-            else:
-                self._write_ref(self.ref, head, "branch")
+            self._swap_head(head)
         self._manifest = None
         return head
 
@@ -916,6 +953,22 @@ class SnapshotTable:
         """Manifest bucket value: a single entry (format v1) or a GENERATION
         LIST (delta commits append a generation instead of rewriting)."""
         return e if isinstance(e, list) else [e]
+
+    def _scan_eras(self, m: dict, groups: list[tuple[int, list[str]]]) -> DataFrame | None:
+        """Union of data-file groups, each ``(schema_id, paths)`` read with
+        its era's stored schema, resolved to ``m``'s current column names and
+        conformed to ``m``'s current schema, hidden columns included. The
+        caller picks the grouping (it shapes the Spark plan); None when
+        there is nothing to read."""
+        full = _with_hidden(self._era_schema(m))
+        parts = []
+        for schema_id, paths in groups:
+            stored = _with_hidden(self._era_schema(m, schema_id))
+            df = self.spark.read.schema(stored).parquet(*paths)
+            # resolve era columns to current names (rename/drop chain)
+            # BEFORE conforming — conform matches by name
+            parts.append(conform(self._to_current_names(df, schema_id, m), full))
+        return functools.reduce(DataFrame.unionByName, parts) if parts else None
 
     def manifest_at(self, version: int) -> dict:
         """Historical manifest (time travel). Versions older than the
@@ -1000,12 +1053,7 @@ class SnapshotTable:
             # read across a rebucket() must probe the era's own layout
             kb = xxh64(probe.encode("utf-8")) % int(m["n_buckets"])
             buckets = [kb] if buckets is None else [b for b in buckets if b == kb]
-        schemas = m["schemas"]
-
-        def _era_schema(schema_id: int) -> T.StructType:
-            return T.StructType.fromJson(schemas[str(schema_id)])
-
-        full = _with_hidden(_era_schema(m["current_schema_id"]))
+        full = _with_hidden(self._era_schema(m))
         single: dict[tuple[str, int], list[str]] = {}
         multi: dict[tuple[str, int], list[str]] = {}
         bmap = m["buckets"]
@@ -1036,23 +1084,8 @@ class SnapshotTable:
                     paths = [bucket_dir]
                 target.setdefault((ent["data"], ent["schema_id"]), []).extend(paths)
 
-        def _load(groups: dict[tuple[str, int], list[str]]) -> DataFrame | None:
-            parts: list[DataFrame] = []
-            for (_, schema_id), paths in groups.items():
-                stored = _with_hidden(_era_schema(schema_id))
-                df = self.spark.read.schema(stored).parquet(*paths)
-                # resolve era columns to current names (rename/drop chain)
-                # BEFORE conforming — conform matches by name
-                df = self._to_current_names(df, schema_id, m)
-                parts.append(conform(df, full))
-            if not parts:
-                return None
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-
-        base, delta = _load(single), _load(multi)
+        base = self._scan_eras(m, [(sid, p) for (_, sid), p in single.items()])
+        delta = self._scan_eras(m, [(sid, p) for (_, sid), p in multi.items()])
         if delta is not None:
             delta = lww_latest(delta, [self.key], ["_version_ts", "_version_off"])
             delta = delta.select(full.fieldNames())
@@ -1157,10 +1190,7 @@ class SnapshotTable:
                 )
                 for p, v in reversed(chain)
             ]
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
+            return functools.reduce(DataFrame.unionByName, parts)
         if granularity != "net":
             raise ValueError(f"unknown granularity: {granularity}")
         m_from, m_to = self.manifest_at(v_from), self.manifest_at(v_to)
@@ -1173,8 +1203,7 @@ class SnapshotTable:
             changed = None
         key = self.key
         # widest of the two eras so both sides conform to one shape
-        sch_to = T.StructType.fromJson(m_to["schemas"][str(m_to["current_schema_id"])])
-        full = _with_hidden(sch_to)
+        full = _with_hidden(self._era_schema(m_to))
         names = full.fieldNames()
         # the old era's column names may have been renamed/dropped inside the
         # window — walk them forward to v_to's names before conforming
@@ -1232,74 +1261,6 @@ class SnapshotTable:
         )
 
     # --------------------------------------------------------------- merge
-    def _rebase_delta(
-        self,
-        file_counts: dict[int, int],
-        data_rel: str,
-        file_schema: T.StructType,
-        properties: dict | None,
-        expect_n_buckets: int,
-    ) -> tuple[int, bool]:
-        """Optimistic-concurrency retry for a delta MERGE whose first commit
-        hit a concurrent head move (Iceberg SnapshotProducer's commit loop,
-        re-validated against the refreshed table). Generation appends are
-        COMMUTATIVE under LWW — read() collapses generations by
-        (_version_ts, _version_off), never by file order, so two concurrent
-        batches appending to the same bucket read back identically in either
-        commit order. The rebase is therefore pure metadata: re-derive each
-        touched bucket's entry list from the NEW head and append this batch's
-        already-written generation (the parquet files are reused verbatim).
-        Folding is skipped on a rebase (the next commit folds). A concurrent
-        schema change the written files don't carry aborts — the files can't
-        be tagged with a schema id that doesn't match their columns."""
-        last: CommitConflictError | None = None
-        for _ in range(5):
-            self._manifest = None
-            m = self.manifest()
-            if int(m["n_buckets"]) != int(expect_n_buckets):
-                # a concurrent rebucket() changed the layout: this batch's
-                # files are bucketed under the OLD count — appending them by
-                # bucket number would place rows in the wrong buckets
-                raise CommitConflictError(self.ref, None, m["version"])
-            schema_now = self.schema()
-            if merge_schemas(schema_now, file_schema) != file_schema:
-                # the new head evolved past what this batch's files hold:
-                # the files can't become the current schema, abort to caller
-                raise CommitConflictError(self.ref, None, m["version"])
-            schema_changed = file_schema != schema_now
-            schema_id = m["current_schema_id"] + (1 if schema_changed else 0)
-            schemas = dict(m["schemas"])
-            if schema_changed:
-                schemas[str(schema_id)] = file_schema.jsonValue()
-            bmap = m["buckets"]
-            overlay: dict[str, list] = {}
-            for b in sorted(file_counts):
-                prev = bmap.get(str(b))
-                ents = list(self._bucket_entries(prev)) if prev is not None else []
-                ents.append(
-                    {"data": data_rel, "schema_id": schema_id, "files": file_counts[b]}
-                )
-                overlay[str(b)] = ents
-            new_version = self._next_version(m["version"] + 1)
-            ov = OverlaidIndex(bmap, overlay, set())
-            sharded = int(m.get("manifest_shards") or 0) > 0
-            try:
-                self._commit(
-                    {
-                        **m,
-                        "version": new_version,
-                        "parent": m["version"],
-                        "current_schema_id": schema_id,
-                        "schemas": schemas,
-                        "buckets": ov if sharded else dict(ov),
-                        "properties": {**m["properties"], **(properties or {})},
-                    }
-                )
-                return new_version, schema_changed
-            except CommitConflictError as e:
-                last = e
-        raise last  # pragma: no cover - >5 conflicting writers
-
     def merge(
         self,
         updates: DataFrame,
@@ -1346,8 +1307,6 @@ class SnapshotTable:
             [f for f in updates.schema.fields if f.name not in HIDDEN and f.name != "_bucket"]
         )
         new_schema = merge_schemas(self.schema(), upd_visible)
-        schema_changed = new_schema != self.schema()
-        schema_id = m["current_schema_id"] + (1 if schema_changed else 0)
         full = _with_hidden(new_schema)
 
         key = self.key
@@ -1361,8 +1320,7 @@ class SnapshotTable:
             u = u.repartition(self.n_buckets, F.col("_bucket"))
 
         if mode == "delta":
-            new_version = self._next_version(m["version"] + 1)
-            data_rel = self._alloc_data_rel(new_version)
+            data_rel = self._alloc_data_rel(self._next_version(m["version"] + 1))
             out_path = os.path.join(self.root, data_rel)
             u_out = u.select([*names, "_bucket"])
             so = [c for c in m.get("sort_order") or [] if c in u_out.columns]
@@ -1370,110 +1328,54 @@ class SnapshotTable:
                 u_out = u_out.sortWithinPartitions("_bucket", *so)
             self._writer(u_out, m).partitionBy("_bucket").parquet(out_path)
             file_counts = _bucket_file_counts(out_path)
-            written = set(file_counts)
-            # O(batch) manifest view: only written buckets enter the overlay
-            # (their prior entry lists come from the lazy index, loading just
-            # the shards they live in); everything else is carried by the
-            # base index untouched
-            overlay: dict[str, list] = {}
-            removed: set[str] = set()
-            bmap = m["buckets"]
-            for b in sorted(written):
-                prev = bmap.get(str(b))
-                ents = list(self._bucket_entries(prev)) if prev is not None else []
-                ents.append(
-                    {"data": data_rel, "schema_id": schema_id, "files": file_counts[b]}
-                )
-                overlay[str(b)] = ents
-            schemas = dict(m["schemas"])
-            if schema_changed:
-                schemas[str(schema_id)] = new_schema.jsonValue()
+            info: dict = {}
 
-            # Bounded manifest growth (LSM-style): a bucket whose generation
-            # list exceeds ``max_generations`` is folded back to ONE entry in
-            # the SAME commit — its generations are read, LWW-collapsed
-            # (tombstones kept: they still fence replays), and rewritten to a
-            # fold dir referenced by the new manifest. Cost is O(overflowing
-            # buckets), amortized O(1/max_generations) of the table per
-            # commit stream; manifest size stays ≤ n_buckets·max_generations
-            # entries forever. A crash before the pointer swap leaves only an
-            # unreferenced fold dir — the usual replay story.
-            cap = int(m.get("max_generations", 8))
-            # only buckets this commit appended to can newly overflow, so the
-            # trigger scans the overlay (O(batch)), never the whole index
-            overflow = sorted(
-                int(b) for b, ents in overlay.items() if len(ents) > cap
-            )
-            folded = []
-            if overflow:
-                fold_rel = self._alloc_data_rel(new_version, "f")
-                fold_path = os.path.join(self.root, fold_rel)
-                by_schema: dict[int, list[str]] = {}
-                for b in overflow:
-                    for ent in overlay[str(b)]:
-                        by_schema.setdefault(ent["schema_id"], []).append(
-                            os.path.join(self.root, ent["data"], f"_bucket={b}")
-                        )
-                parts = []
-                for sid, paths in by_schema.items():
-                    stored = _with_hidden(
-                        T.StructType.fromJson(schemas[str(sid)])
-                    )
-                    gen = self.spark.read.schema(stored).parquet(*paths)
-                    gen = self._to_current_names(gen, sid, m)
-                    parts.append(conform(gen, full))
-                all_gens = parts[0]
-                for p in parts[1:]:
-                    all_gens = all_gens.unionByName(p)
-                collapsed = lww_latest(
-                    all_gens, [key], ["_version_ts", "_version_off"]
-                ).select(names)
-                collapsed = collapsed.withColumn("_bucket", self.bucket_expr())
-                self._writer(
-                    self._clustered(collapsed, m, n_parts=len(overflow)), m
-                ).partitionBy("_bucket").parquet(fold_path)
-                fold_counts = _bucket_file_counts(fold_path)
-                for b in overflow:
-                    if b in fold_counts:
-                        overlay[str(b)] = {
-                            "data": fold_rel,
-                            "schema_id": schema_id,
-                            "files": fold_counts[b],
-                        }
-                    else:  # bucket held only rows that no longer exist
-                        overlay.pop(str(b), None)
-                        removed.add(str(b))
-                folded = overflow
+            def append(head: dict) -> dict:
+                """This batch's files as a new generation of each written
+                bucket of ``head``. Generation appends are COMMUTATIVE under
+                LWW — read() collapses generations by (_version_ts,
+                _version_off), never by file order — so on a retry the same
+                files rebase onto the new head as pure metadata. Only the
+                head the files were written for (``m``) folds overflowing
+                buckets: a rebase defers the fold to the next commit."""
+                if int(head["n_buckets"]) != int(m["n_buckets"]):
+                    # a concurrent rebucket() changed the layout: this batch's
+                    # files are bucketed under the OLD count — appending them
+                    # by bucket number would place rows in the wrong buckets
+                    raise CommitConflictError(self.ref, None, head["version"])
+                if merge_schemas(self._era_schema(head), new_schema) != new_schema:
+                    # the head evolved past what this batch's files hold: the
+                    # files can't be tagged with the current schema id
+                    raise CommitConflictError(self.ref, None, head["version"])
+                new = self._successor(
+                    head, properties, **self._schema_change(head, new_schema)
+                )
+                sid = new["current_schema_id"]
+                info["schema_changed"] = sid != head["current_schema_id"]
+                info["rebased"] = head is not m
+                # O(batch) manifest view: only written buckets enter the
+                # overlay (their prior entry lists come from the lazy index,
+                # loading just the shards they live in); everything else is
+                # carried by the base index untouched
+                bmap = head["buckets"]
+                overlay: dict[str, list | dict] = {}
+                for b, n in sorted(file_counts.items()):
+                    prev = bmap.get(str(b))
+                    ents = list(self._bucket_entries(prev)) if prev is not None else []
+                    overlay[str(b)] = [*ents, {"data": data_rel, "schema_id": sid, "files": n}]
+                removed: set[str] = set()
+                info["folded"] = [] if info["rebased"] else self._fold(new, overlay, removed)
+                new["buckets"] = OverlaidIndex(bmap, overlay, removed)
+                return new
 
-            ov = OverlaidIndex(bmap, overlay, removed)
-            sharded = int(m.get("manifest_shards") or 0) > 0
-            rebased = False
-            try:
-                self._commit(
-                    {
-                        **m,
-                        "version": new_version,
-                        "parent": m["version"],
-                        "current_schema_id": schema_id,
-                        "schemas": schemas,
-                        # inline manifests JSON-serialize the index, so they
-                        # materialize; sharded mode keeps the O(batch) overlay
-                        "buckets": ov if sharded else dict(ov),
-                        "properties": {**m["properties"], **(properties or {})},
-                    }
-                )
-            except CommitConflictError:
-                new_version, schema_changed = self._rebase_delta(
-                    file_counts, data_rel, new_schema, properties, m["n_buckets"]
-                )
-                folded, rebased = [], True
+            new = self._commit_rebasable(append)
             return {
-                "version": new_version,
+                "version": new["version"],
                 "mode": "delta",
-                "affected_buckets": sorted(written),
-                "folded_buckets": folded,
-                "schema_changed": schema_changed,
-                "rebased": rebased,
+                "affected_buckets": sorted(file_counts),
+                "folded_buckets": info["folded"],
+                "schema_changed": info["schema_changed"],
+                "rebased": info["rebased"],
             }
 
         if affected is None:
@@ -1509,8 +1411,7 @@ class SnapshotTable:
             F.coalesce(F.col("t__bucket"), F.col("u__bucket")).alias("_bucket"), *out_cols
         )
 
-        new_version = self._next_version(m["version"] + 1)
-        data_rel = self._alloc_data_rel(new_version)
+        data_rel = self._alloc_data_rel(self._next_version(m["version"] + 1))
         out_path = os.path.join(self.root, data_rel)
         # sortWithinPartitions only — no repartition, the co-partitioned
         # join's single exchange per side stays the whole shuffle story
@@ -1531,40 +1432,74 @@ class SnapshotTable:
         # `affected` — would silently drop the target rows that were never
         # read, so it is a hard error, not a repair.
         file_counts = _bucket_file_counts(out_path)
-        written = set(file_counts)
-        stray = written - set(affected)
+        stray = set(file_counts) - set(affected)
         if stray:
             raise ValueError(
                 f"merge wrote buckets {sorted(stray)} outside the affected set "
                 f"{affected}; affected must cover every update bucket"
             )
+        evolved = self._schema_change(m, new_schema)
         overlay = {
-            str(b): {
-                "data": data_rel,
-                "schema_id": schema_id,
-                "files": file_counts[b],
-            }
-            for b in sorted(written)
+            str(b): {"data": data_rel, "schema_id": evolved["current_schema_id"], "files": n}
+            for b, n in sorted(file_counts.items())
         }
-        ov = OverlaidIndex(m["buckets"], overlay, set())
-        schemas = dict(m["schemas"])
-        if schema_changed:
-            schemas[str(schema_id)] = new_schema.jsonValue()
-        manifest = {
-            **m,
-            "version": new_version,
-            "parent": m["version"],
-            "current_schema_id": schema_id,
-            "schemas": schemas,
-            "buckets": ov if int(m.get("manifest_shards") or 0) > 0 else dict(ov),
-            "properties": {**m["properties"], **(properties or {})},
-        }
-        self._commit(manifest)
+        new = self._successor(
+            m, properties, buckets=OverlaidIndex(m["buckets"], overlay, set()), **evolved
+        )
+        self._commit(new)
         return {
-            "version": new_version,
+            "version": new["version"],
             "affected_buckets": affected,
-            "schema_changed": schema_changed,
+            "schema_changed": new["current_schema_id"] != m["current_schema_id"],
         }
+
+    def _fold(self, new: dict, overlay: dict, removed: set[str]) -> list[int]:
+        """Bounded manifest growth (LSM-style) for a delta commit building
+        ``new``: a bucket of ``overlay`` whose generation list exceeds
+        ``max_generations`` is folded back to ONE entry in the SAME commit —
+        its generations are read, LWW-collapsed (tombstones kept: they still
+        fence replays), and rewritten to a fold dir referenced by the new
+        manifest. Cost is O(overflowing buckets), amortized
+        O(1/max_generations) of the table per commit stream; manifest size
+        stays ≤ n_buckets·max_generations entries forever. A crash before the
+        pointer swap leaves only an unreferenced fold dir — the usual replay
+        story. Rewrites ``overlay``/``removed`` in place; returns the folded
+        buckets."""
+        cap = int(new.get("max_generations", 8))
+        # only buckets this commit appended to can newly overflow, so the
+        # trigger scans the overlay (O(batch)), never the whole index
+        overflow = sorted(int(b) for b, ents in overlay.items() if len(ents) > cap)
+        if not overflow:
+            return []
+        fold_rel = self._alloc_data_rel(new["version"], "f")
+        fold_path = os.path.join(self.root, fold_rel)
+        by_schema: dict[int, list[str]] = {}
+        for b in overflow:
+            for ent in overlay[str(b)]:
+                by_schema.setdefault(ent["schema_id"], []).append(
+                    os.path.join(self.root, ent["data"], f"_bucket={b}")
+                )
+        collapsed = lww_latest(
+            self._scan_eras(new, list(by_schema.items())),
+            [self.key],
+            ["_version_ts", "_version_off"],
+        ).select(_with_hidden(self._era_schema(new)).fieldNames())
+        collapsed = collapsed.withColumn("_bucket", self.bucket_expr())
+        self._writer(
+            self._clustered(collapsed, new, n_parts=len(overflow)), new
+        ).partitionBy("_bucket").parquet(fold_path)
+        fold_counts = _bucket_file_counts(fold_path)
+        for b in overflow:
+            if b in fold_counts:
+                overlay[str(b)] = {
+                    "data": fold_rel,
+                    "schema_id": new["current_schema_id"],
+                    "files": fold_counts[b],
+                }
+            else:  # bucket held only rows that no longer exist
+                overlay.pop(str(b), None)
+                removed.add(str(b))
+        return overflow
 
     # --------------------------------------------------------- maintenance
     def compact(
@@ -1578,27 +1513,38 @@ class SnapshotTable:
         tombstones (safe once all replayable ranges are fenced by watermarks).
         ``n_buckets`` relays out the table into a different bucket count in
         the same rewrite (see ``rebucket``)."""
+        keep = ~F.col("_deleted") if drop_tombstones else None
+        return self._rewrite(keep, properties, n_buckets)
+
+    def _rewrite(self, keep, properties: dict | None, n_buckets: int | None = None) -> dict:
+        """Whole-table rewrite behind ``compact``/``rebucket`` and
+        ``delete_where(mode="rewrite")``, which differ only in the row
+        filter ``keep`` (None keeps every row, tombstones included): the
+        rows of ``read(include_hidden=True)`` that pass ``keep`` are
+        re-bucketed into ``n_buckets`` (default: unchanged), clustered by the
+        sort order, written with the table's ``write.*`` options and
+        committed with per-file key ranges in one snapshot."""
         m = self.manifest()
         nb = int(n_buckets or m["n_buckets"])
         df = self.read(include_hidden=True).withColumn("_bucket", self.bucket_expr(n=nb))
-        if drop_tombstones:
-            df = df.filter(~F.col("_deleted"))
-        new_version = self._next_version(m["version"] + 1)
-        data_rel = self._alloc_data_rel(new_version)
-        df = self._clustered(df, m, n_parts=nb)
-        self._writer(df, m).partitionBy("_bucket").parquet(os.path.join(self.root, data_rel))
-        file_counts = _bucket_file_counts(os.path.join(self.root, data_rel))
+        if keep is not None:
+            df = df.filter(keep)
+        data_rel = self._alloc_data_rel(self._next_version(m["version"] + 1))
+        out_path = os.path.join(self.root, data_rel)
+        self._writer(self._clustered(df, m, n_parts=nb), m).partitionBy("_bucket").parquet(
+            out_path
+        )
+        file_counts = _bucket_file_counts(out_path)
         # Iceberg-style data-file column stats: per-file [min,max] of the
         # merge key, captured once at rewrite time from the parquet footers.
         # With a key-leading sort order the per-file ranges are disjoint, so
         # a point read opens exactly the files that can hold the key.
-        ranges = self._file_key_ranges(os.path.join(self.root, data_rel))
-        manifest = {
-            **m,
-            "version": new_version,
-            "parent": m["version"],
-            "n_buckets": nb,
-            "buckets": {
+        ranges = self._file_key_ranges(out_path)
+        new = self._successor(
+            m,
+            properties,
+            n_buckets=nb,
+            buckets={
                 str(b): {
                     "data": data_rel,
                     "schema_id": m["current_schema_id"],
@@ -1610,11 +1556,10 @@ class SnapshotTable:
             # pending merge-on-read predicate deletes were applied by the
             # read above (matched rows marked _deleted, then dropped or
             # materialized) — the purge is now physical, clear the preds
-            "delete_preds": [],
-            "properties": {**m["properties"], **(properties or {})},
-        }
-        self._commit(manifest)
-        return {"version": new_version, "buckets": len(file_counts)}
+            delete_preds=[],
+        )
+        self._commit(new)
+        return {"version": new["version"], "buckets": len(file_counts)}
 
     def rebucket(self, n_buckets: int, properties: dict | None = None) -> dict:
         """Change the table's hash-bucket count in one atomic rewrite
@@ -1649,8 +1594,9 @@ class SnapshotTable:
         gobblin-modules/gobblin-compliance).
 
         ``mode="rewrite"`` (default): rewrites live buckets without the
-        matching rows in one snapshot commit. Tombstones are preserved (their
-        versions still fence replays).
+        matching rows in one snapshot commit — the same rewrite as
+        ``compact()`` (sort order, ``write.*`` options, per-file key ranges).
+        Tombstones are preserved (their versions still fence replays).
 
         ``mode="delta"`` (merge-on-read, the Iceberg v2 equality-delete
         shape): a METADATA-ONLY commit — the predicate (an ANSI SQL string)
@@ -1707,56 +1653,22 @@ class SnapshotTable:
                 "fence_us": int(fence_ts_us),
                 "fence_off": int(fence_off if fence_off is not None else 2**62),
             }
-            last: CommitConflictError | None = None
-            for attempt in range(5):
-                if attempt:
-                    self._manifest = None
-                m = dict(self.manifest())
-                m["delete_preds"] = [*(m.get("delete_preds") or []), entry]
-                m["parent"] = m["version"]
-                m["version"] = self._next_version(m["version"] + 1)
-                if properties:
-                    m["properties"] = {**m["properties"], **properties}
-                try:
-                    self._commit(m)
-                    return {
-                        "version": m["version"],
-                        "mode": "delta",
-                        "pending_delete_preds": len(m["delete_preds"]),
-                    }
-                except CommitConflictError as e:
-                    last = e
-            raise last  # pragma: no cover - >5 conflicting writers
+            new = self._commit_rebasable(
+                lambda head: self._successor(
+                    head, properties, delete_preds=[*(head.get("delete_preds") or []), entry]
+                )
+            )
+            return {
+                "version": new["version"],
+                "mode": "delta",
+                "pending_delete_preds": len(new["delete_preds"]),
+            }
         if mode != "rewrite":
             raise ValueError(f"unknown delete_where mode: {mode}")
-        m = self.manifest()
-        df = self.read(include_hidden=True).withColumn("_bucket", self.bucket_expr())
         # NULL-safe: a condition that evaluates to NULL (e.g. predicate on a
         # column null-filled by schema evolution) must KEEP the row — only
-        # definitively-matching rows are purged.
-        kept = df.filter(F.col("_deleted") | ~F.coalesce(condition, F.lit(False)))
-        new_version = self._next_version(m["version"] + 1)
-        data_rel = self._alloc_data_rel(new_version)
-        kept = kept.repartition(self.n_buckets, F.col("_bucket"))
-        kept.write.mode("overwrite").partitionBy("_bucket").parquet(
-            os.path.join(self.root, data_rel)
-        )
-        file_counts = _bucket_file_counts(os.path.join(self.root, data_rel))
-        manifest = {
-            **m,
-            "version": new_version,
-            "parent": m["version"],
-            "buckets": {
-                str(b): {"data": data_rel, "schema_id": m["current_schema_id"], "files": n}
-                for b, n in sorted(file_counts.items())
-            },
-            # every bucket was rewritten through read(), which materialized
-            # any pending predicate-delete marks into the data — clear them
-            "delete_preds": [],
-            "properties": {**m["properties"], **(properties or {})},
-        }
-        self._commit(manifest)
-        return {"version": new_version, "buckets": len(file_counts)}
+        # definitively-matching rows are purged. Tombstones are kept.
+        return self._rewrite(F.col("_deleted") | ~F.coalesce(condition, F.lit(False)), properties)
 
     def expire_snapshots(self, keep_last: int = 2) -> list[int]:
         """Retention (≈ TimeBasedRetentionPolicy / Iceberg expire_snapshots):

@@ -10,6 +10,8 @@ in-task meters.
 
 from __future__ import annotations
 
+from collections import deque
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -57,6 +59,11 @@ def partition_lag(available: dict[int, int], committed: dict[int, int]) -> dict[
     }
 
 
+# Records ``StatsTracker.history`` keeps: a streaming tail commits forever,
+# so the in-memory history holds only the newest ones (reporters see all).
+HISTORY_LIMIT = 1000
+
+
 class StatsTracker:
     """Operational stats surface: per-batch rates + lag, with pluggable
     reporters called once per COMMIT (the reference's pluggable
@@ -64,10 +71,11 @@ class StatsTracker:
 
     A reporter is any callable taking the batch's stats record (a plain
     dict); exceptions in reporters are swallowed after being recorded —
-    an observability sink must never fail the data path."""
+    an observability sink must never fail the data path. ``history`` keeps
+    the newest ``HISTORY_LIMIT`` records."""
 
     def __init__(self):
-        self.history: list[dict] = []
+        self.history: deque[dict] = deque(maxlen=HISTORY_LIMIT)
         self.reporters: list = []
         self.reporter_errors: list[str] = []
 

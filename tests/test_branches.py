@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from gobblin_spark.lake import SnapshotTable
 from gobblin_spark.retention import (
@@ -78,6 +79,33 @@ def test_fast_forward_refuses_diverged(spark, tmp_path):
     t.merge(_updates(spark, [("c", "main-only", 1, 3)]))  # main advances too
     with pytest.raises(ValueError, match="diverged"):
         SnapshotTable(spark, t.root).fast_forward("side")
+
+
+def test_fast_forward_validates_against_disk_head(spark, tmp_path):
+    """fast_forward must see a commit that landed AFTER this handle cached
+    its manifest — the stale cached head would otherwise let the swap
+    silently discard the concurrent commit."""
+    t = _mk(spark, tmp_path)
+    t.merge(_updates(spark, [("u1", "a", 1, 1), ("u2", "b", 2, 2)]))
+    br = t.create_branch("audit")
+    br.merge(_updates(spark, [("u3", "c", 5, 5)]), mode="delta")
+    # a concurrent writer advances MAIN after `t` cached its manifest
+    other = SnapshotTable(spark, t.root)
+    other.merge(_updates(spark, [("u4", "d", 6, 6)]), mode="delta")
+    # main's new head is NOT an ancestor of the audit branch tip → the
+    # publish must refuse rather than discard u4's commit
+    with pytest.raises(ValueError, match="diverged"):
+        t.fast_forward("audit")
+    assert SnapshotTable(spark, t.root).read().filter(F.col("url") == "u4").count() == 1
+
+
+def test_fast_forward_happy_path_still_publishes(spark, tmp_path):
+    t = _mk(spark, tmp_path)
+    t.merge(_updates(spark, [("u1", "a", 1, 1), ("u2", "b", 2, 2)]))
+    br = t.create_branch("audit")
+    br.merge(_updates(spark, [("u3", "c", 5, 5)]), mode="delta")
+    t.fast_forward("audit")
+    assert SnapshotTable(spark, t.root).read().filter(F.col("url") == "u3").count() == 1
 
 
 def test_branch_versions_never_collide_with_main(spark, tmp_path):

@@ -146,6 +146,92 @@ def test_delta_rebase_on_sharded_manifest(spark, tmp_path):
     assert rows == {"a": 1, "b": 2}
 
 
+def test_delta_rebase_defers_fold(spark, tmp_path):
+    """A rebased delta merge appends its generation WITHOUT folding, even
+    past ``max_generations``; the next delta commit on the bucket folds it."""
+    a, b = _two_handles(spark, tmp_path, max_generations=1)
+    a.merge(_upd(spark, [("a", 1, 1, 10, False)]), mode="delta")
+    rb = b.merge(
+        _upd(spark, [("a", 5, 2, 20, False), ("z", 1, 3, 21, False)]), mode="delta"
+    )
+    assert rb["rebased"] is True
+    assert rb["folded_buckets"] == []
+    fresh = SnapshotTable(spark, a.root)
+    bucket = fresh.bucket_of("a")
+    gens = fresh._bucket_entries(fresh.manifest()["buckets"][str(bucket)])
+    assert len(gens) > 1  # over the cap of 1: the fold was deferred
+    # LWW of both batches
+    assert {r["url"]: r["n"] for r in fresh.read_visible().collect()} == {"a": 2, "z": 3}
+    rc = fresh.merge(_upd(spark, [("a", 9, 4, 30, False)]), mode="delta")
+    assert not rc["rebased"]
+    assert bucket in rc["folded_buckets"]
+    assert len(fresh._bucket_entries(fresh.manifest()["buckets"][str(bucket)])) == 1
+    rows = {r["url"]: r["n"] for r in SnapshotTable(spark, a.root).read_visible().collect()}
+    assert rows == {"a": 4, "z": 3}
+
+
+def _seeded(spark, tmp_path):
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), SCHEMA, key="url", n_buckets=4)
+    t.merge(_upd(spark, [("u1", 1, 10, 1, False), ("u2", 2, 30, 2, False)]))
+    return t
+
+
+def test_alloc_data_rel_claims_atomically(spark, tmp_path):
+    t = _seeded(spark, tmp_path)
+    r1 = t._alloc_data_rel(99)
+    r2 = t._alloc_data_rel(99)  # second claimant must get a DISTINCT dir
+    assert r1 != r2
+    assert os.path.isdir(os.path.join(t.root, r1))
+    assert os.path.isdir(os.path.join(t.root, r2))
+
+
+def test_concurrent_delta_writers_do_not_clobber_data(spark, tmp_path):
+    """Both writers base on the same head and race delta commits: writer B
+    rebases, and — critically — A's data files survive B's overwrite-mode
+    write (the pre-fix bug: both picked data/v2, B's write deleted A's
+    files, A's committed manifest referenced clobbered data)."""
+    t = _seeded(spark, tmp_path)
+    a = SnapshotTable(spark, t.root)
+    b = SnapshotTable(spark, t.root)
+    a.manifest(), b.manifest()
+    ra = a.merge(_upd(spark, [("u1", 10, 11, 10, False)]), mode="delta")
+    rb = b.merge(_upd(spark, [("u2", 11, 31, 11, False)]), mode="delta")
+    assert rb.get("rebased")
+    rows = {r["url"]: r["n"] for r in SnapshotTable(spark, t.root).read().collect()}
+    assert rows == {"u1": 11, "u2": 31}, (ra, rb)
+
+
+def test_stale_lock_reclaim_leaves_fresh_lock_alone(spark, tmp_path, monkeypatch):
+    """A lock that is refreshed between the waiter's stat and its reclaim
+    attempt must NOT be stolen: the content re-verification restores it."""
+    t = _seeded(spark, tmp_path)
+    lock = os.path.join(t.root, "meta", "_lock.main")
+    with open(lock, "w") as f:
+        f.write("dead-writer\n")
+    old = time.time() - 3600
+    os.utime(lock, (old, old))
+    monkeypatch.setattr(SnapshotTable, "LOCK_TIMEOUT_S", 5.0)
+    # normal reclaim still works end-to-end
+    t.update_properties({"k": "v"})
+    assert SnapshotTable(spark, t.root).properties["k"] == "v"
+    assert not os.path.exists(lock)
+
+
+def test_stale_lock_reclaim_no_leftover_claim_files(spark, tmp_path, monkeypatch):
+    t = _seeded(spark, tmp_path)
+    lock = os.path.join(t.root, "meta", "_lock.main")
+    with open(lock, "w") as f:
+        f.write("dead\n")
+    old = time.time() - 3600
+    os.utime(lock, (old, old))
+    monkeypatch.setattr(SnapshotTable, "LOCK_TIMEOUT_S", 5.0)
+    t.update_properties({"k": "v"})
+    leftovers = [
+        f for f in os.listdir(os.path.join(t.root, "meta")) if ".reclaim-" in f
+    ]
+    assert leftovers == []
+
+
 def test_stale_lock_is_reclaimed(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "t")
     t = SnapshotTable.create(spark, root, SCHEMA, key="url", n_buckets=4)

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import time
 
 import pyarrow.parquet as pq
 import pytest
@@ -187,6 +188,38 @@ def test_null_predicate_keeps_row(spark, tmp_path):
     t.delete_where("x >= 10", mode="delta")
     # NULL x on a/b/c/d evaluates NULL → rows kept; only e (x=42) purged
     assert _vis(SnapshotTable(spark, t.root)) == {"a": 5, "b": 50, "c": 99, "d": 7}
+
+
+def test_delete_where_null_condition_keeps_rows(spark, tmp_path):
+    """Purge condition evaluating to NULL must KEEP the row (rewrite mode)."""
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), SCHEMA, key="url", n_buckets=4)
+    t.merge(
+        _upd(spark, [("a", 1, 5, 10, False), ("b", 2, None, 11, False), ("c", 3, 50, 12, False)])
+    )
+    t.delete_where(F.col("n") > 10)  # NULL for b — must not purge b
+    assert {r["url"] for r in t.read_visible().collect()} == {"a", "b"}
+
+
+def test_delta_purge_default_fence_covers_future_dated_events(spark, tmp_path):
+    """Rows with event timestamps AHEAD of the driver wall clock must not
+    escape a default-fenced compliance purge (pre-fix: fence defaulted to
+    time.time(), compared against event-time versions)."""
+    t = _table(spark, tmp_path)
+    # 30 days ahead of wall clock, as seconds past EPOCH for _upd
+    future = dt.datetime.fromtimestamp(int(time.time() + 86400 * 30))
+    sec = int((future - EPOCH).total_seconds())
+    t.merge(_upd(spark, [("u9", sec, 999, 9, False)]), mode="delta")
+    res = t.delete_where("n >= 999", mode="delta")  # default fence
+    assert res["mode"] == "delta"
+    assert SnapshotTable(spark, t.root).read().filter(F.col("url") == "u9").count() == 0
+    # and the fence is still a point-in-time statement: a LATER re-upsert
+    # matching the predicate resurrects
+    SnapshotTable(spark, t.root).merge(
+        _upd(spark, [("u9", sec + 10, 999, 10, False)]), mode="delta"
+    )
+    assert (
+        SnapshotTable(spark, t.root).read().filter(F.col("url") == "u9").count() == 1
+    )
 
 
 def test_delta_delete_requires_sql_string(spark, tmp_path):

@@ -8,6 +8,7 @@ import datetime as dt
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -67,6 +68,33 @@ def test_merge_upsert_delete_lww(spark, tmp_path):
     # but a genuinely newer insert wins over the tombstone
     t.merge(_upd(spark, [("a", 11, 42, 32, False)]))
     assert {r["url"]: r["n"] for r in t.read_visible().collect()}["a"] == 42
+
+
+def test_merge_affected_superset_keeps_table_readable(spark, tmp_path):
+    """An affected bucket with no target rows and no update rows must not get
+    a manifest entry pointing at a nonexistent path."""
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), SCHEMA, key="url", n_buckets=8)
+    # affected = ALL buckets (the engine's coupon-collector shortcut) while
+    # the single update row lands in exactly one bucket
+    t.merge(_upd(spark, [("a", 1, 1, 10, False)]), affected=list(range(8)))
+    assert t.read_visible().count() == 1  # must not raise PATH_NOT_FOUND
+    # a second merge (reads affected buckets) must also survive
+    t.merge(_upd(spark, [("b", 2, 2, 11, False)]), affected=list(range(8)))
+    assert {r["url"] for r in t.read_visible().collect()} == {"a", "b"}
+    # no bucket entry points at a missing _bucket dir
+    for b, e in t.manifest()["buckets"].items():
+        assert os.path.isdir(str(tmp_path / "t" / e["data"] / f"_bucket={b}"))
+
+
+def test_merge_update_bucket_outside_affected_raises(spark, tmp_path):
+    """A written bucket outside `affected` would silently drop unread target
+    rows — hard error."""
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), SCHEMA, key="url", n_buckets=8)
+    upd = _upd(spark, [("a", 1, 1, 10, False)])
+    bucket = upd.select(F.pmod(F.xxhash64("url"), F.lit(8)).cast("int").alias("b")).first()["b"]
+    wrong = [(bucket + 1) % 8]
+    with pytest.raises(ValueError, match="outside the affected set"):
+        t.merge(upd, affected=wrong)
 
 
 def test_merge_prunes_unaffected_buckets(spark, tmp_path):

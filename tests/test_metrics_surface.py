@@ -9,7 +9,12 @@ from pyspark.sql import types as T
 from gobblin_spark.datagen import synth_changelog, write_changelog
 from gobblin_spark.engine import CdcEngine
 from gobblin_spark.lake import SnapshotTable
-from gobblin_spark.metrics import StatsTracker, batch_rates, partition_lag
+from gobblin_spark.metrics import (
+    HISTORY_LIMIT,
+    StatsTracker,
+    batch_rates,
+    partition_lag,
+)
 
 
 def _table(spark, tmp_path, name="t"):
@@ -44,6 +49,19 @@ def test_batch_rates_math():
     r = batch_rates({"offsets_applied": 1000, "bytes_read": 2000}, 2.0)
     assert r == {"events_per_sec": 500.0, "bytes_per_sec": 1000.0}
     assert batch_rates({}, 1.0) == {}
+
+
+def test_history_keeps_newest_records():
+    stats = StatsTracker()
+    seen = []
+    stats.add_reporter(seen.append)
+    n = HISTORY_LIMIT + 7
+    for i in range(n):
+        stats.record({"i": i})
+    assert len(stats.history) == HISTORY_LIMIT
+    assert stats.history[0] == {"i": 7}
+    assert stats.last == {"i": n - 1}
+    assert len(seen) == n  # reporters still see every record
 
 
 def test_engine_records_rates_and_lag(spark, tmp_path, changelog_path):

@@ -187,6 +187,27 @@ def test_guards(spark, tmp_path):
         SnapshotTable(spark, t.root).alter_schema(renames={"n": "score"})
 
 
+def test_alter_schema_rejects_rename_swap(spark, tmp_path):
+    t = _table(spark, tmp_path)
+    with pytest.raises(ValueError, match="overlap"):
+        t.alter_schema(renames={"n": "tag", "tag": "n"})
+    with pytest.raises(ValueError, match="overlap"):
+        t.alter_schema(renames={"n": "tag", "tag": "c"})
+    # table still fully readable (no durable transition was committed)
+    assert t.read().count() == 2
+    # the safe sequential path still achieves a swap
+    t.alter_schema(renames={"n": "tmp_x"})
+    t2 = SnapshotTable(spark, t.root)
+    t2.alter_schema(renames={"tag": "n"})
+    t3 = SnapshotTable(spark, t.root)
+    t3.alter_schema(renames={"tmp_x": "tag"})
+    rows = {
+        r["url"]: (r["n"], r["tag"])
+        for r in SnapshotTable(spark, t.root).read().collect()
+    }
+    assert rows == {"a": ("x", 1), "b": ("y", 2)}
+
+
 def test_rename_rebases_on_concurrent_commit(spark, tmp_path):
     t = _table(spark, tmp_path)
     stale = SnapshotTable(spark, t.root)

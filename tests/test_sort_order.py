@@ -64,7 +64,10 @@ def test_bucket_of_matches_bucket_expr(spark, tmp_path):
         assert t.bucket_of(u) == got[u]
 
 
-def test_sorted_compaction_disjoint_file_ranges(spark, tmp_path):
+@pytest.mark.parametrize("rewrite", ["compact", "delete_where"])
+def test_sorted_compaction_disjoint_file_ranges(spark, tmp_path, rewrite):
+    """Both whole-table rewrites honour the sort order and the write options
+    and record per-file key ranges."""
     t = _mk(
         spark,
         tmp_path,
@@ -73,7 +76,10 @@ def test_sorted_compaction_disjoint_file_ranges(spark, tmp_path):
         properties={"write.max-records-per-file": "40"},
     )
     t.merge(_rows(spark), mode="rewrite")
-    t.compact()
+    if rewrite == "compact":
+        t.compact()
+    else:
+        t.delete_where(F.col("url") == "http://site-0000/page", mode="rewrite")
     m = t.manifest()
     for b, e in dict(m["buckets"]).items():
         assert "ranges" in e, f"bucket {b} missing file stats"
