@@ -123,9 +123,9 @@ class CdcEngine:
         # merge-on-read generation appends — O(batch) commits for sustained
         # high-frequency ingest, folded back by compaction (see lake.merge)
         self.merge_mode = merge_mode
-        # "repartition" (default): ONE exchange of the raw rows; the LWW
-        # groupBy, the MERGE join and the bucketed write all ride that single
-        # bucket partitioning. "combine": map-side partial LWW before the
+        # "repartition" (default): ONE exchange of the raw rows, on _bucket
+        # (table.exchange_width() wide); the LWW groupBy and the bucketed
+        # write ride it. "combine": map-side partial LWW before the
         # exchange (classic combiner) — sheds the duplicate factor from the
         # shuffle at the cost of copying payloads through the partial-agg
         # hash map and a second (deduped) exchange. MEASURED on the 10M-event
@@ -276,9 +276,10 @@ class CdcEngine:
         )
 
     def _touched_buckets(self, batch: DataFrame, ranges: list[OffsetRange]) -> list[int]:
-        """Buckets this batch touches, from the raw scan (column-pruned, url
-        only). Large batches touch every bucket with near-certainty (coupon
-        collector) — skip the discovery job."""
+        """Buckets this batch's valid rows touch, from the scan (column-pruned
+        to the url and the quality-policy columns). Large batches touch every
+        bucket with near-certainty (coupon collector) — skip the discovery
+        job."""
         n_buckets = self.table.n_buckets
         if sum(r.count for r in ranges) >= 64 * n_buckets:
             return list(range(n_buckets))
@@ -318,7 +319,7 @@ class CdcEngine:
 
         tbl = self.table
         bucketed = valid.withColumn("_bucket", tbl.bucket_expr("url")).repartition(
-            tbl.n_buckets, F.col("_bucket")
+            tbl.exchange_width(), F.col("_bucket")
         )
         folded = patch_fold_state(
             bucketed,
@@ -333,7 +334,7 @@ class CdcEngine:
         cur = (
             cur.select("url", *old_cols)
             .withColumn("_bucket", tbl.bucket_expr("url"))
-            .repartition(tbl.n_buckets, F.col("_bucket"))
+            .repartition(tbl.exchange_width(), F.col("_bucket"))
             .select("_bucket", "url", *[F.col(c).alias(f"_old_{c}") for c in old_cols])
         )
         j = folded.join(cur, ["_bucket", "url"], "left")
@@ -413,30 +414,32 @@ class CdcEngine:
         # Two physical LWW shapes, same semantics (winner per url) — see the
         # constructor docs for the measured tradeoff:
         #
-        # "repartition" (default): one explicit exchange of all raw rows;
-        # the groupBy, downstream MERGE join and bucketed write all ride
-        # that single bucket partitioning (no further shuffle anywhere).
+        # "repartition" (default): one explicit exchange of all raw rows,
+        # hashed on _bucket into table.exchange_width() partitions; the
+        # groupBy and the bucketed write ride it. A rewrite-mode MERGE join
+        # shuffles the updates once more: the extraction UDF above this
+        # exchange hides its partitioning (see SnapshotTable.merge).
         #
         # "combine": let the groupBy drive the exchange so Spark plans
         # partial aggregation BEFORE the shuffle — the map-side combiner. A
         # keyed changelog keeps all of a url's events in ONE log partition,
         # so the combiner sheds the whole duplicate factor locally: at dup
         # factor d the shuffle carries n/d deduped rows twice (agg exchange
-        # + bucket repartition) instead of n raw rows once. Extraction stays
-        # AFTER the final exchange either way — text never rides a shuffle.
+        # + the _bucket exchange) instead of n raw rows once. Extraction stays
+        # AFTER the LWW exchanges either way — only survivors reach Python.
         if self.fold == "patch":
-            touched = self._touched_buckets(batch, ranges)
+            touched = self._touched_buckets(valid, ranges)
             updates = self._patch_updates(valid, touched)
             affected = None if self.merge_mode == "delta" else touched
         else:
             if self.lww_strategy == "combine":
                 with_bucket = valid.withColumn("_bucket", self.table.bucket_expr("url"))
                 latest = lww_latest(with_bucket, ["_bucket", "url"], ["warc_ts", "log_offset"])
-                latest = latest.repartition(self.table.n_buckets, F.col("_bucket"))
+                latest = latest.repartition(self.table.exchange_width(), F.col("_bucket"))
             else:
                 bucketed = valid.withColumn(
                     "_bucket", self.table.bucket_expr("url")
-                ).repartition(self.table.n_buckets, F.col("_bucket"))
+                ).repartition(self.table.exchange_width(), F.col("_bucket"))
                 latest = lww_latest(bucketed, ["_bucket", "url"], ["warc_ts", "log_offset"])
 
             # converter slot: vectorized text extraction — AFTER dedup, so the
@@ -456,8 +459,8 @@ class CdcEngine:
                 F.col("_bucket"),
             )
 
-            # affected-bucket discovery from the raw batch scan: column-pruned
-            # (url only) and shuffle-free, vs deriving it from `updates` which
+            # affected-bucket discovery from the filtered batch scan: column-
+            # pruned and shuffle-free, vs deriving it from `updates` which
             # would re-run the LWW shuffle a second time per batch. When the
             # batch is far larger than the bucket count, every bucket is
             # touched with near-certainty (coupon collector) — skip the
@@ -466,7 +469,7 @@ class CdcEngine:
             if self.merge_mode == "delta":
                 affected = None
             else:
-                affected = self._touched_buckets(batch, ranges)
+                affected = self._touched_buckets(valid, ranges)
         if use_observe:
             updates, upd_obs = observe_updates(updates, f"upd-{batch_id}")
 

@@ -305,6 +305,17 @@ class SnapshotTable:
             "schemas": {**head["schemas"], str(sid + 1): schema.jsonValue()},
         }
 
+    def exchange_width(self) -> int:
+        """Partitions of the ``_bucket`` exchange that feeds a bucketed write:
+        ``min(n_buckets, defaultParallelism)``. Hash partitioning on
+        ``_bucket`` keeps every bucket whole inside one task at any width, so
+        the files a commit writes do not depend on it. The width follows the
+        cores, not the bucket count, because each task that runs a Python UDF
+        pays a fixed cost (a reused worker re-scans pyspark's import caches
+        per task): one task per bucket multiplies that cost by the bucket
+        count, one task per core pays it once per core."""
+        return min(self.n_buckets, self.spark.sparkContext.defaultParallelism)
+
     def bucket_expr(self, col: str | None = None, n: int | None = None):
         """Deterministic layout bucket of the merge key (xxhash64, the same
         function Spark uses executor-side — no driver involvement)."""
@@ -1277,15 +1288,20 @@ class SnapshotTable:
         columns. Deletes arrive as rows with ``_deleted=true``.
 
         Scale shape (single-shuffle-per-side merge): each side is hash
-        repartitioned ONCE on ``_bucket``; the full-outer join keys on
-        (_bucket, key), and because HashPartitioning(_bucket) clusters every
-        join key pair, Spark's EnsureRequirements recognizes both sides as
+        repartitioned ONCE on ``_bucket`` into ``exchange_width()``
+        partitions; the full-outer join keys on (_bucket, key), and because
+        HashPartitioning(_bucket) with the same width on both sides clusters
+        every join key pair, Spark's EnsureRequirements recognizes them as
         co-partitioned — no further exchange for the join, and none for the
         bucketed write either (FileFormatWriter imposes no distribution; each
         task holds whole buckets, so the commit produces one file per bucket,
         not #tasks × #buckets slivers). Callers that pre-partition ``updates``
-        on a ``_bucket`` column (the engine does: repartition → LWW groupBy
-        (_bucket, key) rides the same exchange) pay ZERO extra shuffle here.
+        on a ``_bucket`` column into ``exchange_width()`` partitions pay ZERO
+        extra shuffle here, unless a Python UDF runs above that exchange:
+        Spark's Python eval nodes report unknown output partitioning, so the
+        join shuffles that side again. The engine's text extraction is such
+        a UDF, so its rewrite-mode commits shuffle the deduped updates twice
+        (delta mode has no join).
         Only affected buckets are read and rewritten; the rest of the table is
         carried forward by manifest reference, zero data movement.
 
@@ -1317,7 +1333,7 @@ class SnapshotTable:
             u = conform(updates, full, keep=["_bucket"])
         else:
             u = conform(updates, full).withColumn("_bucket", self.bucket_expr())
-            u = u.repartition(self.n_buckets, F.col("_bucket"))
+            u = u.repartition(self.exchange_width(), F.col("_bucket"))
 
         if mode == "delta":
             data_rel = self._alloc_data_rel(self._next_version(m["version"] + 1))
@@ -1388,7 +1404,7 @@ class SnapshotTable:
         u = u.select([F.col(c).alias(f"u_{c}") for c in [*names, "_bucket"]])
         tgt = conform(self.read(buckets=affected, include_hidden=True), full)
         tgt = tgt.withColumn("_bucket", self.bucket_expr()).repartition(
-            self.n_buckets, F.col("_bucket")
+            self.exchange_width(), F.col("_bucket")
         )
         tgt = tgt.select([F.col(c).alias(f"t_{c}") for c in [*names, "_bucket"]])
 
@@ -1422,10 +1438,9 @@ class SnapshotTable:
 
         # Manifest entries advance only for buckets the write actually
         # produced. `affected` may be a superset of the buckets present in
-        # this batch (the engine derives it from the raw pre-quality-filter
-        # scan, and the coupon-collector shortcut returns ALL buckets for
-        # large batches); an affected bucket with no target rows and no
-        # surviving update rows yields no `_bucket=` dir, and pointing its
+        # this batch (the engine's coupon-collector shortcut returns ALL
+        # buckets for large batches); an affected bucket with no target rows
+        # and no surviving update rows yields no `_bucket=` dir, and pointing its
         # manifest entry at the empty path would make the table unreadable
         # (PATH_NOT_FOUND on the next scan). Such buckets keep their old
         # entry (or stay absent). The converse — a written bucket outside

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from gobblin_spark.engine import CdcEngine
@@ -162,6 +164,57 @@ def test_quality_errors_diverted(spark, tmp_path):
     assert table_fingerprint(visible_with_offset(table)) == table_fingerprint(
         oracle_final(valid, None)
     )
+
+
+def test_rejected_row_bucket_is_not_affected(spark, tmp_path):
+    """Affected-bucket discovery reads the quality-filtered batch: in a
+    rewrite-mode batch too small for the all-buckets shortcut, a bucket that
+    holds only a rejected row (op I, NULL html) is neither read nor reported
+    as affected."""
+    tmp = str(tmp_path)
+    pages, clog, table, eng = setup_pipeline(
+        spark, tmp, n_events=20, n_urls=2, bootstrap=False
+    )
+    hit = {table.bucket_of(u) for u in clog["url"]}
+    url = next(
+        u
+        for u in (f"https://rejected.example/{i}" for i in range(100))
+        if table.bucket_of(u) not in hit
+    )
+    bad = clog.tail(1).copy()
+    part = bad["log_partition"].iloc[0]
+    bad["url"], bad["op"], bad["html"] = url, "I", None
+    bad["log_offset"] = clog[clog.log_partition == part]["log_offset"].max() + 1
+    full = pd.concat([clog, bad], ignore_index=True)
+    assert len(full) < 64 * table.n_buckets
+    write_changelog(full, os.path.join(tmp, "clog_bad"))
+    [res] = eng.run(os.path.join(tmp, "clog_bad"))
+    assert res["quality_errors"] == 1
+    assert res["affected_buckets"] == sorted(hit)
+
+
+@pytest.mark.parametrize("mode", ["delta", "rewrite"])
+@pytest.mark.parametrize("n_buckets", [2, 8])
+def test_replay_invariant_to_exchange_width(spark, tmp_path, n_buckets, mode):
+    """At local[4] the engine's exchange is min(n_buckets, 4) wide: narrower
+    than the bucket count at 8 buckets, equal to it at 2. Either way the
+    replay lands the oracle state, and every bucket a commit writes is ONE
+    file: a bucket never spans two tasks."""
+    tmp = str(tmp_path)
+    pages, clog, table, eng = setup_pipeline(spark, tmp, n_buckets=n_buckets)
+    assert table.exchange_width() == min(n_buckets, 4)
+    eng.merge_mode = mode
+    eng.run(os.path.join(tmp, "changelog"), max_events_per_batch=150)
+    assert table_fingerprint(visible_with_offset(table)) == table_fingerprint(
+        oracle_final(clog, pages)
+    )
+    entries = [
+        e
+        for v in range(table.version + 1)
+        for b in table.manifest_at(v)["buckets"].values()
+        for e in SnapshotTable._bucket_entries(b)
+    ]
+    assert entries and all(e["files"] == 1 for e in entries), entries
 
 
 def test_c3_crash_at_every_batch_boundary(spark, tmp_path):

@@ -13,7 +13,9 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from gobblin_spark.dedup import lww_latest
@@ -65,6 +67,60 @@ def test_apply_chain_single_exchange_per_side(spark, tmp_path):
 
     lww_only = _explain(latest, "simple")
     assert lww_only.count("Exchange") == 1, lww_only
+
+
+class _Captured(Exception):
+    pass
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        {"lww_strategy": "repartition"},
+        {"lww_strategy": "combine"},
+        {"fold": "patch", "patch_cols": ["html", "lang"]},
+    ],
+    ids=["repartition", "combine", "patch"],
+)
+def test_engine_exchange_is_core_wide(spark, tmp_path, monkeypatch, kw):
+    """The frame CdcEngine hands to SnapshotTable.merge, at n_buckets=8 on
+    local[4]: every _bucket exchange is 4 wide (the cores, not the bucket
+    count), there is one per input side, and the extraction UDF runs above
+    all of them."""
+    from helpers import setup_pipeline
+
+    from gobblin_spark.engine import CdcEngine
+    from gobblin_spark.lake import SnapshotTable
+
+    _, _, table, _ = setup_pipeline(spark, str(tmp_path), n_buckets=8)
+    eng = CdcEngine(spark, table, **kw)
+    captured = []
+
+    def merge(self, updates, **_):
+        captured.append(updates)
+        raise _Captured
+
+    monkeypatch.setattr(SnapshotTable, "merge", merge)
+    with pytest.raises(_Captured):
+        eng.run(os.path.join(str(tmp_path), "changelog"))
+    plan = _explain(captured[0], "simple")
+
+    widths = re.findall(r"Exchange hashpartitioning\(_bucket#\d+, (\d+)\)", plan)
+    assert widths == ["4"] * (2 if "fold" in kw else 1), plan
+    if kw.get("lww_strategy") == "repartition":
+        assert plan.count("Exchange") == 1, plan
+
+    # the UDF node's subtree (the lines below it that are nested deeper)
+    # holds every exchange: extraction runs after the last shuffle
+    lines = plan.splitlines()
+    depth = lambda ln: len(ln) - len(ln.lstrip(" :+-"))  # noqa: E731
+    i = next(k for k, ln in enumerate(lines) if "ArrowEvalPython" in ln)
+    end = next(
+        (k for k in range(i + 1, len(lines)) if depth(lines[k]) <= depth(lines[i])),
+        len(lines),
+    )
+    exchanges = [k for k, ln in enumerate(lines) if "Exchange" in ln]
+    assert exchanges and all(i < k < end for k in exchanges), plan
 
 
 def test_range_scan_pushes_filters_to_parquet(spark, tmp_path):
