@@ -306,15 +306,23 @@ class SnapshotTable:
         }
 
     def exchange_width(self) -> int:
-        """Partitions of the ``_bucket`` exchange that feeds a bucketed write:
-        ``min(n_buckets, defaultParallelism)``. Hash partitioning on
+        """Partitions of the engine's ``_bucket`` exchange, the one its
+        extraction UDF runs above: ``min(n_buckets, defaultParallelism)`` on
+        a local master, ``n_buckets`` elsewhere. Hash partitioning on
         ``_bucket`` keeps every bucket whole inside one task at any width, so
         the files a commit writes do not depend on it. The width follows the
         cores, not the bucket count, because each task that runs a Python UDF
         pays a fixed cost (a reused worker re-scans pyspark's import caches
         per task): one task per bucket multiplies that cost by the bucket
-        count, one task per core pays it once per core."""
-        return min(self.n_buckets, self.spark.sparkContext.defaultParallelism)
+        count, one task per core pays it once per core. Only a local master
+        has a fixed core count; on a cluster master ``defaultParallelism`` is
+        max(executor cores registered so far, 2), which is 2 before executors
+        register and moves under dynamic allocation, so there the width stays
+        ``n_buckets``."""
+        sc = self.spark.sparkContext
+        if sc.master == "local" or sc.master.startswith("local["):
+            return min(self.n_buckets, sc.defaultParallelism)
+        return self.n_buckets
 
     def bucket_expr(self, col: str | None = None, n: int | None = None):
         """Deterministic layout bucket of the merge key (xxhash64, the same
@@ -1288,20 +1296,21 @@ class SnapshotTable:
         columns. Deletes arrive as rows with ``_deleted=true``.
 
         Scale shape (single-shuffle-per-side merge): each side is hash
-        repartitioned ONCE on ``_bucket`` into ``exchange_width()``
-        partitions; the full-outer join keys on (_bucket, key), and because
-        HashPartitioning(_bucket) with the same width on both sides clusters
-        every join key pair, Spark's EnsureRequirements recognizes them as
-        co-partitioned — no further exchange for the join, and none for the
-        bucketed write either (FileFormatWriter imposes no distribution; each
-        task holds whole buckets, so the commit produces one file per bucket,
-        not #tasks × #buckets slivers). Callers that pre-partition ``updates``
-        on a ``_bucket`` column into ``exchange_width()`` partitions pay ZERO
-        extra shuffle here, unless a Python UDF runs above that exchange:
-        Spark's Python eval nodes report unknown output partitioning, so the
-        join shuffles that side again. The engine's text extraction is such
-        a UDF, so its rewrite-mode commits shuffle the deduped updates twice
-        (delta mode has no join).
+        repartitioned ONCE on ``_bucket`` into ``n_buckets`` partitions; the
+        full-outer join keys on (_bucket, key), and because
+        HashPartitioning(_bucket) clusters every join key pair, Spark's
+        EnsureRequirements recognizes both sides as co-partitioned — no
+        further exchange for the join, and none for the bucketed write either
+        (FileFormatWriter imposes no distribution; each task holds whole
+        buckets, so the commit produces one file per bucket, not #tasks ×
+        #buckets slivers). Callers that pre-partition ``updates`` on a
+        ``_bucket`` column pay ZERO extra shuffle here, unless a Python UDF
+        runs above that exchange: Spark's Python eval nodes report unknown
+        output partitioning, so the join shuffles that side again, into the
+        target's ``n_buckets`` partitions. The engine's text extraction is
+        such a UDF (above its ``exchange_width()`` exchange), so its
+        rewrite-mode commits shuffle the deduped updates twice (delta mode
+        has no join).
         Only affected buckets are read and rewritten; the rest of the table is
         carried forward by manifest reference, zero data movement.
 
@@ -1333,7 +1342,7 @@ class SnapshotTable:
             u = conform(updates, full, keep=["_bucket"])
         else:
             u = conform(updates, full).withColumn("_bucket", self.bucket_expr())
-            u = u.repartition(self.exchange_width(), F.col("_bucket"))
+            u = u.repartition(self.n_buckets, F.col("_bucket"))
 
         if mode == "delta":
             data_rel = self._alloc_data_rel(self._next_version(m["version"] + 1))
@@ -1404,7 +1413,7 @@ class SnapshotTable:
         u = u.select([F.col(c).alias(f"u_{c}") for c in [*names, "_bucket"]])
         tgt = conform(self.read(buckets=affected, include_hidden=True), full)
         tgt = tgt.withColumn("_bucket", self.bucket_expr()).repartition(
-            self.exchange_width(), F.col("_bucket")
+            self.n_buckets, F.col("_bucket")
         )
         tgt = tgt.select([F.col(c).alias(f"t_{c}") for c in [*names, "_bucket"]])
 

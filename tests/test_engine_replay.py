@@ -8,7 +8,6 @@ from __future__ import annotations
 import os
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from gobblin_spark.engine import CdcEngine
@@ -193,42 +192,24 @@ def test_rejected_row_bucket_is_not_affected(spark, tmp_path):
     assert res["affected_buckets"] == sorted(hit)
 
 
-@pytest.mark.parametrize("mode", ["delta", "rewrite"])
-@pytest.mark.parametrize("n_buckets", [2, 8])
-def test_replay_invariant_to_exchange_width(spark, tmp_path, n_buckets, mode):
-    """At local[4] the engine's exchange is min(n_buckets, 4) wide: narrower
-    than the bucket count at 8 buckets, equal to it at 2. Either way the
-    replay lands the oracle state, and every bucket a commit writes is ONE
-    file: a bucket never spans two tasks."""
-    tmp = str(tmp_path)
-    pages, clog, table, eng = setup_pipeline(spark, tmp, n_buckets=n_buckets)
-    assert table.exchange_width() == min(n_buckets, 4)
-    eng.merge_mode = mode
-    eng.run(os.path.join(tmp, "changelog"), max_events_per_batch=150)
-    assert table_fingerprint(visible_with_offset(table)) == table_fingerprint(
-        oracle_final(clog, pages)
-    )
-    entries = [
-        e
-        for v in range(table.version + 1)
-        for b in table.manifest_at(v)["buckets"].values()
-        for e in SnapshotTable._bucket_entries(b)
-    ]
-    assert entries and all(e["files"] == 1 for e in entries), entries
-
-
 def test_c3_crash_at_every_batch_boundary(spark, tmp_path):
     """Systematic crash sweep: for several crash points k (batches applied
     before the 'crash') and BOTH commit modes, rebuilding from disk and
     resuming always converges to the oracle final state — the exactly-once
-    claim holds at every boundary, not just the one test_c picked."""
+    claim holds at every boundary, not just the one test_c picked.
+
+    Each mode runs at two bucket counts; at local[4] the engine's exchange
+    is min(n_buckets, 4) wide, equal to the bucket count at 2 and narrower
+    than it at 8. Every bucket any commit wrote is ONE file: a bucket never
+    spans two tasks, whatever the width."""
     import shutil
 
     for mode in ("rewrite", "delta"):
-        for k in (1, 3):
+        for k, n_buckets in ((1, 2), (3, 8)):
             tmp = os.path.join(str(tmp_path), f"{mode}_{k}")
             os.makedirs(tmp)
-            pages, clog, table, eng = setup_pipeline(spark, tmp)
+            pages, clog, table, eng = setup_pipeline(spark, tmp, n_buckets=n_buckets)
+            assert table.exchange_width() == min(n_buckets, 4)
             eng.merge_mode = mode
             done = eng.run(
                 os.path.join(tmp, "changelog"), max_events_per_batch=60, max_batches=k
@@ -246,6 +227,13 @@ def test_c3_crash_at_every_batch_boundary(spark, tmp_path):
             assert table_fingerprint(visible_with_offset(table2)) == table_fingerprint(
                 oracle_final(clog, pages)
             ), (mode, k)
+            entries = [
+                e
+                for v in range(table2.version + 1)
+                for b in table2.manifest_at(v)["buckets"].values()
+                for e in SnapshotTable._bucket_entries(b)
+            ]
+            assert entries and all(e["files"] == 1 for e in entries), (mode, k, entries)
             shutil.rmtree(tmp, ignore_errors=True)
 
 

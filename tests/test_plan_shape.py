@@ -123,6 +123,31 @@ def test_engine_exchange_is_core_wide(spark, tmp_path, monkeypatch, kw):
     assert exchanges and all(i < k < end for k in exchanges), plan
 
 
+def test_exchange_width_follows_cores_only_on_local_master(spark, tmp_path, monkeypatch):
+    """A local master has a fixed core count; a cluster master's
+    defaultParallelism counts only the executors registered so far, so
+    there the exchange keeps one partition per bucket."""
+    from types import SimpleNamespace
+
+    from helpers import PAGES_SCHEMA
+
+    from gobblin_spark.lake import SnapshotTable
+
+    table = SnapshotTable.create(
+        spark, os.path.join(str(tmp_path), "t"), PAGES_SCHEMA, key="url", n_buckets=8
+    )
+    assert table.exchange_width() == 4
+    for master, parallelism, want in (
+        ("local", 1, 1),
+        ("local[16]", 16, 8),
+        ("yarn", 2, 8),
+        ("spark://host:7077", 2, 8),
+    ):
+        sc = SimpleNamespace(master=master, defaultParallelism=parallelism)
+        monkeypatch.setattr(table, "spark", SimpleNamespace(sparkContext=sc))
+        assert table.exchange_width() == want, master
+
+
 def test_range_scan_pushes_filters_to_parquet(spark, tmp_path):
     clog = make_changelog(300, n_urls=40, n_partitions=4, seed=3)
     path = os.path.join(str(tmp_path), "clog2")
