@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gobblin_spark.dedup import lww_latest, lww_latest_salted, lww_latest_window
+from gobblin_spark.extract import STEPS, STRIP, extract_text_udf
 from gobblin_spark.operators.dedup_families import (
     chunk_frequency_dedup,
     contamination_check,
@@ -1678,13 +1679,11 @@ _HTML_SUFFIX = "</p></div><footer>contact &lt;ops&gt; &amp; legal</footer></body
 
 
 def q_extract_html_text(spark, sf_dir):
-    """The engine's converter-slot html→text extraction (vectorized Arrow
-    pandas_udf, gobblin_spark/extract.py) — verified byte-identical against an
-    independent regex engine (DuckDB RE2) applying the same substitution
-    pipeline. Html is synthesized deterministically from the documents table
-    in both engines."""
-    from gobblin_spark.extract import extract_text_udf
-
+    """The engine's converter-slot html→text extraction (``arrow_udf`` over
+    pyarrow.compute, gobblin_spark/extract.py) — verified byte-identical
+    against DuckDB's regex engine running the SQL generated from the same
+    step table (``_extract_sql``). Html is synthesized deterministically from
+    the documents table in both engines."""
     docs = _docs(spark, sf_dir)
     html = F.encode(
         F.concat(F.lit(_HTML_PREFIX), F.col("text"), F.lit(_HTML_SUFFIX)), "utf-8"
@@ -2794,41 +2793,18 @@ SELECT (SELECT count(*) FROM exact) AS n_exact,
 """
 
 
-_BLOCK_TAG_PAT = (
-    r"</?(?:p|div|h[1-6]|li|ul|ol|br|hr|tr|td|th|table|thead|tbody|"
-    r"section|article|blockquote|title|head|body|html|main|figure)\b[^>]*/?>"
-)
-
-
 def _extract_sql(input_expr: str) -> str:
-    """DuckDB (RE2) replication of gobblin_spark.extract._STEPS — the same
-    ordered substitution pipeline, with the backreference container pattern
-    expanded per tag (RE2 has no backrefs). Independent-engine witness of the
-    byte-identical-extraction invariant."""
-    steps: list[tuple[str, str, str]] = [
-        (r"<!--.*?-->", " ", "gs"),
-        *[
-            (rf"<{t}\b[^>]*>.*?</{t}\s*>", " ", "gis")
-            for t in ("script", "style", "nav", "footer", "header", "aside")
-        ],
-        (_BLOCK_TAG_PAT, "\n", "gis"),
-        (r"<[^>]*>", " ", "gs"),
-        (r"&nbsp;", " ", "g"),
-        (r"&lt;", "<", "g"),
-        (r"&gt;", ">", "g"),
-        (r"&quot;", '"', "g"),
-        (r"&#39;", "'", "g"),
-        (r"&amp;", "&", "g"),
-        (r"[ \t\r\f\v]+", " ", "g"),
-        (r" ?\n ?", "\n", "g"),
-        (r"\n+", "\n", "g"),
-    ]
+    """DuckDB (RE2) run of gobblin_spark.extract.STEPS: the engine's step
+    table, applied by an independent regex engine as a chain of
+    regexp_replace calls — the byte-identical-extraction witness."""
+
+    def lit(s: str) -> str:  # a raw newline is legal inside a SQL literal
+        return "'" + s.replace("'", "''") + "'"
+
     expr = input_expr
-    for pat, repl, flags in steps:
-        pat_sql = pat.replace("'", "''")
-        repl_sql = "e'\\n'" if repl == "\n" else "'" + repl.replace("'", "''") + "'"
-        expr = f"regexp_replace({expr}, '{pat_sql}', {repl_sql}, '{flags}')"
-    return f"trim({expr}, ' ' || e'\\n')"
+    for pat, repl in STEPS:
+        expr = f"regexp_replace({expr}, {lit(pat)}, {lit(repl)}, 'g')"
+    return f"trim({expr}, {lit(STRIP)})"
 
 
 def oracle_sql() -> dict[str, str]:
@@ -3833,7 +3809,7 @@ def oracle_sql() -> dict[str, str]:
         "cdc_crawl_schedule": f"""
             WITH agg AS (
               SELECT user_id,
-                     CAST(count(*) AS BIGINT) AS n_changes,
+                     CAST(count(ts) AS BIGINT) AS n_changes,
                      epoch_us(min(ts)) AS first_us,
                      epoch_us(max(ts)) AS last_us
               FROM events GROUP BY user_id

@@ -21,7 +21,8 @@ Re-imagines Apache Gobblin's work-unit + watermark model (reference:
 
 See COVERAGE.md for the SURVEY §2 row-by-row mapping.
 
-Everything is public-API PySpark (DataFrame / SQL / pandas_udf). No RDDs.
+Everything is public-API PySpark (DataFrame / SQL / Arrow and pandas UDFs).
+No RDDs.
 """
 
 __version__ = "0.1.0"

@@ -443,9 +443,9 @@ class CdcEngine:
                 latest = lww_latest(bucketed, ["_bucket", "url"], ["warc_ts", "log_offset"])
 
             # converter slot: vectorized text extraction — AFTER dedup, so the
-            # Arrow/pandas UDF runs once per surviving key (duplicates, lost
-            # race versions and deletes never reach Python) and the extracted
-            # text never rides the shuffle
+            # Arrow UDF runs once per surviving key (duplicates, lost race
+            # versions and deletes never reach Python) and the extracted text
+            # never rides the engine's shuffle
             if self.extract:
                 latest = latest.withColumn(
                     "text", F.when(F.col("op") != "D", extract_text_udf(F.col("html")))

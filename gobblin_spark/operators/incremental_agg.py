@@ -37,11 +37,11 @@ union + grouped sum on the group key (null-safe by construction) over
 two group-cardinality inputs — a single small exchange. Nothing
 iterates on the driver; no Python UDFs.
 
-Measures must be exact-typed (long / decimal) for the maintained MV to
-be bit-identical to a from-scratch recompute: float sums are
-order-dependent, so a double measure can drift in the last ulp between
-the incremental and direct plans. Callers with double columns pass a
-scaled-integer expression (e.g. ``(value * 1000).cast('long')``).
+Measures are summed as long, which keeps the maintained MV bit-identical
+to a from-scratch recompute: float sums are order-dependent, so a double
+measure could drift in the last ulp between the incremental and direct
+plans. Callers with fractional columns pass a scaled-integer expression
+(e.g. ``(value * 1000).cast('long')``).
 
 Reference parity: Gobblin has no MV layer — its closest shape is the
 compaction job's duplicate accounting (SURVEY §2.6); this operator is

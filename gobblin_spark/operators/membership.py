@@ -116,7 +116,7 @@ def bloom_probe(
 
 def dedup_against_history_bloom(
     new_batch: DataFrame,
-    history: DataFrame,
+    history: DataFrame | None,
     key_expr: Column,
     m_bits: int = 1 << 20,
     k: int = 4,
@@ -128,6 +128,10 @@ def dedup_against_history_bloom(
     truly never appeared in history. Definite-no rows (the bulk) never
     touch the join; the join's left side shrinks to fp·|new| + true-dups.
 
+    The history comes in one of two forms — pass exactly one, else
+    ``ValueError``: ``history`` (rows; ``key_expr`` is applied to them) or
+    ``history_keys`` (its key set already derived, see below).
+
     Cache lifecycle: when the operator derives the key set itself it
     persists it (both the eager filter build and the lazy rescue consume
     it); the cached partitions are released by Spark's ContextCleaner
@@ -137,26 +141,18 @@ def dedup_against_history_bloom(
     persists ONCE and reuses across batches), which this function then
     never re-persists — the caller owns unpersist().
     """
+    if (history is None) == (history_keys is None):
+        raise ValueError("pass exactly one of history and history_keys")
     key = "_bloom_key"
-    nb = new_batch.withColumn(key, key_expr)
-    if history_keys is not None:
-        words = bloom_words(history_keys, key, m_bits, k)
-        probed = bloom_probe(nb, key, words, m_bits, k)
-        novel = probed.filter(~F.col("maybe_member"))
-        rescued = probed.filter(F.col("maybe_member")).join(
-            history_keys, key, "left_anti"
-        )
-        return novel.unionByName(rescued).drop("maybe_member", key)
-    # persist the distinct keys: both the filter build (eager collect, runs
-    # now) and the rescue anti-join (lazy, runs when the caller acts)
-    # consume them, and the history scan + distinct shuffle is the most
-    # expensive step — without the persist it would run TWICE per ingest
-    hist_keys = history.select(key_expr.alias(key)).distinct().persist()
-    words = bloom_words(hist_keys, key, m_bits, k)
-    probed = bloom_probe(nb, key, words, m_bits, k)
+    if history_keys is None:
+        # persist the distinct keys: both the filter build (eager collect,
+        # runs now) and the rescue anti-join (lazy, runs when the caller
+        # acts) consume them, and the history scan + distinct shuffle is the
+        # most expensive step — without the persist it would run TWICE per
+        # ingest
+        history_keys = history.select(key_expr.alias(key)).distinct().persist()
+    words = bloom_words(history_keys, key, m_bits, k)
+    probed = bloom_probe(new_batch.withColumn(key, key_expr), key, words, m_bits, k)
     novel = probed.filter(~F.col("maybe_member"))
-    rescued = (
-        probed.filter(F.col("maybe_member"))
-        .join(hist_keys, key, "left_anti")
-    )
+    rescued = probed.filter(F.col("maybe_member")).join(history_keys, key, "left_anti")
     return novel.unionByName(rescued).drop("maybe_member", key)

@@ -220,7 +220,8 @@ def recrawl_schedule(
     across libm builds; integer division cannot).
 
     Per key with >= min_changes observed changes:
-    - ``n_changes``, ``first_us``/``last_us`` (epoch micros),
+    - ``n_changes`` (rows with a non-NULL timestamp, the rows that
+      ``first_us``/``last_us`` see), ``first_us``/``last_us`` (epoch micros),
     - ``mean_gap_us`` = (last - first) DIV (n - 1)  — observed cadence,
     - ``overdue_e3``  = (asof - last) * 1000 DIV mean_gap_us — elapsed
       idle time in units of the key's own cadence, scaled by 1000
@@ -243,7 +244,7 @@ def recrawl_schedule(
         F.col(ts_col).cast("timestamp_ntz"),
     )
     agg = changelog.groupBy(key_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_changes"),
+        F.count(ts_col).cast("long").alias("n_changes"),
         F.min(us).alias("first_us"),
         F.max(us).alias("last_us"),
     )

@@ -5,10 +5,12 @@ watermark resume State-Management-and-Watermarks.md)."""
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from gobblin_spark.engine import CdcEngine
 from gobblin_spark.fixtures import make_changelog, write_changelog
@@ -255,3 +257,35 @@ def test_lww_strategies_replay_to_identical_state(spark, tmp_path):
         eng.run(os.path.join(tmp, "changelog"), max_events_per_batch=150)
         prints.append(table_fingerprint(visible_with_offset(table)))
     assert prints[0] == prints[1]
+
+
+def test_engine_replay_with_ntz_changelog(spark, tmp_path):
+    """Full engine run over a changelog whose warc_ts is TIMESTAMP_NTZ and a
+    table schema derived from it — the default-config-session crash scenario."""
+
+    def ts(s):
+        return dt.datetime(2026, 1, 1) + dt.timedelta(seconds=s)
+
+    data = [
+        ("u1", "U", ts(1), b"h1", 0, 0),
+        ("u1", "U", ts(5), b"h2", 0, 1),
+        ("u2", "U", ts(2), b"h3", 0, 2),
+        ("u2", "D", ts(9), None, 0, 3),
+    ]
+    clog_schema = T.StructType(
+        [
+            T.StructField("url", T.StringType()),
+            T.StructField("op", T.StringType()),
+            T.StructField("warc_ts", T.TimestampNTZType()),
+            T.StructField("html", T.BinaryType()),
+            T.StructField("log_partition", T.IntegerType()),
+            T.StructField("log_offset", T.LongType()),
+        ]
+    )
+    clog = spark.createDataFrame(data, clog_schema)
+    meta = {"op", "log_partition", "log_offset"}
+    schema = T.StructType([f for f in clog_schema.fields if f.name not in meta])
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), schema, key="url", n_buckets=4)
+    CdcEngine(spark, t, job_id="ntz", extract=False).run(clog)
+    rows = {r["url"]: bytes(r["html"]) for r in t.read_visible().collect()}
+    assert rows == {"u1": b"h2"}  # u2 deleted, u1 latest wins

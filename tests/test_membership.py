@@ -100,3 +100,25 @@ def test_two_phase_pipeline_is_exact(spark):
     keys = sorted(r["key"] for r in out.collect())
     assert keys == sorted(f"n{i}" for i in range(60))
     assert set(out.columns) == {"key", "x"}
+
+
+def test_two_phase_pipeline_with_history_keys_is_exact(spark):
+    """A caller-derived key set stands in for the history rows."""
+    hist = spark.createDataFrame([(f"h{i}",) for i in range(150)], "_bloom_key string")
+    new = spark.createDataFrame(
+        [(f"h{i}", i) for i in range(30)] + [(f"n{i}", i) for i in range(60)],
+        "key string, x long",
+    )
+    out = dedup_against_history_bloom(new, None, F.col("key"), m_bits=256, k=2, history_keys=hist)
+    assert sorted(r["key"] for r in out.collect()) == sorted(f"n{i}" for i in range(60))
+
+
+@pytest.mark.parametrize("given", ["both", "neither"])
+def test_history_and_history_keys_are_exclusive(spark, given):
+    """history_keys with history would silently ignore one of them; with
+    neither there is nothing to dedup against."""
+    new = spark.createDataFrame([("a", 1)], "key string, x long")
+    hist = new if given == "both" else None
+    hist_keys = new.select(F.col("key").alias("_bloom_key")) if given == "both" else None
+    with pytest.raises(ValueError, match="exactly one"):
+        dedup_against_history_bloom(new, hist, F.col("key"), history_keys=hist_keys)

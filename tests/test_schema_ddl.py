@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gobblin_spark.lake import SnapshotTable
+from gobblin_spark.schema import merge_schemas
 
 SCHEMA = T.StructType(
     [
@@ -26,7 +27,8 @@ EPOCH = dt.datetime(2026, 1, 1)
 
 
 def _upd(spark, rows, schema=None):
-    """rows: (url, ts_sec, *visible_tail, off, deleted)."""
+    """rows: (url, ts_sec, *visible_tail, off, deleted). ``_version_ts``
+    takes the schema's ``warc_ts`` flavor (TIMESTAMP or TIMESTAMP_NTZ)."""
     base = schema or SCHEMA
     data = [
         (u, EPOCH + dt.timedelta(seconds=ts), *tail, EPOCH + dt.timedelta(seconds=ts), off, d)
@@ -37,7 +39,7 @@ def _upd(spark, rows, schema=None):
         T.StructType(
             list(base.fields)
             + [
-                T.StructField("_version_ts", T.TimestampType()),
+                T.StructField("_version_ts", base["warc_ts"].dataType),
                 T.StructField("_version_off", T.LongType()),
                 T.StructField("_deleted", T.BooleanType()),
             ]
@@ -245,3 +247,30 @@ def test_compact_after_rename_materializes_current_names(spark, tmp_path):
         for ent in m["buckets"].values()
         for e in fresh._bucket_entries(ent)
     )
+
+
+def test_timestamp_ntz_schema_compat(spark, tmp_path):
+    """TIMESTAMP vs TIMESTAMP_NTZ is a session artifact: merge keeps the
+    table's flavor and the incoming side is cast (VERDICT r1 #1)."""
+    old = T.StructType([T.StructField("warc_ts", T.TimestampType())])
+    new = T.StructType([T.StructField("warc_ts", T.TimestampNTZType())])
+    assert merge_schemas(old, new)["warc_ts"].dataType == T.TimestampType()
+    assert merge_schemas(new, old)["warc_ts"].dataType == T.TimestampNTZType()
+
+    # end-to-end: NTZ updates into a TS table (a default-config session
+    # reads parquet event timestamps as NTZ; the table was created with TS)
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), SCHEMA, key="url", n_buckets=4)
+    ntz = T.StructType(
+        [
+            T.StructField(f.name, T.TimestampNTZType()) if f.name == "warc_ts" else f
+            for f in SCHEMA.fields
+        ]
+    )
+    t.merge(_upd(spark, [("a", 1, 1, "x", 10, False), ("b", 2, 2, "y", 11, False)], ntz))
+    assert t.schema()["warc_ts"].dataType == T.TimestampType()  # table flavor kept
+    rows = {r["url"]: r["warc_ts"] for r in t.read_visible().collect()}
+    assert rows["a"] == EPOCH + dt.timedelta(seconds=1)
+    assert rows["b"] == EPOCH + dt.timedelta(seconds=2)
+    # LWW still works across the cast: newer NTZ update replaces older TS row
+    t.merge(_upd(spark, [("a", 9, 100, "x", 20, False)], ntz))
+    assert {r["n"] for r in t.read_visible().filter(F.col("url") == "a").collect()} == {100}

@@ -217,6 +217,19 @@ def test_recrawl_overdue_null_when_asof_precedes_last_change(spark):
     assert r["mean_gap_us"] is not None and r["overdue_e3"] is None
 
 
+def test_recrawl_schedule_ignores_null_timestamps(spark):
+    """A NULL-ts row is not an observed change: n_changes counts the rows
+    min/max see, so the cadence is the span over the real changes."""
+    from gobblin_spark.operators.temporal import recrawl_schedule
+
+    log = spark.createDataFrame(
+        [("A", dt.datetime(2026, 1, 1)), ("A", dt.datetime(2026, 1, 1, 0, 0, 10)), ("A", None)],
+        "url string, ts timestamp",
+    )
+    (r,) = recrawl_schedule(log, "url", "ts", asof_us=0).collect()
+    assert (r["n_changes"], r["mean_gap_us"]) == (2, 10_000_000)
+
+
 def test_funnel_steps_ordered_semantics(spark):
     from gobblin_spark.operators.temporal import funnel_steps
 
