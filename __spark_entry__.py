@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gobblin_spark.dedup import lww_latest, lww_latest_salted, lww_latest_window
-from gobblin_spark.extract import STEPS, STRIP, extract_text_udf
+from gobblin_spark.extract import STEPS, STRIP, extract_text_col
 from gobblin_spark.operators.dedup_families import (
     chunk_frequency_dedup,
     contamination_check,
@@ -1679,16 +1679,16 @@ _HTML_SUFFIX = "</p></div><footer>contact &lt;ops&gt; &amp; legal</footer></body
 
 
 def q_extract_html_text(spark, sf_dir):
-    """The engine's converter-slot html→text extraction (``arrow_udf`` over
-    pyarrow.compute, gobblin_spark/extract.py) — verified byte-identical
-    against DuckDB's regex engine running the SQL generated from the same
-    step table (``_extract_sql``). Html is synthesized deterministically from
-    the documents table in both engines."""
+    """The engine's converter-slot html→text extraction (Spark
+    ``regexp_replace`` expressions, gobblin_spark/extract.py) — verified
+    byte-identical against DuckDB's regex engine running the SQL generated
+    from the same step table (``_extract_sql``). Html is synthesized
+    deterministically from the documents table in both engines."""
     docs = _docs(spark, sf_dir)
     html = F.encode(
         F.concat(F.lit(_HTML_PREFIX), F.col("text"), F.lit(_HTML_SUFFIX)), "utf-8"
     )
-    return docs.select("doc_id", extract_text_udf(html).alias("text_out"))
+    return docs.select("doc_id", extract_text_col(html).alias("text_out"))
 
 
 def q_emb_neardup(spark, sf_dir):

@@ -4,7 +4,7 @@ Re-imagines Apache Gobblin's work-unit + watermark model (reference:
 /root/reference, Apache Gobblin) as a small Spark-first library:
 
 - ``fixtures``   deterministic synthetic web-page changelog (test input)
-- ``extract``    vectorized Arrow/pandas html→text extraction (Converter slot)
+- ``extract``    deterministic html→text in native Spark expressions (Converter slot)
 - ``dedup``      last-writer-wins dedup per key (≈ AvroKeyDedupReducer)
 - ``planner``    watermark-range batch planning (≈ KafkaSource + WorkUnitPacker)
 - ``state``      checkpoint state store (≈ FsStateStore + WatermarkStorage)

@@ -81,12 +81,6 @@ def csv_decode(column: str, schema: str, alias: str = "decoded", **options) -> C
     return lambda df: df.withColumn(alias, F.from_csv(F.col(column), F.lit(schema), options or None))
 
 
-def to_timestamp_field(column: str, fmt: str, alias: str | None = None) -> Converter:
-    """Timestamp/date parsing piece of JsonIntermediateToAvroConverter
-    (gobblin-core/.../avro/JsonIntermediateToAvroConverter.java:50)."""
-    return lambda df: df.withColumn(alias or column, F.to_timestamp(F.col(column), fmt))
-
-
 def string_to_bytes(column: str, alias: str | None = None) -> Converter:
     """≈ StringToBytesConverter (gobblin-core/.../string/StringToBytesConverter.java)."""
     return lambda df: df.withColumn(alias or column, F.encode(F.col(column), "utf-8"))
@@ -100,16 +94,6 @@ def bytes_to_string(column: str, alias: str | None = None) -> Converter:
 def object_to_string(column: str, alias: str | None = None) -> Converter:
     """≈ ObjectToStringConverter (gobblin-core/.../string/ObjectToStringConverter.java)."""
     return lambda df: df.withColumn(alias or column, F.col(column).cast("string"))
-
-
-def avro_roundtrip_available() -> bool:
-    """spark-avro expression support is a separate jar; gate its use."""
-    try:
-        from pyspark.sql.avro.functions import from_avro, to_avro  # noqa: F401
-
-        return True
-    except ImportError:  # pragma: no cover
-        return False
 
 
 # ------------------------------------------------------------------ 1:N split

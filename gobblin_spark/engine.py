@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import lww_latest
-from .extract import extract_text_udf
+from .extract import extract_text_col
 from .lake import SnapshotTable
 from .metrics import (
     StatsTracker,
@@ -124,15 +124,16 @@ class CdcEngine:
         # high-frequency ingest, folded back by compaction (see lake.merge)
         self.merge_mode = merge_mode
         # "repartition" (default): ONE exchange of the raw rows, on _bucket
-        # (table.exchange_width() wide); the LWW groupBy and the bucketed
-        # write ride it. "combine": map-side partial LWW before the
-        # exchange (classic combiner) — sheds the duplicate factor from the
-        # shuffle at the cost of copying payloads through the partial-agg
-        # hash map and a second (deduped) exchange. MEASURED on the 10M-event
-        # replay (dup factor ~4, ~600B payloads, tmpfs shuffle): repartition
-        # 44.6s vs combine 46.8-47.9s at local[4] — buffer churn outweighs
-        # the byte savings here; combine wins when the duplicate factor is
-        # large or the shuffle fabric (real network) is slower than memcpy.
+        # (table.exchange_width() wide); the LWW groupBy, the rewrite-mode
+        # MERGE join and the bucketed write ride it. "combine": map-side
+        # partial LWW before the exchange (classic combiner) — sheds the
+        # duplicate factor from the shuffle at the cost of copying payloads
+        # through the partial-agg hash map and a second (deduped) exchange.
+        # MEASURED on the 10M-event replay (dup factor ~4, ~600B payloads,
+        # tmpfs shuffle): repartition 44.6s vs combine 46.8-47.9s at
+        # local[4] — buffer churn outweighs the byte savings here; combine
+        # wins when the duplicate factor is large or the shuffle fabric (real
+        # network) is slower than memcpy.
         if lww_strategy not in ("combine", "repartition"):
             raise ValueError(f"unknown lww_strategy: {lww_strategy}")
         self.lww_strategy = lww_strategy
@@ -365,7 +366,7 @@ class CdcEngine:
         if self.extract and "html" in self.patch_cols:
             out = out.withColumn(
                 "text",
-                F.when(~F.col("_deleted"), extract_text_udf(F.col("html"))),
+                F.when(~F.col("_deleted"), extract_text_col(F.col("html"))),
             )
         return out
 
@@ -416,9 +417,8 @@ class CdcEngine:
         #
         # "repartition" (default): one explicit exchange of all raw rows,
         # hashed on _bucket into table.exchange_width() partitions; the
-        # groupBy and the bucketed write ride it. A rewrite-mode MERGE join
-        # shuffles the updates once more: the extraction UDF above this
-        # exchange hides its partitioning (see SnapshotTable.merge).
+        # groupBy, the rewrite-mode MERGE join and the bucketed write ride it
+        # (merge's target side is shuffled to the same width).
         #
         # "combine": let the groupBy drive the exchange so Spark plans
         # partial aggregation BEFORE the shuffle — the map-side combiner. A
@@ -426,7 +426,7 @@ class CdcEngine:
         # so the combiner sheds the whole duplicate factor locally: at dup
         # factor d the shuffle carries n/d deduped rows twice (agg exchange
         # + the _bucket exchange) instead of n raw rows once. Extraction stays
-        # AFTER the LWW exchanges either way — only survivors reach Python.
+        # AFTER the LWW exchanges either way — only survivors are extracted.
         if self.fold == "patch":
             touched = self._touched_buckets(valid, ranges)
             updates = self._patch_updates(valid, touched)
@@ -442,13 +442,13 @@ class CdcEngine:
                 ).repartition(self.table.exchange_width(), F.col("_bucket"))
                 latest = lww_latest(bucketed, ["_bucket", "url"], ["warc_ts", "log_offset"])
 
-            # converter slot: vectorized text extraction — AFTER dedup, so the
-            # Arrow UDF runs once per surviving key (duplicates, lost race
-            # versions and deletes never reach Python) and the extracted text
-            # never rides the engine's shuffle
+            # converter slot: text extraction — AFTER dedup, so the regex
+            # chain runs once per surviving key (duplicates, lost race
+            # versions and deletes skip it) and the extracted text never
+            # rides the engine's shuffle
             if self.extract:
                 latest = latest.withColumn(
-                    "text", F.when(F.col("op") != "D", extract_text_udf(F.col("html")))
+                    "text", F.when(F.col("op") != "D", extract_text_col(F.col("html")))
                 )
             visible = [c for c in latest.columns if c not in _META_COLS and c != "_bucket"]
             updates = latest.select(

@@ -3,19 +3,27 @@
 The reference has no text-extraction function; this slots in exactly where a
 Gobblin ``Converter`` sits in the task flow (reference:
 gobblin-api/src/main/java/org/apache/gobblin/converter/Converter.java:61-104 —
-1:1 schema map + record-wise transform). Per the input_hint it must be a
-**vectorized Arrow UDF** with byte-identical output per url across runs, Arrow
-batch sizes, and cluster sizes.
+1:1 schema map + record-wise transform). The input_hint allows the
+pyspark.sql DataFrame API or vectorized UDFs, with no per-row Python; here it
+is native Spark expressions, with byte-identical output per url across runs,
+partition counts and cluster sizes.
 
 One ordered step table, ``STEPS``, is the only statement of the rules. Three
-engines run it: ``extract_text`` (Python ``re``, the scalar witness),
-``extract_text_udf`` (an ``arrow_udf`` over ``pyarrow.compute``'s RE2
-kernels) and the DuckDB oracle SQL of the ``extract_html_text`` contract
-query (RE2 again). The patterns are therefore written in the dialect both
-regex engines read alike: flags inline, no backreference, and ASCII classes
-spelled out where Python's ``\\b``/``\\s`` would be Unicode-aware. Each step
-is a stateless per-row substitution, so the output cannot depend on batch
-boundaries or parallelism.
+regex engines run it verbatim: ``extract_text`` (Python ``re``, the scalar
+witness), ``extract_text_col`` (Spark's ``regexp_replace``, i.e. Java regex,
+inside the engine's own plan) and the DuckDB oracle SQL of the
+``extract_html_text`` contract query (RE2). The patterns are written in the
+subset all three read alike, so none needs a translation:
+
+- no ``(?i)``: Java's folds ASCII only, Python's and RE2's fold Unicode, and
+  differently (``<scrİpt>``). Tag names are ASCII classes (``[Pp]``), as the
+  HTML tokenizer lowercases tag names in ASCII only;
+- ``\\x0b``, not ``\\v`` (a class in Java);
+- ASCII classes where Python's ``\\b``/``\\s`` would be Unicode-aware;
+- no backreference (RE2 has none).
+
+Each step is a stateless per-row substitution, so the output cannot depend on
+batch boundaries or parallelism.
 
 Semantics (FIXTURES.md §4): strip <script>/<style>/<nav>/<footer> (plus
 comments, header/aside), break block-level tags into newlines, drop remaining
@@ -27,19 +35,23 @@ from __future__ import annotations
 
 import re
 
-import pyarrow as pa
-import pyarrow.compute as pc
-from pyspark.sql.functions import arrow_udf
-from pyspark.sql.types import StringType
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 # What may follow a tag name up to its '>': nothing, or a non-word character
 # and anything but '>' (Python's ``\b[^>]*``, with an ASCII word class).
 _TAG_END = r"(?:[^>A-Za-z0-9_][^>]*)?>"
 _BOILERPLATE = ("script", "style", "nav", "footer", "header", "aside")
 _BLOCK = (
-    r"p|div|h[1-6]|li|ul|ol|br|hr|tr|td|th|table|thead|tbody|"
-    r"section|article|blockquote|title|head|body|html|main|figure"
-)
+    "p div h1 h2 h3 h4 h5 h6 li ul ol br hr tr td th table thead tbody "
+    "section article blockquote title head body html main figure"
+).split()
+
+
+def _nocase(tag: str) -> str:
+    """``tag`` matched in any ASCII case: ``nav`` → ``[Nn][Aa][Vv]``."""
+    return "".join(f"[{c.upper()}{c}]" if c.isalpha() else c for c in tag)
+
 
 # Ordered (pattern, replacement) pipeline applied after utf-8 decode.
 STEPS: list[tuple[str, str]] = [
@@ -49,13 +61,15 @@ STEPS: list[tuple[str, str]] = [
     # backreference, so each branch of one alternation closes its own tag;
     # leftmost-first matching picks the branch the backreference would.
     (
-        "(?is)<(?:"
-        + "|".join(rf"{t}{_TAG_END}.*?</{t}[ \t\n\r\f\v]*>" for t in _BOILERPLATE)
+        "(?s)<(?:"
+        + "|".join(
+            rf"{_nocase(t)}{_TAG_END}.*?</{_nocase(t)}[ \t\n\r\f\x0b]*>" for t in _BOILERPLATE
+        )
         + ")",
         " ",
     ),
     # block-level boundaries become newlines
-    (rf"(?is)</?(?:{_BLOCK}){_TAG_END}", "\n"),
+    (rf"</?(?:{'|'.join(map(_nocase, _BLOCK))}){_TAG_END}", "\n"),
     # any remaining tag
     (r"<[^>]*>", " "),
     # limited entity set (fixture html uses only these); &amp; last
@@ -66,7 +80,7 @@ STEPS: list[tuple[str, str]] = [
     (r"&#39;", "'"),
     (r"&amp;", "&"),
     # collapse horizontal whitespace
-    (r"[ \t\r\f\v]+", " "),
+    (r"[ \t\r\f\x0b]+", " "),
     # trim around line breaks, collapse blank lines
     (r" ?\n ?", "\n"),
     (r"\n+", "\n"),
@@ -87,16 +101,11 @@ def extract_text(html: bytes | None) -> str | None:
     return s.strip(STRIP)
 
 
-@arrow_udf(StringType())
-def extract_text_udf(html: pa.Array) -> pa.Array:
-    """Arrow-batched scalar UDF: binary html → extracted text."""
-    try:
-        s = pc.cast(html, pa.string())
-    except pa.ArrowInvalid:  # invalid UTF-8: decode as extract_text does
-        s = pa.array(
-            [b if b is None else b.decode("utf-8", errors="replace") for b in html.to_pylist()],
-            pa.string(),
-        )
+def extract_text_col(html: Column) -> Column:
+    """Binary (or string) html → extracted text, as Spark expressions: invalid
+    UTF-8 becomes U+FFFD as ``extract_text``'s decode makes it, then one
+    ``regexp_replace`` per step. NULL stays NULL."""
+    s = F.make_valid_utf8(html.cast("string"))
     for pat, repl in STEPS:
-        s = pc.replace_substring_regex(s, pat, repl)
-    return pc.utf8_trim(s, STRIP)
+        s = F.regexp_replace(s, pat, repl)
+    return F.btrim(s, F.lit(STRIP))

@@ -1,16 +1,15 @@
-"""Fork operator: route one batch to N branches, each with its own filters and
-sink (≈ ForkOperator / Forker, gobblin-api/.../fork/ForkOperator.java:36-71,
+"""Fork operator: route one batch to N branches, each with its own filter
+(≈ ForkOperator / Forker, gobblin-api/.../fork/ForkOperator.java:36-71,
 gobblin-runtime/.../fork/Fork.java:120-516).
 
-Spark shape (SURVEY §2.5): persist the batch once, then run each branch as an
-independent filtered write — copy semantics are free on immutable rows.
+Spark shape (SURVEY §2.5): each branch is a filter over the one batch — copy
+semantics are free on immutable rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 
 def fork_counts(df: DataFrame, branches: dict[str, Column]) -> DataFrame:
@@ -29,22 +28,3 @@ def fork_counts(df: DataFrame, branches: dict[str, Column]) -> DataFrame:
     )
     return stacked
 
-
-def fork_write(
-    df: DataFrame,
-    branches: dict[str, tuple[Column, str]],
-    fmt: str = "parquet",
-) -> dict[str, int]:
-    """Write each branch (condition, output path); the batch is persisted once
-    and scanned per branch (disk-spillable, like Gobblin's bounded fork
-    buffers). Returns rows written per branch."""
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        out = {}
-        for name, (cond, path) in branches.items():
-            branch = df.filter(cond)
-            branch.write.mode("overwrite").format(fmt).save(path)
-            out[name] = branch.count()
-        return out
-    finally:
-        df.unpersist()

@@ -16,7 +16,7 @@ _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow for pandas/arrow UDFs and toPandas — the extraction UDF mandate.
+    # Arrow for pandas UDFs, mapInPandas and toPandas.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     # Deterministic timestamps across environments: UTC session tz, and read

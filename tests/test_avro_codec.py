@@ -63,3 +63,35 @@ def test_decode_envelope_schema_dispatch(spark):
     assert bytes(byoff[1]["html"]) == b"h" and byoff[0]["html"] is None
     assert byoff[99]["_schema_id"] == -1 and byoff[99]["url"] is None  # diverted
     assert len(out) == 21
+
+
+def test_decode_envelope_widens_conflicting_field_types(spark):
+    """v1 writes `n` as int, v2 as long: the union output type must be LONG
+    and a 2^40 value decoded under v2 must survive unclipped."""
+    from gobblin_spark.avro_codec import decode_envelope, encode_record, wrap_envelope
+
+    v1 = [("url", "string"), ("n", "int")]
+    v2 = [("url", "string"), ("n", "long")]
+    registry = {1: v1, 2: v2}
+    rows = [
+        (1, wrap_envelope(1, encode_record(v1, {"url": "a", "n": 7}))),
+        (2, wrap_envelope(2, encode_record(v2, {"url": "b", "n": 2**40}))),
+    ]
+    df = spark.createDataFrame(rows, "rid int, payload binary")
+    out = decode_envelope(df, registry)
+    assert dict(out.dtypes)["n"] == "bigint"
+    got = {r["rid"]: r["n"] for r in out.collect()}
+    assert got == {1: 7, 2: 2**40}
+
+
+def test_decode_envelope_widens_float_to_double(spark):
+    from gobblin_spark.avro_codec import decode_envelope, encode_record, wrap_envelope
+
+    v1 = [("x", "float")]
+    v2 = [("x", "double")]
+    registry = {1: v1, 2: v2}
+    rows = [(1, wrap_envelope(2, encode_record(v2, {"x": 1.0000000001})))]
+    df = spark.createDataFrame(rows, "rid int, payload binary")
+    out = decode_envelope(df, registry)
+    assert dict(out.dtypes)["x"] == "double"
+    assert abs(out.collect()[0]["x"] - 1.0000000001) < 1e-12

@@ -10,7 +10,11 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from gobblin_spark.operators.clustering import connected_components, dup_clusters
+from gobblin_spark.operators.clustering import (
+    cluster_representatives,
+    connected_components,
+    dup_clusters,
+)
 
 
 def _union_find(edges):
@@ -90,3 +94,24 @@ def test_cc_plan_is_distributed(spark):
     edges = [(i, (i * 7919) % 500) for i in range(2000)]
     edges = [(a, b) for a, b in edges if a != b]
     _check(spark, edges)
+
+
+def test_cluster_representatives_longest_wins_ties_to_min_id(spark):
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "a_id long, b_id long"
+    )
+    docs = spark.createDataFrame(
+        [(1, 50), (2, 90), (3, 90), (10, 5), (11, 5), (7, 1000)],
+        "doc_id long, n_chars long",
+    )
+    rows = cluster_representatives(pairs, docs).collect()
+    keep = {r["doc_id"]: r["keep"] for r in rows}
+    # cluster {1,2,3}: 2 and 3 tie on n_chars=90 -> min id 2 wins
+    assert keep == {1: False, 2: True, 3: False, 10: True, 11: False}
+    # unclustered doc 7 never appears
+    assert 7 not in keep
+    # every cluster has exactly one keeper
+    clusters = {}
+    for r in rows:
+        clusters.setdefault(r["cluster_id"], []).append(r["keep"])
+    assert all(sum(v) == 1 for v in clusters.values())

@@ -7,6 +7,8 @@ from pyspark.sql import functions as F
 
 from gobblin_spark.operators.dedup_families import (
     _block_layout,
+    chunk_frequency_dedup,
+    dedup_against_history,
     minhash_near_dup_pairs,
     ngram_jaccard_pairs,
     portable_hash60,
@@ -363,3 +365,49 @@ def test_remove_spans_tolerates_overlapping_caller_spans(spark):
     out = remove_duplicate_spans(docs, spans=spans).collect()[0]["clean_text"]
     # union [1,16) removes A..O, [20,23) removes T,U,V
     assert out == "PQRS" + "WXYZ"
+
+
+def test_chunk_dedup_strips_hot_chunks_and_recomposes(spark):
+    boiler = "all rights reserved"
+    docs = spark.createDataFrame(
+        [(i, f"{boiler} unique words {i} tail{i} x{i}") for i in range(5)]
+        + [(99, "totally original prose only")],
+        "doc_id long, text string",
+    )
+    out = chunk_frequency_dedup(
+        docs, words_per_chunk=3, max_occurrences=4
+    ).collect()
+    by_id = {r["doc_id"]: r for r in out}
+    # 'all rights reserved' appears 5x > 4 -> stripped everywhere
+    for i in range(5):
+        assert by_id[i]["n_removed"] == 1
+        assert by_id[i]["clean_text"] == f"unique words {i} tail{i} x{i}"
+    assert by_id[99]["n_removed"] == 0
+    assert by_id[99]["clean_text"] == "totally original prose only"
+
+
+def test_chunk_dedup_fully_boilerplate_doc_empties(spark):
+    docs = spark.createDataFrame(
+        [(i, "spam spam spam") for i in range(6)], "doc_id long, text string"
+    )
+    out = chunk_frequency_dedup(docs, words_per_chunk=3, max_occurrences=2).collect()
+    assert all(r["clean_text"] == "" and r["n_removed"] == 1 for r in out)
+
+
+def test_history_dedup_keep_first_and_anti_join(spark):
+    history = spark.createDataFrame(
+        [(1, "seen before"), (2, "also seen")], "doc_id long, text string"
+    )
+    batch = spark.createDataFrame(
+        [
+            (10, "seen before"),   # in history -> dropped
+            (11, "brand new"),     # survives
+            (12, "brand new"),     # dup within batch, larger id -> dropped
+            (13, "another one"),   # survives
+        ],
+        "doc_id long, text string",
+    )
+    got = sorted(
+        r["doc_id"] for r in dedup_against_history(batch, history).collect()
+    )
+    assert got == [11, 13]

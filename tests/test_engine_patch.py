@@ -218,3 +218,67 @@ def test_patch_fold_requires_patch_cols():
         CdcEngine(None, None, fold="patch")
     with pytest.raises(ValueError, match="unknown fold"):
         CdcEngine(None, None, fold="bogus")
+
+
+def _fold(events):
+    """Driver-side reference fold: replay the changelog in version order row
+    by row — the semantics patch_merge must reproduce in one aggregate."""
+    state = {}
+    for ts, eid, key, op, a, b in sorted(events, key=lambda e: (e[0], e[1])):
+        if op == "D":
+            state.pop(key, None)
+        else:
+            row = state.setdefault(key, {"a": None, "b": None})
+            if a is not None:
+                row["a"] = a
+            if b is not None:
+                row["b"] = b
+            row["v"] = (ts, eid)
+    return state
+
+
+EVENTS = [
+    # key 1: plain patches, no delete — per-column last non-null
+    (1, 1, 1, "U", 10, None),
+    (2, 2, 1, "U", None, "x"),
+    (3, 3, 1, "U", 20, None),
+    # key 2: delete resets; only column a re-written afterwards
+    (1, 4, 2, "U", 1, "old"),
+    (2, 5, 2, "D", None, None),
+    (3, 6, 2, "U", 7, None),
+    # key 3: trailing tombstone — row must NOT survive
+    (1, 7, 3, "U", 5, "gone"),
+    (9, 8, 3, "D", None, None),
+    # key 4: delete then nothing live before it either (insert after)
+    (1, 9, 4, "D", None, None),
+    (2, 10, 4, "U", None, "fresh"),
+    # key 5: same ts, ordering falls to event_id; later eid wins
+    (5, 11, 5, "U", 100, None),
+    (5, 12, 5, "U", 200, None),
+]
+
+
+def test_patch_merge_matches_reference_fold(spark):
+    df = spark.createDataFrame(
+        EVENTS, "ts long, event_id long, k long, op string, a long, b string"
+    )
+    out = patch_merge(
+        df, ["k"], ["ts", "event_id"], ["a", "b"], F.col("op") == "D"
+    )
+    got = {r["k"]: r.asDict() for r in out.collect()}
+    exp = _fold(EVENTS)
+    assert sorted(got) == sorted(exp)
+    for k, row in exp.items():
+        assert got[k]["a"] == row["a"], (k, got[k], row)
+        assert got[k]["b"] == row["b"], (k, got[k], row)
+        assert (got[k]["last_ts"], got[k]["last_event_id"]) == row["v"]
+
+
+def test_patch_merge_is_single_exchange(spark):
+    df = spark.createDataFrame(
+        EVENTS, "ts long, event_id long, k long, op string, a long, b string"
+    )
+    plan = patch_merge(
+        df, ["k"], ["ts", "event_id"], ["a", "b"], F.col("op") == "D"
+    )._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan  # one hash agg, map-side combined

@@ -1,7 +1,8 @@
-"""Byte-identity invariant for the vectorized extractor (BASELINE.json
-input_hint: byte-identical extracted text per url across runs, Arrow batch
-sizes, and parallelism), and agreement of the three engines that run the one
-step table: Python ``re``, the Arrow UDF and DuckDB."""
+"""Byte-identity invariant for the engine's extractor (BASELINE.json
+input_hint: byte-identical extracted text per url across runs, batch
+boundaries and parallelism), and agreement of the three regex engines that
+run the one step table verbatim: Python ``re``, Spark (Java) and DuckDB
+(RE2)."""
 
 from __future__ import annotations
 
@@ -9,15 +10,11 @@ import hashlib
 
 import duckdb
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import functions as F
 
 from __spark_entry__ import _extract_sql
-from gobblin_spark.extract import extract_text, extract_text_udf
+from gobblin_spark.extract import extract_text, extract_text_col
 from gobblin_spark.fixtures import make_html, make_pages
-
-# the Arrow UDF's body, callable on a pyarrow array without Spark
-extract_arrow = extract_text_udf.func
 
 ADVERSARIAL = [
     b"<nav><script>x</nav>y</script>z",  # nested boilerplate, other tag first
@@ -33,6 +30,15 @@ ADVERSARIAL = [
     b"&amp;lt; &nbsp;&#39;&quot;&gt;",
     b" \n\t\x0b\x0c\r <div>\x0b \x0c</div> ",
     b"\xff\xfe<p>x</p>\x80 tail",  # invalid UTF-8
+    # non-ASCII letters that Unicode case folding maps onto a tag name's
+    # letters: tag names match in ASCII case only, as the HTML tokenizer reads
+    "<scr\u0130pt>x</script>y<d\u0130v>z".encode(),  # dotted capital I
+    "<scr\u0131pt>x</script>y".encode(),  # dotless i
+    "<\u017fcript>x</script>y".encode(),  # long s
+    "<bloc\u212aquote>x</blockquote>y<li\u212a>z".encode(),  # Kelvin sign
+    b"<p>\xed\xa0\x80</p>a\xed\xbf\xbfb",  # UTF-8-encoded surrogates
+    b"<p>\xc0\xaf\xe0\x80\xaf</p>\xf0\x80\x80\xaf",  # overlong encodings
+    b"<p>\xe2\x82</p>\xf0\x9f\x98 x \xe2",  # truncated sequences
     b"",
     None,
 ]
@@ -56,29 +62,37 @@ def _duckdb_extract(htmls):
     return [r[0] for r in rows]
 
 
-def test_scalar_vs_vectorized_byte_identity():
+def _spark_extract(spark, htmls, n_partitions=1):
+    """extract_text_col over ``htmls`` as a binary column, round-robin
+    repartitioned into ``n_partitions``, back in input order."""
+    sdf = spark.createDataFrame(list(enumerate(htmls)), "i int, html binary")
+    rows = (
+        sdf.repartition(n_partitions)
+        .select("i", extract_text_col(F.col("html")).alias("text"))
+        .collect()
+    )
+    return [r["text"] for r in sorted(rows)]
+
+
+def test_scalar_vs_vectorized_byte_identity(spark):
     htmls = _sample_htmls()
     ref = [extract_text(h) for h in htmls]
-    vec = extract_arrow(pa.array(htmls, pa.binary())).to_pylist()
-    assert ref == vec
+    assert ref == _spark_extract(spark, htmls)
     # and actually extracts: boilerplate gone, content present
     assert all("var t" not in t and "Home" not in t for t in ref)
     assert all("Page" in t for t in ref)
 
 
-def test_batch_size_independence():
-    arr = pa.array(_sample_htmls(), pa.binary())
-    whole = extract_arrow(arr).to_pylist()
-    chunked = []
-    for i in range(0, len(arr), 7):
-        chunked.extend(extract_arrow(arr.slice(i, 7)).to_pylist())
+def test_batch_size_independence(spark):
+    htmls = _sample_htmls()
+    whole = _spark_extract(spark, htmls)
+    chunked = _spark_extract(spark, htmls, -(-len(htmls) // 7))  # ~7 rows a task
     assert whole == chunked
 
 
-def test_null_html_yields_null():
+def test_null_html_yields_null(spark):
     assert extract_text(None) is None
-    out = extract_arrow(pa.array([None, b"<p>x</p>"], pa.binary())).to_pylist()
-    assert out == [None, "x"]
+    assert _spark_extract(spark, [None, b"<p>x</p>"]) == [None, "x"]
 
 
 def test_udf_parallelism_independence(spark):
@@ -87,7 +101,7 @@ def test_udf_parallelism_independence(spark):
 
     def hashes(df):
         rows = (
-            df.withColumn("text", extract_text_udf(F.col("html")))
+            df.withColumn("text", extract_text_col(F.col("html")))
             .select("url", F.sha2(F.col("text"), 256).alias("h"))
             .collect()
         )
@@ -105,27 +119,14 @@ def test_udf_parallelism_independence(spark):
 
 
 def test_three_engines_agree_on_adversarial_set(spark):
-    """extract_text, the Arrow UDF in Spark (Arrow batches of 7 and of the
-    session default, 1 and 8 partitions) and the generated DuckDB SQL give
-    byte-identical text, NULL for NULL."""
+    """extract_text, extract_text_col in Spark (1 and 8 partitions) and the
+    generated DuckDB SQL give byte-identical text, NULL for NULL."""
     htmls = ADVERSARIAL + _sample_htmls(20)
     ref = [extract_text(h) for h in htmls]
     assert _duckdb_extract(htmls) == ref
     # each container closes the tag it opened (per-tag passes would give "z")
     assert ref[ADVERSARIAL.index(b"<nav><script>x</nav>y</script>z")] == "y z"
-
-    sdf = spark.createDataFrame(list(enumerate(htmls)), "i int, html binary")
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    default = spark.conf.get(key)
-    try:
-        for batch in ("7", default):
-            spark.conf.set(key, batch)
-            for n in (1, 8):
-                rows = (
-                    sdf.repartition(n)
-                    .select("i", extract_text_udf(F.col("html")).alias("text"))
-                    .collect()
-                )
-                assert [r["text"] for r in sorted(rows)] == ref, (batch, n)
-    finally:
-        spark.conf.set(key, default)
+    # a tag name matches in ASCII case only
+    assert ref[ADVERSARIAL.index("<\u017fcript>x</script>y".encode())] == "x y"
+    for n in (1, 8):
+        assert _spark_extract(spark, htmls, n) == ref, n

@@ -85,8 +85,8 @@ class _Captured(Exception):
 def test_engine_exchange_is_core_wide(spark, tmp_path, monkeypatch, kw):
     """The frame CdcEngine hands to SnapshotTable.merge, at n_buckets=8 on
     local[4]: every _bucket exchange is 4 wide (the cores, not the bucket
-    count), there is one per input side, and the extraction UDF runs above
-    all of them."""
+    count), there is one per input side, no Python eval node runs, and the
+    extraction's regexp_replace chain sits above all the exchanges."""
     from helpers import setup_pipeline
 
     from gobblin_spark.engine import CdcEngine
@@ -109,18 +109,46 @@ def test_engine_exchange_is_core_wide(spark, tmp_path, monkeypatch, kw):
     assert widths == ["4"] * (2 if "fold" in kw else 1), plan
     if kw.get("lww_strategy") == "repartition":
         assert plan.count("Exchange") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
 
-    # the UDF node's subtree (the lines below it that are nested deeper)
-    # holds every exchange: extraction runs after the last shuffle
-    lines = plan.splitlines()
+    # the extraction node's subtree (the lines below it that are nested
+    # deeper) holds every exchange: only survivors are extracted. Node lines
+    # only: the "\n" replacement literal breaks the projection over lines.
+    lines = [ln for ln in plan.splitlines() if re.match(r"[ :]*(\+- )?[*A-Z]", ln)]
     depth = lambda ln: len(ln) - len(ln.lstrip(" :+-"))  # noqa: E731
-    i = next(k for k, ln in enumerate(lines) if "ArrowEvalPython" in ln)
+    i = next(k for k, ln in enumerate(lines) if "regexp_replace(" in ln)
     end = next(
         (k for k in range(i + 1, len(lines)) if depth(lines[k]) <= depth(lines[i])),
         len(lines),
     )
     exchanges = [k for k, ln in enumerate(lines) if "Exchange" in ln]
     assert exchanges and all(i < k < end for k in exchanges), plan
+
+
+def test_engine_rewrite_commit_single_exchange_per_side(spark, tmp_path, monkeypatch):
+    """What a rewrite-mode MERGE from the engine writes, at n_buckets=8 on
+    local[4]: one 4-wide _bucket exchange for the updates and one for the
+    target rows; the co-partitioned join and the bucketed write add none."""
+    from helpers import setup_pipeline
+
+    from gobblin_spark.lake import SnapshotTable
+
+    _, _, _, eng = setup_pipeline(spark, str(tmp_path), n_buckets=8)
+    assert eng.merge_mode == "rewrite"
+    captured = []
+
+    def writer(df, m):
+        captured.append(df)
+        raise _Captured
+
+    monkeypatch.setattr(SnapshotTable, "_writer", staticmethod(writer))
+    with pytest.raises(_Captured):
+        eng.run(os.path.join(str(tmp_path), "changelog"))
+    plan = _explain(captured[0], "simple")
+    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
+    widths = re.findall(r"Exchange hashpartitioning\(_bucket#\d+, (\d+)\)", plan)
+    assert widths == ["4", "4"], plan
+    assert plan.count("Exchange") == 2, plan
 
 
 def test_exchange_width_follows_cores_only_on_local_master(spark, tmp_path, monkeypatch):

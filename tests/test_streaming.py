@@ -254,3 +254,139 @@ def test_stream_gap_holds_watermark_and_applies_late_rows(spark, tmp_path):
     engine.apply_stream_batch(batch([("g", "U", ts(6), b"v6", 0, 6)]), batch_id="b3")
     assert engine.committed_watermarks() == {0: 6}
     assert t.read_visible().count() == 7
+
+
+def _ts(s: int) -> dt.datetime:
+    return dt.datetime(2026, 1, 1) + dt.timedelta(seconds=s)
+
+
+CLOG_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("op", T.StringType()),
+        T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("html", T.BinaryType()),
+        T.StructField("log_partition", T.IntegerType()),
+        T.StructField("log_offset", T.LongType()),
+    ]
+)
+
+
+def test_redelivered_gap_batch_not_recounted(spark, tmp_path):
+    """Replaying a micro-batch whose above-watermark offsets are fully covered
+    by pending_ranges must be a no-op: same partition_counts, same watermark,
+    same pending — and a partial replay applies/counts ONLY the new slice."""
+    schema = T.StructType(
+        [
+            T.StructField("url", T.StringType()),
+            T.StructField("warc_ts", T.TimestampType()),
+            T.StructField("html", T.BinaryType()),
+        ]
+    )
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), schema, key="url", n_buckets=4)
+    engine = CdcEngine(spark, t, job_id="redeliver", extract=False)
+
+    def batch(rows):
+        return spark.createDataFrame(rows, CLOG_SCHEMA)
+
+    gap_rows = [
+        ("a", "U", _ts(0), b"v0", 0, 0),
+        ("b", "U", _ts(1), b"v1", 0, 1),
+        ("d", "U", _ts(3), b"v3", 0, 3),
+        ("e", "U", _ts(4), b"v4", 0, 4),
+    ]
+    engine.apply_stream_batch(batch(gap_rows), batch_id="b1")
+    assert engine.committed_watermarks() == {0: 1}
+    assert t.properties["pending_ranges"] == {"0": [[3, 4]]}
+    assert t.properties["partition_counts"] == {"0": 4}
+
+    # checkpoint-loss redelivery of the SAME batch: offsets 3,4 sit above the
+    # watermark but inside pending_ranges — must skip, not double-count
+    r = engine.apply_stream_batch(batch(gap_rows), batch_id="b1-replay")
+    assert r["skipped"] is True
+    assert engine.committed_watermarks() == {0: 1}
+    assert t.properties["pending_ranges"] == {"0": [[3, 4]]}
+    assert t.properties["partition_counts"] == {"0": 4}
+
+    # partial replay: one already-pending offset (4) + the gap healer (2) +
+    # a new offset (5) — only 2 and 5 are applied/counted
+    engine.apply_stream_batch(
+        batch(
+            [
+                ("e", "U", _ts(4), b"v4", 0, 4),
+                ("c", "U", _ts(2), b"v2", 0, 2),
+                ("f", "U", _ts(5), b"v5", 0, 5),
+            ]
+        ),
+        batch_id="b2",
+    )
+    assert engine.committed_watermarks() == {0: 5}
+    assert t.properties["pending_ranges"] == {}
+    # 6 distinct offsets applied exactly once each
+    assert t.properties["partition_counts"] == {"0": 6}
+    assert t.read_visible().count() == 6
+
+
+def test_stateful_lww_null_version_rows_never_win(spark, tmp_path):
+    """A row with NULL warc_ts must not be selected as the batch max (pandas
+    sort_values places NaT LAST in ascending order — iloc[-1] would pick it)."""
+    from gobblin_spark.streaming import stateful_lww_updates
+
+    schema = T.StructType(
+        [
+            T.StructField("url", T.StringType()),
+            T.StructField("warc_ts", T.TimestampType()),
+            T.StructField("log_offset", T.LongType()),
+            T.StructField("payload", T.StringType()),
+        ]
+    )
+    src = os.path.join(str(tmp_path), "src")
+    spark.createDataFrame(
+        [
+            ("u", _ts(5), 1, "real-max"),
+            ("u", _ts(1), 0, "older"),
+            ("u", None, 99, "null-version"),
+        ],
+        schema,
+    ).write.parquet(src)
+    sink = os.path.join(str(tmp_path), "sink")
+    ckpt = os.path.join(str(tmp_path), "ckpt")
+    q = (
+        stateful_lww_updates(
+            spark.readStream.schema(schema).parquet(src), key_col="url"
+        )
+        .writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    rows = spark.read.parquet(sink).collect()
+    assert len(rows) == 1
+    assert rows[0]["payload"] == "real-max"
+    assert rows[0]["log_offset"] == 1
+
+
+def test_schema_sentinel_roundtrip():
+    """The merged schema survives the exception-message transport verbatim."""
+    import json
+
+    from gobblin_spark.streaming import (
+        _SCHEMA_SENTINEL,
+        _SCHEMA_SENTINEL_END,
+        SchemaChangedError,
+    )
+
+    schema = T.StructType(
+        [T.StructField("url", T.StringType()), T.StructField("lang", T.StringType())]
+    )
+    msg = str(SchemaChangedError(schema))
+    i = msg.find(_SCHEMA_SENTINEL)
+    j = msg.find(_SCHEMA_SENTINEL_END, i)
+    assert 0 <= i < j
+    parsed = T.StructType.fromJson(json.loads(msg[i + len(_SCHEMA_SENTINEL) : j]))
+    assert parsed == schema
+    # an unrelated error that merely MENTIONS the class name must not match
+    assert _SCHEMA_SENTINEL not in "user code raised SchemaChangedError-like text"
