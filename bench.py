@@ -113,7 +113,7 @@ def bench_cdc_replay(
         results = engine.run(changelog_path, max_events_per_batch=max(1, n_events // n_batches))
         apply_sec = time.monotonic() - t0
         j1 = _cpu_jiffies()
-        n_applied = sum(r.get("rows_read", 0) for r in results if not r.get("skipped"))
+        n_applied = sum(r.get("offsets_applied", 0) for r in results if not r.get("skipped"))
         t0 = time.monotonic()
         compact = table.compact()
         compact_sec = round(time.monotonic() - t0, 3)

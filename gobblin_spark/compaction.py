@@ -42,7 +42,7 @@ class RecompactionConditions:
 def _bucket_file_stats(table: SnapshotTable) -> tuple[int, int]:
     """(max files under any bucket's referenced entries, total referenced
     files) — read straight off the manifest, which records per-bucket file
-    counts at commit time (``lake._bucket_file_counts``). NO filesystem
+    counts at commit time (``lake._bucket_dir_stats``). NO filesystem
     access here: at 10^6 buckets a listdir-per-bucket trigger evaluation is
     a driver-side metadata scan of the whole table; the manifest numbers are
     O(1) to read and exactly as fresh as the commit they rode in on.

@@ -28,14 +28,7 @@ from pyspark.sql import functions as F
 from .dedup import lww_latest
 from .extract import extract_text_col
 from .lake import SnapshotTable
-from .metrics import (
-    StatsTracker,
-    batch_rates,
-    lineage_entry,
-    observe_batch,
-    observe_updates,
-    partition_lag,
-)
+from .metrics import StatsTracker, batch_rates, lineage_entry, partition_lag
 from .planner import (
     OffsetRange,
     discover_watermarks,
@@ -264,14 +257,10 @@ class CdcEngine:
             if merged:
                 new_pending[str(p)] = merged
         batch = batch_df.filter(range_predicate(ranges))
-        # use_observe=False: Observation.get blocks on a query-completion
-        # listener that cannot be serviced from inside the foreachBatch
-        # callback thread (deadlock); stream metrics come from the ranges
         return self._apply(
             batch,
             ranges,
             batch_id,
-            use_observe=False,
             wm_caps=wm_caps,
             extra_props={"pending_ranges": new_pending},
         )
@@ -370,12 +359,74 @@ class CdcEngine:
             )
         return out
 
+    def _updates(
+        self, valid: DataFrame, ranges: list[OffsetRange]
+    ) -> tuple[DataFrame, list[int] | None]:
+        """The batch's deduped update set for ``merge`` and the buckets it
+        may touch (None: a delta commit, which never reads the target).
+
+        Two physical LWW shapes, same semantics (winner per url) — see the
+        constructor docs for the measured tradeoff:
+
+        "repartition" (default): one explicit exchange of all raw rows,
+        hashed on _bucket into table.exchange_width() partitions; the
+        groupBy, the rewrite-mode MERGE join and the bucketed write ride it
+        (merge's target side is shuffled to the same width).
+
+        "combine": let the groupBy drive the exchange so Spark plans partial
+        aggregation BEFORE the shuffle — the map-side combiner. A keyed
+        changelog keeps all of a url's events in ONE log partition, so the
+        combiner sheds the whole duplicate factor locally: at dup factor d
+        the shuffle carries n/d deduped rows twice (agg exchange + the
+        _bucket exchange) instead of n raw rows once. Extraction stays AFTER
+        the LWW exchanges either way — only survivors are extracted."""
+        if self.fold == "patch":
+            touched = self._touched_buckets(valid, ranges)
+            updates = self._patch_updates(valid, touched)
+            return updates, None if self.merge_mode == "delta" else touched
+        if self.lww_strategy == "combine":
+            with_bucket = valid.withColumn("_bucket", self.table.bucket_expr("url"))
+            latest = lww_latest(with_bucket, ["_bucket", "url"], ["warc_ts", "log_offset"])
+            latest = latest.repartition(self.table.exchange_width(), F.col("_bucket"))
+        else:
+            bucketed = valid.withColumn(
+                "_bucket", self.table.bucket_expr("url")
+            ).repartition(self.table.exchange_width(), F.col("_bucket"))
+            latest = lww_latest(bucketed, ["_bucket", "url"], ["warc_ts", "log_offset"])
+
+        # converter slot: text extraction — AFTER dedup, so the regex chain
+        # runs once per surviving key (duplicates, lost race versions and
+        # deletes skip it) and the extracted text never rides the engine's
+        # shuffle
+        if self.extract:
+            latest = latest.withColumn(
+                "text", F.when(F.col("op") != "D", extract_text_col(F.col("html")))
+            )
+        visible = [c for c in latest.columns if c not in _META_COLS and c != "_bucket"]
+        updates = latest.select(
+            *visible,
+            F.col("warc_ts").alias("_version_ts"),
+            F.col("log_offset").alias("_version_off"),
+            (F.col("op") == F.lit("D")).alias("_deleted"),
+            F.col("_bucket"),
+        )
+
+        # affected-bucket discovery from the filtered batch scan: column-
+        # pruned and shuffle-free, vs deriving it from `updates` which would
+        # re-run the LWW shuffle a second time per batch. When the batch is
+        # far larger than the bucket count, every bucket is touched with
+        # near-certainty (coupon collector) — skip the discovery job
+        # entirely. Delta commits never read the target, so they skip
+        # discovery too.
+        if self.merge_mode == "delta":
+            return updates, None
+        return updates, self._touched_buckets(valid, ranges)
+
     def _apply(
         self,
         batch: DataFrame,
         ranges: list[OffsetRange],
         batch_id: str | None,
-        use_observe: bool = True,
         wm_caps: dict[int, int] | None = None,
         extra_props: dict | None = None,
     ) -> dict:
@@ -388,90 +439,6 @@ class CdcEngine:
 
         seq = int(self.table.properties.get("batch_seq", -1)) + 1
         batch_id = batch_id or f"{self.job_id}-{seq:06d}"
-        read_obs = upd_obs = None
-        if use_observe:
-            batch, read_obs = observe_batch(batch, f"read-{batch_id}")
-
-        # row-level quality policies (≈ RowLevelPolicyChecker; FAIL→ERR_FILE
-        # diversion semantics: gobblin-api/.../row/RowLevelPolicy.java:33-68)
-        ok = (
-            F.col("url").isNotNull()
-            & F.col("op").isin("I", "U", "D")
-            & (F.col("warc_ts").isNotNull())
-        )
-        if self.fold != "patch":
-            # partial images legitimately carry NULL payload columns
-            # (NULL = unchanged), so the non-null-html policy is LWW-only
-            ok = ok & ((F.col("op") == "D") | F.col("html").isNotNull())
-        n_errors = 0
-        if self.errors_path:
-            batch = batch.persist()
-            errors = batch.filter(~ok)
-            n_errors = errors.count()
-            if n_errors:
-                errors.write.mode("append").parquet(self.errors_path)
-        valid = batch.filter(ok)
-
-        # Two physical LWW shapes, same semantics (winner per url) — see the
-        # constructor docs for the measured tradeoff:
-        #
-        # "repartition" (default): one explicit exchange of all raw rows,
-        # hashed on _bucket into table.exchange_width() partitions; the
-        # groupBy, the rewrite-mode MERGE join and the bucketed write ride it
-        # (merge's target side is shuffled to the same width).
-        #
-        # "combine": let the groupBy drive the exchange so Spark plans
-        # partial aggregation BEFORE the shuffle — the map-side combiner. A
-        # keyed changelog keeps all of a url's events in ONE log partition,
-        # so the combiner sheds the whole duplicate factor locally: at dup
-        # factor d the shuffle carries n/d deduped rows twice (agg exchange
-        # + the _bucket exchange) instead of n raw rows once. Extraction stays
-        # AFTER the LWW exchanges either way — only survivors are extracted.
-        if self.fold == "patch":
-            touched = self._touched_buckets(valid, ranges)
-            updates = self._patch_updates(valid, touched)
-            affected = None if self.merge_mode == "delta" else touched
-        else:
-            if self.lww_strategy == "combine":
-                with_bucket = valid.withColumn("_bucket", self.table.bucket_expr("url"))
-                latest = lww_latest(with_bucket, ["_bucket", "url"], ["warc_ts", "log_offset"])
-                latest = latest.repartition(self.table.exchange_width(), F.col("_bucket"))
-            else:
-                bucketed = valid.withColumn(
-                    "_bucket", self.table.bucket_expr("url")
-                ).repartition(self.table.exchange_width(), F.col("_bucket"))
-                latest = lww_latest(bucketed, ["_bucket", "url"], ["warc_ts", "log_offset"])
-
-            # converter slot: text extraction — AFTER dedup, so the regex
-            # chain runs once per surviving key (duplicates, lost race
-            # versions and deletes skip it) and the extracted text never
-            # rides the engine's shuffle
-            if self.extract:
-                latest = latest.withColumn(
-                    "text", F.when(F.col("op") != "D", extract_text_col(F.col("html")))
-                )
-            visible = [c for c in latest.columns if c not in _META_COLS and c != "_bucket"]
-            updates = latest.select(
-                *visible,
-                F.col("warc_ts").alias("_version_ts"),
-                F.col("log_offset").alias("_version_off"),
-                (F.col("op") == F.lit("D")).alias("_deleted"),
-                F.col("_bucket"),
-            )
-
-            # affected-bucket discovery from the filtered batch scan: column-
-            # pruned and shuffle-free, vs deriving it from `updates` which
-            # would re-run the LWW shuffle a second time per batch. When the
-            # batch is far larger than the bucket count, every bucket is
-            # touched with near-certainty (coupon collector) — skip the
-            # discovery job entirely. Delta commits never read the target, so
-            # they skip discovery too.
-            if self.merge_mode == "delta":
-                affected = None
-            else:
-                affected = self._touched_buckets(valid, ranges)
-        if use_observe:
-            updates, upd_obs = observe_updates(updates, f"upd-{batch_id}")
 
         # merged watermarks: advance applied ranges, carry everything else;
         # wm_caps (offset-gap guard) holds a partition's committed watermark
@@ -493,7 +460,7 @@ class CdcEngine:
             pcounts[str(r.partition)] = pcounts.get(str(r.partition), 0) + r.count
 
         # lineage rides the SAME commit as data + watermarks (one atomic swap)
-        lineage = lineage_entry(batch_id, ranges, {}, self.table.version + 1)
+        lineage = lineage_entry(batch_id, ranges)
         props = {
             "watermarks": wm,
             "batch_seq": seq,
@@ -502,14 +469,43 @@ class CdcEngine:
             "partition_counts": pcounts,
             **(extra_props or {}),
         }
-        result = self.table.merge(
-            updates, properties=props, affected=affected, mode=self.merge_mode
+
+        # row-level quality policies (≈ RowLevelPolicyChecker; FAIL→ERR_FILE
+        # diversion semantics: gobblin-api/.../row/RowLevelPolicy.java:33-68)
+        ok = (
+            F.col("url").isNotNull()
+            & F.col("op").isin("I", "U", "D")
+            & (F.col("warc_ts").isNotNull())
         )
-        metrics = {**read_obs.get, **upd_obs.get} if use_observe else {
-            "offsets_applied": sum(r.count for r in ranges)
+        if self.fold != "patch":
+            # partial images legitimately carry NULL payload columns
+            # (NULL = unchanged), so the non-null-html policy is LWW-only
+            ok = ok & ((F.col("op") == "D") | F.col("html").isNotNull())
+        n_errors = 0
+        if self.errors_path:
+            batch = batch.persist()
+        try:
+            if self.errors_path:
+                errors = batch.filter(~ok)
+                n_errors = errors.count()
+                if n_errors:
+                    errors.write.mode("append").parquet(self.errors_path)
+            updates, affected = self._updates(batch.filter(ok), ranges)
+            result = self.table.merge(
+                updates, properties=props, affected=affected, mode=self.merge_mode
+            )
+        finally:
+            if self.errors_path:
+                batch.unpersist()
+
+        # one counter path for batch and streaming commits: the ranges give
+        # the offsets applied, merge's walk of its written files the rest
+        metrics = {
+            "offsets_applied": sum(r.count for r in ranges),
+            **{k: result[k] for k in ("files_written", "bytes_written", "rows_written")},
+            "quality_errors": n_errors,
+            "wall_sec": round(time.monotonic() - t0, 3),
         }
-        metrics["quality_errors"] = n_errors
-        metrics["wall_sec"] = round(time.monotonic() - t0, 3)
         metrics.update(batch_rates(metrics, metrics["wall_sec"]))
         if self._last_available is not None:
             # lag after THIS commit: available head minus the just-committed
@@ -518,7 +514,6 @@ class CdcEngine:
                 self._last_available, {int(p): int(v) for p, v in wm.items()}
             )
             metrics["total_lag"] = sum(metrics["partition_lag"].values())
-        lineage["metrics"] = metrics
         self.stats.record(
             {
                 "batch_id": batch_id,
@@ -526,8 +521,6 @@ class CdcEngine:
                 **metrics,
             }
         )
-        if self.errors_path:
-            batch.unpersist()
         if self.state:
             self.state.put(
                 self.job_id,

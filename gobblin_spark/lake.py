@@ -151,18 +151,33 @@ class OverlaidIndex(Mapping):
         return n
 
 
-def _bucket_file_counts(out_path: str) -> dict[int, int]:
-    """Parquet files per ``_bucket=`` dir of a just-written snapshot dir.
-    Called once at COMMIT time (O(written buckets), driver-side like the
-    write itself) so the manifest can carry per-bucket file counts and the
-    re-compaction trigger never has to list the filesystem."""
-    counts: dict[int, int] = {}
-    for d in os.listdir(out_path):
-        if d.startswith("_bucket="):
-            counts[int(d.split("=", 1)[1])] = sum(
-                1 for f in os.listdir(os.path.join(out_path, d)) if f.endswith(".parquet")
-            )
-    return counts
+def _bucket_dir_stats(out_path: str) -> dict[int, dict[str, int]]:
+    """``files``, ``bytes`` and ``rows`` of the parquet files in each
+    ``_bucket=`` dir of a just-written snapshot dir: one driver-side walk at
+    COMMIT time (O(written files); sizes from the walk's ``stat``, rows from
+    the footers). The manifest carries the per-bucket file counts, so the
+    re-compaction trigger never has to list the filesystem; ``merge``
+    reports the totals as its commit's counters (``_written``)."""
+    import pyarrow.parquet as pq
+
+    stats: dict[int, dict[str, int]] = {}
+    for d in os.scandir(out_path):
+        if d.name.startswith("_bucket="):
+            files = [f for f in os.scandir(d.path) if f.name.endswith(".parquet")]
+            stats[int(d.name.split("=", 1)[1])] = {
+                "files": len(files),
+                "bytes": sum(f.stat().st_size for f in files),
+                "rows": sum(pq.read_metadata(f.path).num_rows for f in files),
+            }
+    return stats
+
+
+def _written(stats: dict[int, dict[str, int]]) -> dict[str, int]:
+    """A commit's totals over ``_bucket_dir_stats`` — Iceberg's snapshot
+    summary ``added-data-files``, ``added-files-size`` and ``added-records``."""
+    return {
+        f"{k}_written": sum(s[k] for s in stats.values()) for k in ("files", "bytes", "rows")
+    }
 
 
 class CommitConflictError(RuntimeError):
@@ -1350,7 +1365,7 @@ class SnapshotTable:
             if so:
                 u_out = u_out.sortWithinPartitions("_bucket", *so)
             self._writer(u_out, m).partitionBy("_bucket").parquet(out_path)
-            file_counts = _bucket_file_counts(out_path)
+            file_stats = _bucket_dir_stats(out_path)
             info: dict = {}
 
             def append(head: dict) -> dict:
@@ -1382,10 +1397,13 @@ class SnapshotTable:
                 # carried by the base index untouched
                 bmap = head["buckets"]
                 overlay: dict[str, list | dict] = {}
-                for b, n in sorted(file_counts.items()):
+                for b, st in sorted(file_stats.items()):
                     prev = bmap.get(str(b))
                     ents = list(self._bucket_entries(prev)) if prev is not None else []
-                    overlay[str(b)] = [*ents, {"data": data_rel, "schema_id": sid, "files": n}]
+                    overlay[str(b)] = [
+                        *ents,
+                        {"data": data_rel, "schema_id": sid, "files": st["files"]},
+                    ]
                 removed: set[str] = set()
                 info["folded"] = [] if info["rebased"] else self._fold(new, overlay, removed)
                 new["buckets"] = OverlaidIndex(bmap, overlay, removed)
@@ -1395,10 +1413,11 @@ class SnapshotTable:
             return {
                 "version": new["version"],
                 "mode": "delta",
-                "affected_buckets": sorted(file_counts),
+                "affected_buckets": sorted(file_stats),
                 "folded_buckets": info["folded"],
                 "schema_changed": info["schema_changed"],
                 "rebased": info["rebased"],
+                **_written(file_stats),
             }
 
         if affected is None:
@@ -1453,17 +1472,18 @@ class SnapshotTable:
         # entry (or stay absent). The converse — a written bucket outside
         # `affected` — would silently drop the target rows that were never
         # read, so it is a hard error, not a repair.
-        file_counts = _bucket_file_counts(out_path)
-        stray = set(file_counts) - set(affected)
+        file_stats = _bucket_dir_stats(out_path)
+        stray = set(file_stats) - set(affected)
         if stray:
             raise ValueError(
                 f"merge wrote buckets {sorted(stray)} outside the affected set "
                 f"{affected}; affected must cover every update bucket"
             )
         evolved = self._schema_change(m, new_schema)
+        sid = evolved["current_schema_id"]
         overlay = {
-            str(b): {"data": data_rel, "schema_id": evolved["current_schema_id"], "files": n}
-            for b, n in sorted(file_counts.items())
+            str(b): {"data": data_rel, "schema_id": sid, "files": st["files"]}
+            for b, st in sorted(file_stats.items())
         }
         new = self._successor(
             m, properties, buckets=OverlaidIndex(m["buckets"], overlay, set()), **evolved
@@ -1473,6 +1493,7 @@ class SnapshotTable:
             "version": new["version"],
             "affected_buckets": affected,
             "schema_changed": new["current_schema_id"] != m["current_schema_id"],
+            **_written(file_stats),
         }
 
     def _fold(self, new: dict, overlay: dict, removed: set[str]) -> list[int]:
@@ -1510,13 +1531,13 @@ class SnapshotTable:
         self._writer(
             self._clustered(collapsed, new, n_parts=len(overflow)), new
         ).partitionBy("_bucket").parquet(fold_path)
-        fold_counts = _bucket_file_counts(fold_path)
+        fold_stats = _bucket_dir_stats(fold_path)
         for b in overflow:
-            if b in fold_counts:
+            if b in fold_stats:
                 overlay[str(b)] = {
                     "data": fold_rel,
                     "schema_id": new["current_schema_id"],
-                    "files": fold_counts[b],
+                    "files": fold_stats[b]["files"],
                 }
             else:  # bucket held only rows that no longer exist
                 overlay.pop(str(b), None)
@@ -1556,7 +1577,7 @@ class SnapshotTable:
         self._writer(self._clustered(df, m, n_parts=nb), m).partitionBy("_bucket").parquet(
             out_path
         )
-        file_counts = _bucket_file_counts(out_path)
+        file_stats = _bucket_dir_stats(out_path)
         # Iceberg-style data-file column stats: per-file [min,max] of the
         # merge key, captured once at rewrite time from the parquet footers.
         # With a key-leading sort order the per-file ranges are disjoint, so
@@ -1570,10 +1591,10 @@ class SnapshotTable:
                 str(b): {
                     "data": data_rel,
                     "schema_id": m["current_schema_id"],
-                    "files": n,
+                    "files": st["files"],
                     **({"ranges": ranges[b]} if b in ranges else {}),
                 }
-                for b, n in sorted(file_counts.items())
+                for b, st in sorted(file_stats.items())
             },
             # pending merge-on-read predicate deletes were applied by the
             # read above (matched rows marked _deleted, then dropped or
@@ -1581,7 +1602,7 @@ class SnapshotTable:
             delete_preds=[],
         )
         self._commit(new)
-        return {"version": new["version"], "buckets": len(file_counts)}
+        return {"version": new["version"], "buckets": len(file_stats)}
 
     def rebucket(self, n_buckets: int, properties: dict | None = None) -> dict:
         """Change the table's hash-bucket count in one atomic rewrite

@@ -1,50 +1,20 @@
-"""Per-batch metrics + lineage (≈ KafkaExtractorStatsTracker /
+"""Per-commit metrics + lineage (≈ KafkaExtractorStatsTracker /
 gobblin-metrics: records-in/out meters, per-partition processed counts;
 reference gobblin-modules/gobblin-kafka-common/.../kafka/
 KafkaExtractorStatsTracker.java:53-78).
 
-Implemented with ``pyspark.sql.Observation`` — counters ride the batch action
-itself (no extra pass over the data), the Spark-native analog of Gobblin's
-in-task meters.
+One counter path for batch and streaming commits alike, with no pass over
+the data of its own: ``offsets_applied`` comes from the commit's offset
+ranges, and ``files_written``/``bytes_written``/``rows_written`` from the
+files the commit wrote (``SnapshotTable.merge`` reads them off the directory
+walk and the parquet footers). The counters are recorded after the commit
+lands — in the stats history, the run results and the state store — never
+in the committed manifest, which carries only the lineage.
 """
 
 from __future__ import annotations
 
 from collections import deque
-
-from pyspark.sql import DataFrame, Observation
-from pyspark.sql import functions as F
-
-
-def observe_batch(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:
-    """Attach read-side counters: rows, bytes, per-op breakdown."""
-    obs = Observation(name)
-    # patch-mode changelogs need not carry an html column at all
-    bytes_read = (
-        F.coalesce(F.sum(F.octet_length("html")), F.lit(0))
-        if "html" in df.columns
-        else F.lit(0)
-    )
-    df = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_read"),
-        F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deletes_read"),
-        bytes_read.alias("bytes_read"),
-        F.min("log_offset").alias("min_offset"),
-        F.max("log_offset").alias("max_offset"),
-    )
-    return df, obs
-
-
-def observe_updates(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:
-    """Attach write-side counters on the deduped update set."""
-    obs = Observation(name)
-    df = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("keys_written"),
-        F.sum(F.when(F.col("_deleted"), 1).otherwise(0)).alias("tombstones"),
-    )
-    return df, obs
 
 
 def partition_lag(available: dict[int, int], committed: dict[int, int]) -> dict[str, int]:
@@ -96,24 +66,24 @@ class StatsTracker:
 
 
 def batch_rates(metrics: dict, wall_sec: float) -> dict:
-    """events/sec + bytes/sec for one committed batch."""
+    """events/sec (offsets applied) + bytes/sec (bytes written) for one
+    committed batch."""
     wall = max(wall_sec, 1e-9)
     out = {}
-    n = metrics.get("offsets_applied", metrics.get("rows_read"))
-    if n is not None:
-        out["events_per_sec"] = round(int(n) / wall, 1)
-    if metrics.get("bytes_read") is not None:
-        out["bytes_per_sec"] = round(int(metrics["bytes_read"]) / wall, 1)
+    if metrics.get("offsets_applied") is not None:
+        out["events_per_sec"] = round(int(metrics["offsets_applied"]) / wall, 1)
+    if metrics.get("bytes_written") is not None:
+        out["bytes_per_sec"] = round(int(metrics["bytes_written"]) / wall, 1)
     return out
 
 
-def lineage_entry(batch_id: str, ranges, metrics: dict, snapshot_version: int) -> dict:
-    """One lineage record per commit: which offset ranges went into which
-    snapshot (≈ GMCE topicPartitionOffsetsRange carried into the Iceberg
-    commit, gobblin-iceberg/.../writer/IcebergMetadataWriter.java:384-434)."""
+def lineage_entry(batch_id: str, ranges) -> dict:
+    """One lineage record per commit: which offset ranges went into it
+    (≈ GMCE topicPartitionOffsetsRange carried into the Iceberg commit,
+    gobblin-iceberg/.../writer/IcebergMetadataWriter.java:384-434). It holds
+    only what is known before the commit; the snapshot it landed in is the
+    manifest's own ``version``."""
     return {
         "batch_id": batch_id,
         "ranges": {str(r.partition): [r.low, r.high] for r in ranges},
-        "metrics": metrics,
-        "snapshot_version": snapshot_version,
     }

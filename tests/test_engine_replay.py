@@ -167,6 +167,24 @@ def test_quality_errors_diverted(spark, tmp_path):
     )
 
 
+def test_diverted_batch_unpersisted_when_its_commit_fails(spark, tmp_path, monkeypatch):
+    """With an errors path the batch is persisted for the quality split; a
+    batch whose commit fails releases it too, so a run of failing batches
+    under commit_policy="partial" holds no cached data."""
+    tmp = str(tmp_path)
+    pages, clog, table, eng = setup_pipeline(spark, tmp, n_events=200, bootstrap=False)
+
+    def failing_merge(*args, **kwargs):
+        raise RuntimeError("commit failed")
+
+    monkeypatch.setattr(table, "merge", failing_merge)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    res = eng.run(os.path.join(tmp, "changelog"), max_events_per_batch=50, commit_policy="partial")
+    assert res and all(r["failed"] for r in res)
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_rejected_row_bucket_is_not_affected(spark, tmp_path):
     """Affected-bucket discovery reads the quality-filtered batch: in a
     rewrite-mode batch too small for the all-buckets shortcut, a bucket that

@@ -3,6 +3,10 @@ pluggable reporters fired at commit (≈ KafkaExtractorStatsTracker.java:53,
 67-78 — records/sec + per-partition high-watermark tracking — and
 gobblin-metrics' pluggable reporters)."""
 
+import glob
+import os
+
+import pandas as pd
 import pytest
 from pyspark.sql import types as T
 
@@ -15,6 +19,20 @@ from gobblin_spark.metrics import (
     batch_rates,
     partition_lag,
 )
+from gobblin_spark.streaming import drain
+
+# the counters every commit records, in run() and drain() alike
+COUNTERS = {
+    "offsets_applied",
+    "rows_written",
+    "bytes_written",
+    "files_written",
+    "quality_errors",
+    "wall_sec",
+    "events_per_sec",
+    "bytes_per_sec",
+}
+LAG_KEYS = {"partition_lag", "total_lag"}
 
 
 def _table(spark, tmp_path, name="t"):
@@ -46,7 +64,7 @@ def test_partition_lag_math():
 
 
 def test_batch_rates_math():
-    r = batch_rates({"offsets_applied": 1000, "bytes_read": 2000}, 2.0)
+    r = batch_rates({"offsets_applied": 1000, "bytes_written": 2000}, 2.0)
     assert r == {"events_per_sec": 500.0, "bytes_per_sec": 1000.0}
     assert batch_rates({}, 1.0) == {}
 
@@ -76,7 +94,7 @@ def test_engine_records_rates_and_lag(spark, tmp_path, changelog_path):
     assert rec["total_lag"] == 0
     assert set(rec["partition_lag"]) == {"0", "1", "2", "3"}
     assert all(v == 0 for v in rec["partition_lag"].values())
-    # the same numbers ride the committed lineage (atomic with the data)
+    # the run result carries the same numbers as the stats record
     assert results[-1]["events_per_sec"] == rec["events_per_sec"]
 
 
@@ -113,3 +131,61 @@ def test_reporters_fire_per_commit_and_never_fail_the_job(
     # the broken reporter was isolated, recorded, and did not fail the run
     assert len(stats.reporter_errors) == len(committed)
     assert "sink down" in stats.reporter_errors[0]
+
+
+def test_run_and_drain_record_the_same_counters(spark, tmp_path, changelog_path):
+    """A batch commit (run) and a micro-batch commit (drain) take one counter
+    path, so their stats records carry the same keys. The lag keys are the
+    one exception: they are specific to run(), whose plan knows each
+    partition's available high; a file tail has no available high."""
+    ran = CdcEngine(spark, _table(spark, tmp_path, "ran"), job_id="m4", extract=False)
+    ran.run(changelog_path)
+    drained = CdcEngine(spark, _table(spark, tmp_path, "drained"), job_id="m5", extract=False)
+    drain(drained, changelog_path, str(tmp_path / "ckpt"))
+    run_rec, drain_rec = ran.stats.last, drained.stats.last
+    assert COUNTERS <= set(run_rec)
+    assert set(drain_rec) == set(run_rec) - LAG_KEYS
+    assert drain_rec["offsets_applied"] == run_rec["offsets_applied"] == 600
+    assert drain_rec["rows_written"] == run_rec["rows_written"] > 0
+
+
+def test_delta_commit_counts_its_written_files(spark, tmp_path, changelog_path):
+    """A delta commit's rows_written is its LWW survivors (tombstones
+    included): one row per distinct url of the applied ranges. files_written
+    and bytes_written are what the commit's data dir holds."""
+    t = _table(spark, tmp_path)
+    eng = CdcEngine(spark, t, job_id="m6", extract=False, merge_mode="delta")
+    [res] = eng.run(changelog_path, max_events_per_batch=400, max_batches=1)
+    clog = pd.read_parquet(changelog_path, columns=["url", "log_partition", "log_offset"])
+    part = clog["log_partition"].astype(int)
+    applied = pd.Series(False, index=clog.index)
+    for p, (low, high) in t.properties["last_lineage"]["ranges"].items():
+        applied |= (part == int(p)) & (clog["log_offset"] > low) & (clog["log_offset"] <= high)
+    assert res["offsets_applied"] == applied.sum() < len(clog)
+    assert res["rows_written"] == clog.loc[applied, "url"].nunique()
+
+    m = t.manifest()
+    [data] = {e["data"] for b in m["buckets"] for e in t._bucket_entries(m["buckets"][b])}
+    files = glob.glob(os.path.join(t.root, data, "_bucket=*", "*.parquet"))
+    assert res["files_written"] == len(files) > 0
+    assert res["bytes_written"] == sum(os.path.getsize(f) for f in files)
+    assert eng.stats.last["rows_written"] == res["rows_written"]
+
+
+def test_committed_lineage_reads_back_with_a_branch(spark, tmp_path, changelog_path):
+    """The committed lineage holds only what its commit knows: a reopened
+    table reads back the in-memory copy. With a branch present, version
+    numbers skip those the branch took, so the commit's snapshot is the
+    manifest's own version, not the head + 1 seen before the commit."""
+    t = _table(spark, tmp_path)
+    t.create_branch("wap").update_properties({"audit": "pending"})
+    eng = CdcEngine(spark, t, job_id="m7", extract=False, merge_mode="delta")
+    [res] = eng.run(changelog_path)
+    reopened = SnapshotTable(spark, t.root)
+    assert reopened.version == res["version"] == eng.stats.last["snapshot_version"] == 2
+    lineage = reopened.properties["last_lineage"]
+    assert lineage == t.properties["last_lineage"]
+    assert lineage == {
+        "batch_id": res["batch_id"],
+        "ranges": {str(p): [-1, hi] for p, hi in eng.committed_watermarks().items()},
+    }
