@@ -64,16 +64,24 @@ older versions, which a physical delete cannot.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .dedup import lww_latest
-from .lake import HIDDEN, _with_hidden
+from .lake import HIDDEN, SnapshotTable, _with_hidden
 from .schema import conform, merge_schemas
 
 _DIRTY_PROP = "gs.delta.dirty"
 _ENGINE_PREFIX = "gs."
+
+
+def _prop_str(v) -> str:
+    """A property value as Iceberg stores it: strings as they are, anything
+    else (the engine's dicts, lists and counters) as JSON."""
+    return v if isinstance(v, str) else json.dumps(v)
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -119,7 +127,7 @@ class IcebergTable:
             _DIRTY_PROP: "false",
             # format v2 is required for MERGE INTO copy-on-write semantics
             "format-version": "2",
-            **{k: str(v) for k, v in (properties or {}).items()},
+            **{k: _prop_str(v) for k, v in (properties or {}).items()},
         }
         props_sql = ", ".join(f"'{k}'='{v}'" for k, v in props.items())
         spark.sql(
@@ -135,13 +143,19 @@ class IcebergTable:
 
     @property
     def properties(self) -> dict:
+        """Table properties; a JSON object or array value (the engine's
+        watermarks, counts and lineage) reads back as the dict or list it was
+        written from, as ``SnapshotTable.properties`` returns it."""
         rows = self.spark.sql(f"SHOW TBLPROPERTIES {self.ident}").collect()
-        return {r["key"]: r["value"] for r in rows}
+        return {
+            r["key"]: json.loads(r["value"]) if r["value"][:1] in ("{", "[") else r["value"]
+            for r in rows
+        }
 
     def update_properties(self, delta: dict) -> None:
         if not delta:
             return
-        kv = ", ".join(f"'{k}'='{v}'" for k, v in delta.items())
+        kv = ", ".join(f"'{k}'='{_prop_str(v)}'" for k, v in delta.items())
         self.spark.sql(f"ALTER TABLE {self.ident} SET TBLPROPERTIES ({kv})")
 
     @property
@@ -172,6 +186,10 @@ class IcebergTable:
     def schema(self) -> T.StructType:
         full = self.spark.table(self.ident).schema
         return T.StructType([f for f in full.fields if f.name not in HIDDEN])
+
+    # width of the engine's _bucket exchange (the LWW); MERGE INTO plans
+    # its own exchanges
+    exchange_width = SnapshotTable.exchange_width
 
     def bucket_expr(self, col: str | None = None):
         # engine-side salting/stats parity only; NEVER a pruning predicate on
@@ -243,10 +261,12 @@ class IcebergTable:
             self.spark.sql(f"ALTER TABLE {self.ident} ADD COLUMNS ({new_cols})")
         u = conform(updates.drop("_bucket"), full)
 
+        before = self.version
         if mode == "delta":
             u.writeTo(self._sql_ident()).append()
+            written = self._written(before)
             self.update_properties({_DIRTY_PROP: "true", **(properties or {})})
-            return {"version": self.version, "mode": "delta", "schema_changed": schema_changed}
+            return {"mode": "delta", "schema_changed": schema_changed, **written}
 
         key = self.key
         view = f"_gs_updates_{abs(hash(self.ident)) % 10**8}"
@@ -264,9 +284,30 @@ class IcebergTable:
             )
         finally:
             self.spark.catalog.dropTempView(view)
+        written = self._written(before)
         if properties:
             self.update_properties(properties)
-        return {"version": self.version, "mode": "rewrite", "schema_changed": schema_changed}
+        return {"mode": "rewrite", "schema_changed": schema_changed, **written}
+
+    def _written(self, before: int) -> dict[str, int]:
+        """``version`` and the counters ``SnapshotTable.merge`` reports, from
+        the summary of the snapshot the write just committed:
+        ``added-data-files``, ``added-files-size`` and ``added-records``. All
+        0 when the write committed no snapshot (the ref still at ``before``).
+        A property update commits no snapshot, so ``version`` stays valid
+        after the watermarks are set."""
+        after = self.version
+        summary = {}
+        if after != before:
+            [row] = self.spark.sql(
+                f"SELECT summary FROM {self.ident}.snapshots WHERE snapshot_id = {after}"
+            ).collect()
+            summary = row["summary"] or {}
+        added = {"files": "data-files", "bytes": "files-size", "rows": "records"}
+        return {
+            "version": after,
+            **{f"{k}_written": int(summary.get(f"added-{v}", 0)) for k, v in added.items()},
+        }
 
     # --------------------------------------------------------- maintenance
     def compact(self, drop_tombstones: bool = True, properties: dict | None = None) -> dict:

@@ -151,32 +151,38 @@ class OverlaidIndex(Mapping):
         return n
 
 
-def _bucket_dir_stats(out_path: str) -> dict[int, dict[str, int]]:
-    """``files``, ``bytes`` and ``rows`` of the parquet files in each
+def _bucket_dir_stats(out_path: str) -> dict[int, dict]:
+    """``files``, ``bytes`` and ``paths`` of the parquet files in each
     ``_bucket=`` dir of a just-written snapshot dir: one driver-side walk at
-    COMMIT time (O(written files); sizes from the walk's ``stat``, rows from
-    the footers). The manifest carries the per-bucket file counts, so the
-    re-compaction trigger never has to list the filesystem; ``merge``
-    reports the totals as its commit's counters (``_written``)."""
-    import pyarrow.parquet as pq
-
-    stats: dict[int, dict[str, int]] = {}
+    COMMIT time (O(written files); sizes from the walk's ``stat``). The
+    manifest carries the per-bucket file counts, so the re-compaction trigger
+    never has to list the filesystem; ``merge`` reports the totals as its
+    commit's counters (``_written``)."""
+    stats: dict[int, dict] = {}
     for d in os.scandir(out_path):
         if d.name.startswith("_bucket="):
             files = [f for f in os.scandir(d.path) if f.name.endswith(".parquet")]
             stats[int(d.name.split("=", 1)[1])] = {
                 "files": len(files),
                 "bytes": sum(f.stat().st_size for f in files),
-                "rows": sum(pq.read_metadata(f.path).num_rows for f in files),
+                "paths": [f.path for f in files],
             }
     return stats
 
 
-def _written(stats: dict[int, dict[str, int]]) -> dict[str, int]:
-    """A commit's totals over ``_bucket_dir_stats`` — Iceberg's snapshot
-    summary ``added-data-files``, ``added-files-size`` and ``added-records``."""
+def _written(stats: dict[int, dict]) -> dict[str, int]:
+    """A merge commit's totals over ``_bucket_dir_stats`` — Iceberg's
+    snapshot summary ``added-data-files``, ``added-files-size`` and
+    ``added-records``. Only here are the footers read (for the row counts):
+    fold and rewrite commits keep just the file counts."""
+    import pyarrow.parquet as pq
+
     return {
-        f"{k}_written": sum(s[k] for s in stats.values()) for k in ("files", "bytes", "rows")
+        "files_written": sum(s["files"] for s in stats.values()),
+        "bytes_written": sum(s["bytes"] for s in stats.values()),
+        "rows_written": sum(
+            pq.read_metadata(p).num_rows for s in stats.values() for p in s["paths"]
+        ),
     }
 
 

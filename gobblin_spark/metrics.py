@@ -7,7 +7,12 @@ One counter path for batch and streaming commits alike, with no pass over
 the data of its own: ``offsets_applied`` comes from the commit's offset
 ranges, and ``files_written``/``bytes_written``/``rows_written`` from the
 files the commit wrote (``SnapshotTable.merge`` reads them off the directory
-walk and the parquet footers). The counters are recorded after the commit
+walk and the parquet footers). What a commit writes depends on the merge
+mode: a delta commit writes only the batch's LWW survivors (tombstones
+included), so ``offsets_applied / rows_written`` is its duplicate factor; a
+rewrite commit writes every row of the buckets it touches, so there
+``rows_written``, ``bytes_written`` and ``bytes_per_sec`` measure those
+buckets, not the batch. The counters are recorded after the commit
 lands — in the stats history, the run results and the state store — never
 in the committed manifest, which carries only the lineage.
 """
@@ -67,7 +72,7 @@ class StatsTracker:
 
 def batch_rates(metrics: dict, wall_sec: float) -> dict:
     """events/sec (offsets applied) + bytes/sec (bytes written) for one
-    committed batch."""
+    committed batch; in rewrite mode the bytes are the rewritten buckets'."""
     wall = max(wall_sec, 1e-9)
     out = {}
     if metrics.get("offsets_applied") is not None:

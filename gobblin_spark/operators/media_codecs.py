@@ -940,72 +940,6 @@ def _jpeg_finish(frame, coef, qt) -> tuple[int, int, np.ndarray]:
     return fw, fh, np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
 
 
-def _jpeg_decode_scan(buf, pos, frame, scan, qt, huff, restart_interval):
-    fw, fh, comps = frame
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-fw // (8 * hmax))
-    mcuy = -(-fh // (8 * vmax))
-    planes = {
-        c["id"]: np.zeros((mcuy * c["v"] * 8, mcux * c["h"] * 8), dtype=np.float64)
-        for c in comps
-    }
-    reader = _JpegBitReader(buf, pos)
-    pred = {c["id"]: 0 for c in comps}
-    rst = 0
-    for m in range(mcux * mcuy):
-        if restart_interval and m and m % restart_interval == 0:
-            reader.restart(rst)
-            rst += 1
-            pred = {c["id"]: 0 for c in comps}
-        my, mx = divmod(m, mcux)
-        for comp, td, ta in scan:
-            q = qt[comp["tq"]]
-            for by in range(comp["v"]):
-                for bx in range(comp["h"]):
-                    t = reader.huff(huff[(0, td)])
-                    pred[comp["id"]] += _jpeg_extend(reader.bits(t), t)
-                    zz = np.zeros(64, dtype=np.int64)
-                    zz[0] = pred[comp["id"]]
-                    k = 1
-                    while k < 64:
-                        rs = reader.huff(huff[(1, ta)])
-                        r, s = rs >> 4, rs & 15
-                        if s == 0:
-                            if r == 15:  # ZRL
-                                k += 16
-                                continue
-                            break  # EOB
-                        k += r
-                        zz[k] = _jpeg_extend(reader.bits(s), s)
-                        k += 1
-                    nat = np.zeros(64, dtype=np.float64)
-                    nat[_ZZ] = zz * q
-                    block = _DCT_A.T @ nat.reshape(8, 8) @ _DCT_A
-                    y0 = (my * comp["v"] + by) * 8
-                    x0 = (mx * comp["h"] + bx) * 8
-                    planes[comp["id"]][y0 : y0 + 8, x0 : x0 + 8] = block
-    # crop each plane to the component raster, upsample to full size
-    out_planes = []
-    for c in comps:
-        cw = -(-fw * c["h"] // hmax)
-        ch = -(-fh * c["v"] // vmax)
-        p = planes[c["id"]][:ch, :cw]
-        p = np.repeat(np.repeat(p, vmax // c["v"], axis=0), hmax // c["h"], axis=1)
-        out_planes.append(p[:fh, :fw])
-    if len(out_planes) == 1:
-        g = np.clip(np.rint(out_planes[0] + 128), 0, 255).astype(np.uint8)
-        return fw, fh, np.repeat(g[:, :, None], 3, axis=2)
-    if len(out_planes) != 3:
-        raise ValueError(f"unsupported JPEG component count {len(out_planes)}")
-    y, cb, cr = (p + 128 for p in out_planes)
-    cb, cr = cb - 128, cr - 128
-    rgb = np.stack(
-        [y + 1.402 * cr, y - 0.344136 * cb - 0.714136 * cr, y + 1.772 * cb], axis=-1
-    )
-    return fw, fh, np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
-
-
 class _JpegBitWriter:
     def __init__(self):
         self.out = bytearray()

@@ -377,25 +377,6 @@ def _cell_sims(cent_rows, qv, qn):
     )
 
 
-def _argmax_cell(cent_rows, qv_col, qn_col):
-    """Zero-shuffle per-row argmax cell: max rounded cosine, ties → smallest
-    cell (array_position returns the FIRST index of the max and cent_rows is
-    cell-ascending — the same (desc csim, asc cell) order the round-2 window
-    formulation used, without the corpus×n_cells exchange+sort it paid).
-    The quantized vector/norm pair and the sims array are each bound once
-    per row (``_bind_once``) so the n_cells dots run exactly once."""
-    cells = F.array(*[F.lit(c) for c, _, _ in cent_rows])
-    return _bind_once(
-        F.struct(qv_col.alias("q"), qn_col.alias("n")),
-        lambda st: _bind_once(
-            _cell_sims(cent_rows, st["q"], st["n"]),
-            lambda s: F.element_at(
-                cells, F.array_position(s, F.array_max(s)).cast("int")
-            ),
-        ),
-    )
-
-
 def _np_round4(x):
     """Round-half-away-from-zero to 4 decimals on float64 — the same decision
     DuckDB's round() makes; agrees with Spark's F.round everywhere a cosine
