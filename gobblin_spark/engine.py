@@ -21,6 +21,7 @@ is missing or tampered with.
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +42,17 @@ from .state import StateStore
 _META_COLS = ("op", "log_partition", "log_offset")
 
 
+def _committed_sql(committed: dict[int, int] | None) -> str:
+    """SQL for a row's committed watermark: ``committed[log_partition]``,
+    -1 for a partition with nothing applied yet. One ``F.expr`` string, not
+    a ``create_map`` of literal Columns: every Column operation is a py4j
+    round trip, and a 32-partition map costs 64 of them per micro-batch."""
+    if not committed:
+        return "-1L"
+    kv = ", ".join(f"{int(p)}L, {int(v)}L" for p, v in sorted(committed.items()))
+    return f"coalesce(element_at(map({kv}), CAST(log_partition AS BIGINT)), -1L)"
+
+
 def offset_islands(
     batch_df: DataFrame, committed: dict[int, int] | None = None
 ) -> DataFrame:
@@ -53,33 +65,62 @@ def offset_islands(
     and carries the disconnected remainder as ``pending_ranges``.
 
     A missing partition entry in ``committed`` means nothing applied yet
-    (watermark -1). Duplicate offsets collapse; nothing here shuffles more
-    than the (partition, offset) pairs themselves."""
+    (watermark -1). Duplicate offsets collapse. This window sort is the
+    exact reference; ``apply_stream_batch`` proves most partitions
+    contiguous with one aggregate (``offset_runs``) and runs it only for a
+    partition with a gap."""
     from pyspark.sql import Window
 
-    committed = committed or {}
-    cmap = (
-        F.create_map(
-            *[
-                F.lit(x).cast("long")
-                for p, v in sorted(committed.items())
-                for x in (p, v)
-            ]
-        )
-        if committed
-        else F.create_map()
-    )
-    cmt = F.coalesce(F.element_at(cmap, F.col("log_partition").cast("long")), F.lit(-1))
     w = Window.partitionBy("log_partition").orderBy("log_offset")
     return (
-        batch_df.select("log_partition", "log_offset", cmt.alias("_cmt"))
-        .filter(F.col("log_offset") > F.col("_cmt"))
+        batch_df.select("log_partition", "log_offset")
+        .filter(F.expr(f"log_offset > {_committed_sql(committed)}"))
         .dropDuplicates(["log_partition", "log_offset"])
         .withColumn("_grp", F.col("log_offset") - F.row_number().over(w))
         .groupBy("log_partition", "_grp")
         .agg(F.min("log_offset").alias("lo"), F.max("log_offset").alias("hi"))
         .select("log_partition", "lo", "hi")
     )
+
+
+def offset_runs(
+    batch_df: DataFrame, committed: dict[int, int]
+) -> tuple[list[tuple[int, int, int]], list[str]]:
+    """``offset_islands``' runs as ``(log_partition, lo, hi)`` tuples, and
+    the batch's source files (``input_file_name``, fenced rows included),
+    from ONE aggregate per micro-batch: per partition the min, max and
+    distinct count of the offsets above the committed watermark. A partition
+    whose new offsets span exactly their distinct count (``hi - lo + 1 ==
+    n``) is one run; only a partition with a gap pays the window sort."""
+    summary = (
+        batch_df.selectExpr(
+            "log_partition",
+            f"CASE WHEN log_offset > {_committed_sql(committed)} THEN log_offset END AS _o",
+            "input_file_name() AS _f",
+        )
+        .groupBy("log_partition")
+        .agg(
+            F.expr("min(_o) AS lo"),
+            F.expr("max(_o) AS hi"),
+            F.expr("count(DISTINCT _o) AS n"),
+            F.expr("collect_set(_f) AS files"),
+        )
+        .collect()
+    )
+    files = sorted({f for r in summary for f in r["files"] if f})
+    runs: list[tuple[int, int, int]] = []
+    gapped: list[int] = []
+    for r in summary:
+        if r["lo"] is None:
+            continue  # wholly fenced
+        if r["hi"] - r["lo"] + 1 == r["n"]:
+            runs.append((int(r["log_partition"]), r["lo"], r["hi"]))
+        else:
+            gapped.append(int(r["log_partition"]))
+    if gapped:
+        islands = offset_islands(batch_df.filter(F.col("log_partition").isin(gapped)), committed)
+        runs += [(int(r["log_partition"]), r["lo"], r["hi"]) for r in islands.collect()]
+    return sorted(runs), files
 
 
 class CdcEngine:
@@ -182,14 +223,25 @@ class CdcEngine:
         batch = changelog.filter(range_predicate(ranges))
         return self._apply(batch, ranges, batch_id)
 
-    def apply_stream_batch(self, batch_df: DataFrame, batch_id: str | None = None) -> dict:
+    def apply_stream_batch(
+        self,
+        batch_df: DataFrame,
+        batch_id: str | None = None,
+        check_files: Callable[[list[str]], None] | None = None,
+    ) -> dict:
         """Apply a Structured Streaming micro-batch (foreachBatch body).
 
         The micro-batch IS the work unit (≈ FlushControlMessage boundary,
-        SURVEY §2.11); ranges are derived from the batch's own per-partition
-        max offsets, and rows at offsets ≤ the committed watermark are fenced
-        out — engine-level exactly-once layered on top of (and independent of)
-        the stream checkpoint."""
+        SURVEY §2.11); ranges are derived from the batch's own offsets, and
+        rows at offsets ≤ the committed watermark are fenced out —
+        engine-level exactly-once layered on top of (and independent of) the
+        stream checkpoint.
+
+        One aggregate per micro-batch (``offset_runs``) gives each
+        partition's new-offset min, max and distinct count and the batch's
+        source files. ``check_files(files)`` runs on that list before
+        anything commits, fenced batches included (``tail_changelog``'s
+        schema check raises from it)."""
         committed = self.committed_watermarks()
 
         # Offset-gap guard (≈ FineGrainedWatermarkTracker.java:181-200 —
@@ -198,12 +250,14 @@ class CdcEngine:
         # DISCOVERED out of offset order (maxFilesPerTrigger splits, retried
         # uploads), so a micro-batch may carry an offset GAP. Committing
         # max(offset) would fence the late-arriving middle rows out forever —
-        # silent data loss. Instead: gaps-and-islands over the batch's new
-        # offsets finds the applied runs; runs merge with the table's stored
+        # silent data loss. Instead: the batch's new offsets split into
+        # applied runs (islands); runs merge with the table's stored
         # ``pending_ranges``; the watermark advances over the contiguous
         # prefix and the disconnected remainder is carried (atomically, in
         # the same commit) until the gap heals.
-        runs = offset_islands(batch_df, committed).collect()
+        runs, files = offset_runs(batch_df, committed)
+        if check_files is not None and files:
+            check_files(files)
         if not runs:
             return {"batch_id": batch_id, "skipped": True}
 
@@ -219,8 +273,7 @@ class CdcEngine:
         # partition_counts double-counts and the completeness gate's
         # applied==expected can never be satisfied for that partition again.
         ranges = []
-        for r in runs:
-            p, lo, hi = int(r["log_partition"]), int(r["lo"]), int(r["hi"])
+        for p, lo, hi in runs:
             segs = [(lo, hi)]
             for plo, phi in intervals.get(p, []):
                 nxt: list[tuple[int, int]] = []

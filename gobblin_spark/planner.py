@@ -422,13 +422,15 @@ def footer_partition_stats(files: list[str]) -> dict[int, dict] | None:
 def range_predicate(ranges: list[OffsetRange]):
     """Pushdown-friendly filter: partition pruning on log_partition (a hive
     partition column of the changelog) + offset row-group skipping via parquet
-    stats on log_offset."""
-    pred = None
-    for r in ranges:
-        clause = (
-            (F.col("log_partition") == F.lit(r.partition))
-            & (F.col("log_offset") > F.lit(r.low))
-            & (F.col("log_offset") <= F.lit(r.high))
+    stats on log_offset. Built as one SQL string: the same Catalyst predicate
+    as a chain of Column operations, without one py4j round trip per
+    operation (a 32-range chain is ~380 of them)."""
+    if not ranges:
+        return F.lit(False)
+    return F.expr(
+        " OR ".join(
+            f"(log_partition = {int(r.partition)} AND log_offset > {int(r.low)}"
+            f" AND log_offset <= {int(r.high)})"
+            for r in ranges
         )
-        pred = clause if pred is None else (pred | clause)
-    return pred if pred is not None else F.lit(False)
+    )

@@ -22,12 +22,15 @@ the log grows); the same ``foreachBatch`` body works unchanged over
 
 from __future__ import annotations
 
+import json
 import os
+from functools import partial
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .engine import CdcEngine
+from .planner import _footer_map
 from .schema import merge_schemas
 
 
@@ -57,6 +60,84 @@ class SchemaChangedError(RuntimeError):
         self.new_schema = new_schema
 
 
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+# parquet unsigned ints as Spark's reader widens them (pyspark's arrow
+# mapping has no unsigned types)
+_UNSIGNED = {
+    "uint8": T.ShortType(),
+    "uint16": T.IntegerType(),
+    "uint32": T.LongType(),
+    "uint64": T.DecimalType(20, 0),
+}
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every nested field nullable, as a file source reads it."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType), True) for f in dt.fields])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _footer_schema(path: str, infer_ntz: bool) -> str:
+    """``spark.read.parquet(path).schema`` from the file's footer alone, as
+    JSON: the schema Spark wrote into the footer's key-value metadata if
+    present (Spark's reader prefers it too), else the parquet schema mapped
+    the way Spark's reader maps it (INT96 is a TIMESTAMP, a tz-less
+    timestamp a TIMESTAMP_NTZ only under ``inferTimestampNTZ``). Module-level
+    so ``_footer_map`` can dispatch it to a process pool."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    pf = pq.ParquetFile(path)
+    spark_json = (pf.metadata.metadata or {}).get(_SPARK_ROW_METADATA)
+    if spark_json:
+        schema = T.StructType.fromJson(json.loads(spark_json))
+    else:
+        int96 = {
+            c.path for c in (pf.schema.column(i) for i in range(len(pf.schema)))
+            if c.physical_type == "INT96"
+        }
+        schema = T.StructType(
+            [
+                T.StructField(
+                    f.name,
+                    T.TimestampType() if f.name in int96
+                    else _UNSIGNED.get(str(f.type)) or from_arrow_type(f.type, infer_ntz),
+                )
+                for f in pf.schema_arrow
+            ]
+        )
+    return _nullable(schema).json()
+
+
+def _local_path(uri: str) -> str | None:
+    """Filesystem path of a ``file:`` URI or bare path; None for any other
+    scheme (pyarrow cannot open ``s3a://`` and the like)."""
+    u = urlparse(uri)
+    if u.scheme in ("", "file"):
+        return unquote(u.path)
+    return None
+
+
+def widened_schema(spark, frozen: T.StructType, files: list[str]) -> T.StructType:
+    """``frozen`` merged with the read schema of every file in ``files``
+    (equal to ``frozen`` unless a file is wider). Footers are read on the
+    driver with pyarrow, with no Spark job; a non-local file list goes
+    through Spark's ``mergeSchema`` read."""
+    paths = [_local_path(f) for f in files]
+    if None in paths:
+        return merge_schemas(frozen, spark.read.option("mergeSchema", True).parquet(*files).schema)
+    infer_ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    merged = frozen
+    for js in _footer_map(paths, partial(_footer_schema, infer_ntz=infer_ntz)):
+        merged = merge_schemas(merged, T.StructType.fromJson(json.loads(js)))
+    return merged
+
+
 def tail_changelog(
     engine: CdcEngine,
     changelog_path: str,
@@ -76,12 +157,14 @@ def tail_changelog(
 
     ``detect_schema_change``: Structured Streaming freezes the read schema at
     stream start, so a mid-stream widened file would silently DROP its new
-    columns. With detection on, each micro-batch's source files (a metadata-
-    sized distinct of input_file_name) are footer-checked against the frozen
-    schema; a widening raises SchemaChangedError before anything commits —
-    fail-and-restart, the same model lakehouse streaming sinks use. At very
-    high file rates, gate this behind a control-message channel instead of
-    per-batch footer reads (the reference's MetadataUpdateControlMessage).
+    columns. With detection on, each micro-batch's source files (listed by
+    the same aggregate that proves its offsets contiguous, see
+    ``CdcEngine.apply_stream_batch``) are footer-checked against the frozen
+    schema on the driver; a widening raises SchemaChangedError before
+    anything commits — fail-and-restart, the same model lakehouse streaming
+    sinks use. At very high file rates, gate this behind a control-message
+    channel instead of per-batch footer reads (the reference's
+    MetadataUpdateControlMessage).
     """
     spark = engine.spark
     if schema is None:
@@ -93,19 +176,17 @@ def tail_changelog(
     stream = reader.parquet(changelog_path)
     frozen = schema
 
+    def _check(files: list[str]) -> None:
+        merged = widened_schema(spark, frozen, files)
+        if merged != frozen:
+            raise SchemaChangedError(merged)
+
     def _apply(batch_df, epoch_id: int):
-        if detect_schema_change:
-            files = [
-                r[0]
-                for r in batch_df.select(F.input_file_name()).distinct().collect()
-                if r[0]
-            ]
-            if files:
-                actual = spark.read.option("mergeSchema", True).parquet(*files).schema
-                merged = merge_schemas(frozen, actual)
-                if merged != frozen:
-                    raise SchemaChangedError(merged)
-        result = engine.apply_stream_batch(batch_df, batch_id=f"epoch-{epoch_id:06d}")
+        result = engine.apply_stream_batch(
+            batch_df,
+            batch_id=f"epoch-{epoch_id:06d}",
+            check_files=_check if detect_schema_change else None,
+        )
         if on_batch is not None:
             on_batch(result)
 
@@ -147,8 +228,6 @@ def drain_evolving(
     surfaces a widened file, the failed (uncommitted) batch replays under the
     merged schema on the next attempt and the new column flows through the
     engine's existing schema-merge-on-write path into the table."""
-    import json
-
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     results: list[dict] = []  # shared across attempts: batches applied before

@@ -7,16 +7,21 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import random
 import shutil
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors.exceptions.captured import StreamingQueryException
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gobblin_spark.fixtures import _to_arrow, make_changelog
 from gobblin_spark.lake import SnapshotTable
-from gobblin_spark.engine import CdcEngine
-from gobblin_spark.streaming import drain, drain_evolving
+from gobblin_spark.engine import CdcEngine, offset_islands, offset_runs
+from gobblin_spark.schema import merge_schemas
+from gobblin_spark.streaming import drain, drain_evolving, tail_changelog, widened_schema
 
 from conftest import table_fingerprint
 from helpers import PAGES_SCHEMA, oracle_final, visible_with_offset
@@ -87,8 +92,6 @@ def test_stream_schema_evolution_mid_tail(spark, stream_env):
 
     _land(seg_a, src, "part-000.parquet")
     frozen = spark.read.parquet(src).schema  # the schema the stream froze
-
-    import pyarrow as pa
 
     widened = _to_arrow(seg_b.reset_index(drop=True)).append_column(
         "source_tag", pa.array(["crawl-b"] * len(seg_b), type=pa.string())
@@ -390,3 +393,164 @@ def test_schema_sentinel_roundtrip():
     assert parsed == schema
     # an unrelated error that merely MENTIONS the class name must not match
     assert _SCHEMA_SENTINEL not in "user code raised SchemaChangedError-like text"
+
+
+# --------------------------------------------- one-aggregate micro-batch path
+
+_COMMITTED = {0: 9, 1: -1, 3: 40}  # partition 2 has nothing committed
+
+
+def _offsets_case(kind: str, seed: int) -> list[tuple[int, int]]:
+    """(log_partition, log_offset) rows straddling ``_COMMITTED``."""
+    rng = random.Random(seed)
+    if kind == "empty":
+        return []
+    rows = []
+    for p in range(4):
+        wm = _COMMITTED.get(p, -1)
+        lo = max(0, wm - rng.randint(0, 6))  # some rows at/below the watermark
+        hi = lo + rng.randint(8, 40)
+        if kind == "fenced" and p == 3:
+            hi = wm  # every row of partition 3 is already committed
+        offs = list(range(lo, hi + 1))
+        if kind == "gaps":
+            offs = [o for o in offs if rng.random() > 0.2]
+        if kind == "gap_and_duplicate":
+            # one hole and one repeat above the watermark: the row count
+            # still spans lo..hi, only the distinct count shows the hole
+            hole, dup = rng.sample([o for o in offs[1:-1] if o > wm], 2)
+            offs = [o for o in offs if o != hole] + [dup]
+        rows += [(p, o) for o in offs]
+    if kind == "duplicates":
+        rows += rng.sample(rows, len(rows) // 3)
+    return rows
+
+
+@pytest.mark.parametrize(
+    "kind,seed",
+    [
+        (k, s)
+        for k in ("contiguous", "gaps", "duplicates", "gap_and_duplicate", "fenced")
+        for s in (11, 12, 13)
+    ]
+    + [("empty", 0)],
+)
+def test_offset_runs_equal_window_reference(spark, tmp_path, kind, seed):
+    """The one-aggregate path (min/max/count-distinct, window only for a
+    gapped partition) yields exactly ``offset_islands``' runs, and lists the
+    batch's source files, fenced rows' files included."""
+    rows = _offsets_case(kind, seed)
+    random.Random(seed).shuffle(rows)
+    half = len(rows) // 2
+    for i, part in enumerate((rows[:half], rows[half:])):
+        pq.write_table(
+            pa.table(
+                {
+                    "log_partition": pa.array([p for p, _ in part], pa.int32()),
+                    "log_offset": pa.array([o for _, o in part], pa.int64()),
+                }
+            ),
+            str(tmp_path / f"f{i}.parquet"),
+        )
+    df = spark.read.parquet(str(tmp_path))
+    runs, files = offset_runs(df, _COMMITTED)
+    ref = sorted(
+        (r["log_partition"], r["lo"], r["hi"])
+        for r in offset_islands(df, _COMMITTED).collect()
+    )
+    assert runs == ref
+    if kind == "empty":
+        assert runs == [] and files == []
+    else:
+        assert runs
+        assert [os.path.basename(f) for f in files] == ["f0.parquet", "f1.parquet"]
+    if kind == "fenced":
+        assert 3 not in {p for p, _, _ in runs}
+
+
+def test_stream_microbatch_job_count(spark, stream_env):
+    """A non-fold micro-batch runs at most 5 Spark jobs, schema check
+    included: the offset aggregate (3 adaptive jobs) and the delta write
+    (2). Streaming submits every job of a query under its run id."""
+    clog, seg_a, seg_b, src, table, engine, ckpt = stream_env
+    engine.merge_mode = "delta"
+    quarter = len(clog) // 4
+    for i in range(4):
+        _land(clog.iloc[i * quarter : (i + 1) * quarter], src, f"f{i}.parquet")
+    results: list[dict] = []
+    q = tail_changelog(
+        engine, src, ckpt, available_now=True, max_files_per_trigger=1, on_batch=results.append
+    )
+    q.awaitTermination()
+    assert len(results) == 4 and not any(r.get("skipped") for r in results)
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) / len(results) <= 5, len(jobs)
+
+
+def _spark_file(spark, tmp_path, name: str, df) -> str:
+    out = str(tmp_path / name)
+    df.coalesce(1).write.parquet(out)
+    return next(os.path.join(out, f) for f in os.listdir(out) if f.endswith(".parquet"))
+
+
+def test_footer_schema_check_agrees_with_spark_reader(spark, tmp_path):
+    """The driver-side footer read yields the same merged schema as Spark's
+    ``mergeSchema`` reader, file by file, under both TIMESTAMP_NTZ
+    inference settings."""
+    clog = make_changelog(40, n_urls=10, n_partitions=2, seed=3)
+    base = _to_arrow(clog.reset_index(drop=True))
+    arrow_files = {
+        "changelog": base,
+        "int_to_long": base.set_column(
+            base.schema.get_field_index("log_partition"),
+            "log_partition",
+            base.column("log_partition").cast(pa.int64()),
+        ),
+        "added_column": base.append_column("source_tag", pa.array(["x"] * len(base))),
+        "ntz": base.append_column("seen", base.column("warc_ts")),
+        "unsigned": base.append_column("u8", pa.array([1] * len(base), pa.uint8())).append_column(
+            "u32", pa.array([1] * len(base), pa.uint32())
+        ),
+    }
+    files = []
+    for name, tbl in arrow_files.items():
+        files.append(str(tmp_path / f"{name}.parquet"))
+        pq.write_table(tbl, files[-1])
+    frozen = spark.read.parquet(files[0]).schema
+    sdf = spark.read.parquet(files[0])
+    same = _spark_file(spark, tmp_path, "spark_changelog", sdf)
+    files.append(same)
+    files.append(
+        _spark_file(spark, tmp_path, "spark_ntz", sdf.withColumn("seen", F.col("warc_ts").cast("timestamp_ntz")))
+    )
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    before = spark.conf.get(key)
+    try:
+        for ntz in ("false", "true"):
+            spark.conf.set(key, ntz)
+            for f in files:
+                want = merge_schemas(frozen, spark.read.option("mergeSchema", True).parquet(f).schema)
+                assert widened_schema(spark, frozen, ["file://" + f]) == want, (ntz, f)
+    finally:
+        spark.conf.set(key, before)
+    # a multi-file batch of unwidened files leaves the frozen schema as is
+    assert widened_schema(spark, frozen, ["file://" + files[0], "file://" + same]) == frozen
+
+
+def test_widened_fenced_replay_raises_before_commit(spark, stream_env):
+    """A widened file aborts its micro-batch before commit even when every
+    row in it is already committed (a replay after checkpoint loss)."""
+    clog, seg_a, seg_b, src, table, engine, ckpt = stream_env
+    _land(seg_a, src, "part-000.parquet")
+    frozen = spark.read.parquet(src).schema
+    drain(engine, src, ckpt)
+    version = table.version
+
+    replay = os.path.join(os.path.dirname(src), "replay")
+    os.makedirs(replay)
+    widened = _to_arrow(seg_a.reset_index(drop=True))
+    widened = widened.append_column("source_tag", pa.array(["x"] * len(widened)))
+    pq.write_table(widened, os.path.join(replay, "part-000.parquet"))
+    with pytest.raises(StreamingQueryException, match="stream schema widened"):
+        drain(engine, replay, ckpt + "-replay", schema=frozen)
+    assert table.version == version
