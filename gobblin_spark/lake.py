@@ -326,25 +326,28 @@ class SnapshotTable:
             "schemas": {**head["schemas"], str(sid + 1): schema.jsonValue()},
         }
 
-    def exchange_width(self) -> int:
-        """Partitions of every ``_bucket`` exchange of a commit (the engine's
-        and ``merge``'s): ``min(n_buckets, defaultParallelism)`` on a local
-        master, ``n_buckets`` elsewhere. Hash partitioning on ``_bucket``
-        keeps every bucket whole inside one task at any width, so the files a
-        commit writes do not depend on it, and one width on both sides lets
-        the MERGE join reuse the engine's exchange. The width follows the
-        cores, not the bucket count, because each task has a fixed cost even
-        with no Python in the stage: at 32 buckets on 4 cores, a width of
+    def exchange_width(self, n_buckets: int | None = None) -> int:
+        """Partitions of every ``_bucket`` exchange (the engine's,
+        ``merge``'s, the delta fold's, the whole-table rewrites' and
+        ``changes_between``'s), for a layout of ``n_buckets`` (default: the
+        table's): ``min(n_buckets, defaultParallelism)`` on a local master,
+        ``n_buckets`` elsewhere. Hash partitioning on ``_bucket`` keeps every
+        bucket whole inside one task at any width, so the files a commit
+        writes do not depend on it, and one width on both sides lets the
+        MERGE join reuse the engine's exchange. The width follows the cores,
+        not the bucket count, because each task has a fixed cost even with no
+        Python in the stage: at 32 buckets on 4 cores, a width of
         ``n_buckets`` cut the 60k-event backfill from 12.6k–13.8k to
-        8.9k–11.6k events/s (3 pairs). Only a local master has a fixed core
-        count; on a cluster master ``defaultParallelism`` is max(executor
-        cores registered so far, 2), which is 2 before executors register and
-        moves under dynamic allocation, so there the width stays
-        ``n_buckets``."""
+        8.9k–11.6k events/s (3 pairs), and a 32-task fold write took
+        0.9–1.1 s. Only a local master has a fixed core count; on a cluster
+        master ``defaultParallelism`` is max(executor cores registered so
+        far, 2), which is 2 before executors register and moves under
+        dynamic allocation, so there the width stays ``n_buckets``."""
+        n = int(n_buckets or self.n_buckets)
         sc = self.spark.sparkContext
         if sc.master == "local" or sc.master.startswith("local["):
-            return min(self.n_buckets, sc.defaultParallelism)
-        return self.n_buckets
+            return min(n, sc.defaultParallelism)
+        return n
 
     def bucket_expr(self, col: str | None = None, n: int | None = None):
         """Deterministic layout bucket of the merge key (xxhash64, the same
@@ -482,11 +485,12 @@ class SnapshotTable:
             raise ValueError(f"sort_order columns not in schema: {bad}")
         self._commit(self._successor(self.manifest(), sort_order=list(cols)))
 
-    def _clustered(self, df: DataFrame, m: dict, n_parts: int | None = None) -> DataFrame:
-        """Bucket-partitioned and (when a sort order is set) sorted within
-        partitions. sortWithinPartitions adds no exchange — the hash
-        partitioning Catalyst sees is preserved."""
-        df = df.repartition(n_parts or int(m["n_buckets"]), F.col("_bucket"))
+    @staticmethod
+    def _clustered(df: DataFrame, m: dict) -> DataFrame:
+        """``df``, already hash-partitioned on ``_bucket`` by the caller's one
+        exchange, sorted within partitions by ``_bucket`` and ``m``'s sort
+        order when it has one. sortWithinPartitions adds no exchange — the
+        hash partitioning Catalyst sees is preserved."""
         so = [c for c in m.get("sort_order") or [] if c in df.columns]
         if so:
             df = df.sortWithinPartitions("_bucket", *so)
@@ -1259,12 +1263,12 @@ class SnapshotTable:
         new = conform(
             self.read(buckets=changed, include_hidden=True, at_version=v_to), full
         )
-        nb = self.n_buckets
+        width = self.exchange_width()
         old = old.withColumn("_bucket", self.bucket_expr()).repartition(
-            nb, F.col("_bucket")
+            width, F.col("_bucket")
         )
         new = new.withColumn("_bucket", self.bucket_expr()).repartition(
-            nb, F.col("_bucket")
+            width, F.col("_bucket")
         )
         o = old.select([F.col(c).alias(f"o_{c}") for c in [*names, "_bucket"]])
         n = new.select([F.col(c).alias(f"n_{c}") for c in [*names, "_bucket"]])
@@ -1366,10 +1370,7 @@ class SnapshotTable:
         if mode == "delta":
             data_rel = self._alloc_data_rel(self._next_version(m["version"] + 1))
             out_path = os.path.join(self.root, data_rel)
-            u_out = u.select([*names, "_bucket"])
-            so = [c for c in m.get("sort_order") or [] if c in u_out.columns]
-            if so:
-                u_out = u_out.sortWithinPartitions("_bucket", *so)
+            u_out = self._clustered(u.select([*names, "_bucket"]), m)
             self._writer(u_out, m).partitionBy("_bucket").parquet(out_path)
             file_stats = _bucket_dir_stats(out_path)
             info: dict = {}
@@ -1461,12 +1462,9 @@ class SnapshotTable:
 
         data_rel = self._alloc_data_rel(self._next_version(m["version"] + 1))
         out_path = os.path.join(self.root, data_rel)
-        # sortWithinPartitions only — no repartition, the co-partitioned
-        # join's single exchange per side stays the whole shuffle story
-        so = [c for c in m.get("sort_order") or [] if c in merged.columns]
-        if so:
-            merged = merged.sortWithinPartitions("_bucket", *so)
-        self._writer(merged, m).partitionBy("_bucket").parquet(out_path)
+        # sorted only — no repartition, the co-partitioned join's single
+        # exchange per side stays the whole shuffle story
+        self._writer(self._clustered(merged, m), m).partitionBy("_bucket").parquet(out_path)
 
         # Manifest entries advance only for buckets the write actually
         # produced. `affected` may be a superset of the buckets present in
@@ -1508,12 +1506,16 @@ class SnapshotTable:
         ``max_generations`` is folded back to ONE entry in the SAME commit —
         its generations are read, LWW-collapsed (tombstones kept: they still
         fence replays), and rewritten to a fold dir referenced by the new
-        manifest. Cost is O(overflowing buckets), amortized
-        O(1/max_generations) of the table per commit stream; manifest size
-        stays ≤ n_buckets·max_generations entries forever. A crash before the
-        pointer swap leaves only an unreferenced fold dir — the usual replay
-        story. Rewrites ``overlay``/``removed`` in place; returns the folded
-        buckets."""
+        manifest. The rewrite takes the commit's plan shape: ONE hash
+        exchange on ``_bucket``, ``exchange_width()`` wide, which the LWW
+        groupBy on (``_bucket``, key) rides as in ``CdcEngine._updates``; the
+        write runs one task per partition of that exchange, not one per
+        bucket, and still writes one file per bucket. Cost is O(overflowing
+        buckets), amortized O(1/max_generations) of the table per commit
+        stream; manifest size stays ≤ n_buckets·max_generations entries
+        forever. A crash before the pointer swap leaves only an unreferenced
+        fold dir — the usual replay story. Rewrites ``overlay``/``removed`` in
+        place; returns the folded buckets."""
         cap = int(new.get("max_generations", 8))
         # only buckets this commit appended to can newly overflow, so the
         # trigger scans the overlay (O(batch)), never the whole index
@@ -1528,15 +1530,17 @@ class SnapshotTable:
                 by_schema.setdefault(ent["schema_id"], []).append(
                     os.path.join(self.root, ent["data"], f"_bucket={b}")
                 )
+        scan = self._scan_eras(new, list(by_schema.items()))
         collapsed = lww_latest(
-            self._scan_eras(new, list(by_schema.items())),
-            [self.key],
+            scan.withColumn("_bucket", self.bucket_expr()).repartition(
+                self.exchange_width(), F.col("_bucket")
+            ),
+            ["_bucket", self.key],
             ["_version_ts", "_version_off"],
-        ).select(_with_hidden(self._era_schema(new)).fieldNames())
-        collapsed = collapsed.withColumn("_bucket", self.bucket_expr())
-        self._writer(
-            self._clustered(collapsed, new, n_parts=len(overflow)), new
-        ).partitionBy("_bucket").parquet(fold_path)
+        ).select(*_with_hidden(self._era_schema(new)).fieldNames(), "_bucket")
+        self._writer(self._clustered(collapsed, new), new).partitionBy("_bucket").parquet(
+            fold_path
+        )
         fold_stats = _bucket_dir_stats(fold_path)
         for b in overflow:
             if b in fold_stats:
@@ -1570,8 +1574,9 @@ class SnapshotTable:
         ``delete_where(mode="rewrite")``, which differ only in the row
         filter ``keep`` (None keeps every row, tombstones included): the
         rows of ``read(include_hidden=True)`` that pass ``keep`` are
-        re-bucketed into ``n_buckets`` (default: unchanged), clustered by the
-        sort order, written with the table's ``write.*`` options and
+        re-bucketed into ``n_buckets`` (default: unchanged) through one
+        ``_bucket`` exchange, ``exchange_width(n_buckets)`` wide, clustered
+        by the sort order, written with the table's ``write.*`` options and
         committed with per-file key ranges in one snapshot."""
         m = self.manifest()
         nb = int(n_buckets or m["n_buckets"])
@@ -1580,9 +1585,8 @@ class SnapshotTable:
             df = df.filter(keep)
         data_rel = self._alloc_data_rel(self._next_version(m["version"] + 1))
         out_path = os.path.join(self.root, data_rel)
-        self._writer(self._clustered(df, m, n_parts=nb), m).partitionBy("_bucket").parquet(
-            out_path
-        )
+        df = df.repartition(self.exchange_width(nb), F.col("_bucket"))
+        self._writer(self._clustered(df, m), m).partitionBy("_bucket").parquet(out_path)
         file_stats = _bucket_dir_stats(out_path)
         # Iceberg-style data-file column stats: per-file [min,max] of the
         # merge key, captured once at rewrite time from the parquet footers.

@@ -35,6 +35,13 @@ _DEFAULTS = {
     "spark.sql.files.openCostInBytes": "4194304",
     "spark.ui.enabled": "false",
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
+    # List every scan's paths on the driver. Above this many paths Spark
+    # lists them with a job of one task per path: a delta fold passing 128
+    # bucket-generation dirs paid ~1 s for it on 4 cores. SnapshotTable
+    # commits by os.replace and so lives on a POSIX filesystem, where a dir
+    # listing costs microseconds. A caller who builds their own session
+    # (not through get_spark) does not get this and pays the job.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": str(2**31 - 1),
     # local[N] runs the whole "cluster" in the driver JVM — size its heap for
     # 32 concurrent task threads (on a real cluster this maps to executor
     # memory; the sandbox host has 128 GiB).

@@ -45,6 +45,14 @@ def test_delta_generations_capped_and_fold_preserves_lww(spark, tmp_path):
         oracle[url] = (i % 50, i, f"v{i}", deleted)
         res = t.merge(_updates(spark, rows), mode="delta")
         folded_any = folded_any or bool(res.get("folded_buckets"))
+        # a fold writes each bucket whole from one task: one file, as counted
+        for b in res.get("folded_buckets") or []:
+            e = t.manifest()["buckets"].get(str(b))
+            if e is None:  # the bucket held only rows that no longer exist
+                continue
+            d = os.path.join(t.root, e["data"], f"_bucket={b}")
+            assert len([f for f in os.listdir(d) if f.endswith(".parquet")]) == 1
+            assert e["files"] == 1
         # invariant after EVERY commit: no bucket exceeds the cap
         for e in t.manifest()["buckets"].values():
             entries = e if isinstance(e, list) else [e]

@@ -151,6 +151,65 @@ def test_engine_rewrite_commit_single_exchange_per_side(spark, tmp_path, monkeyp
     assert plan.count("Exchange") == 2, plan
 
 
+def test_fold_and_compact_bucket_exchange_is_core_wide(spark, tmp_path, monkeypatch):
+    """What a delta commit's generation fold and a compaction write, at
+    n_buckets=8 on local[4]: the fold's frame has exactly one exchange, on
+    _bucket and 4 wide, which its LWW and the sort ride; compaction's
+    _bucket exchange is 4 wide too."""
+    from gobblin_spark.lake import SnapshotTable
+    from tests.test_iceberg_backend import SCHEMA, _updates
+
+    t = SnapshotTable.create(
+        spark, str(tmp_path / "t"), SCHEMA, key="url", n_buckets=8,
+        max_generations=1, sort_order=["url"],
+    )
+    captured = []
+    write = SnapshotTable._writer
+
+    def writer(df, m):
+        captured.append(df)
+        return write(df, m)
+
+    monkeypatch.setattr(SnapshotTable, "_writer", staticmethod(writer))
+    t.merge(_updates(spark, [(f"u{i}", "a", 1, i) for i in range(40)]), mode="delta")
+    res = t.merge(_updates(spark, [(f"u{i}", "b", 2, i) for i in range(40)]), mode="delta")
+    assert res["folded_buckets"]
+    plan = _explain(captured[-1], "simple")  # the fold writes after the delta
+    widths = re.findall(r"Exchange hashpartitioning\(_bucket#\d+, (\d+)\)", plan)
+    assert widths == ["4"] and plan.count("Exchange") == 1, plan
+
+    t.compact()
+    plan = _explain(captured[-1], "simple")
+    widths = re.findall(r"Exchange hashpartitioning\(_bucket#\d+, (\d+)\)", plan)
+    assert widths == ["4"], plan
+
+
+def test_read_plans_without_listing_job(spark, tmp_path):
+    """Planning a read whose scan passes more than 32 bucket dirs (Spark's
+    default parallelPartitionDiscovery.threshold) starts no Spark job: the
+    session lists the dirs on the driver."""
+    from gobblin_spark.lake import SnapshotTable
+    from tests.test_iceberg_backend import SCHEMA, _updates
+
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), SCHEMA, key="url", n_buckets=40)
+    for gen in range(2):
+        rows = [(f"u{i}", f"v{gen}", gen, i) for i in range(400)]
+        t.merge(_updates(spark, rows), mode="delta")
+    gens = [len(t._bucket_entries(e)) for e in t.manifest()["buckets"].values()]
+    assert gens.count(2) > 32, gens
+
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-read", "plan a multi-generation read")
+    try:
+        df = t.read(include_hidden=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed async
+    assert sc.statusTracker().getJobIdsForGroup("plan-read") == []
+    assert df.count() == 400
+
+
 def test_exchange_width_follows_cores_only_on_local_master(spark, tmp_path, monkeypatch):
     """A local master has a fixed core count; a cluster master's
     defaultParallelism counts only the executors registered so far, so
