@@ -11,7 +11,7 @@ Re-imagines Apache Gobblin's work-unit + watermark model (reference:
 - ``lake``       snapshot/manifest parquet table with atomic commit + table
                  properties (Iceberg-shaped sink; ≈ IcebergMetadataWriter)
 - ``engine``     plan → transform → merge → checkpoint loop (≈ AbstractJobLauncher)
-- ``streaming``  Structured Streaming tail (foreachBatch → fenced apply)
+- ``streaming``  file tail as a driver loop (list → offset proof → fenced apply)
 - ``sources``    file-based incremental / JDBC watermark-pull / Kafka config
                  (≈ FileBasedSource, QueryBasedSource+Partitioner, KafkaSource)
 - ``converters`` the reference's Converter surface as DataFrame combinators

@@ -21,7 +21,6 @@ is missing or tampered with.
 from __future__ import annotations
 
 import time
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,7 +30,9 @@ from .extract import extract_text_col
 from .lake import SnapshotTable
 from .metrics import StatsTracker, batch_rates, lineage_entry, partition_lag
 from .planner import (
+    _PART_DIR_RE,
     OffsetRange,
+    _local_path,
     discover_watermarks,
     plan_batches,
     range_predicate,
@@ -53,6 +54,10 @@ def _committed_sql(committed: dict[int, int] | None) -> str:
     return f"coalesce(element_at(map({kv}), CAST(log_partition AS BIGINT)), -1L)"
 
 
+# a row with no partition or no offset is in no run, so it is never applied
+_HAS_OFFSET = "log_partition IS NOT NULL AND log_offset IS NOT NULL"
+
+
 def offset_islands(
     batch_df: DataFrame, committed: dict[int, int] | None = None
 ) -> DataFrame:
@@ -65,16 +70,16 @@ def offset_islands(
     and carries the disconnected remainder as ``pending_ranges``.
 
     A missing partition entry in ``committed`` means nothing applied yet
-    (watermark -1). Duplicate offsets collapse. This window sort is the
-    exact reference; ``apply_stream_batch`` proves most partitions
-    contiguous with one aggregate (``offset_runs``) and runs it only for a
-    partition with a gap."""
+    (watermark -1). Duplicate offsets collapse; rows with a NULL partition
+    or offset are skipped. This window sort is the exact reference;
+    ``offset_runs`` and ``file_offset_runs`` prove most partitions
+    contiguous without it."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("log_partition").orderBy("log_offset")
     return (
         batch_df.select("log_partition", "log_offset")
-        .filter(F.expr(f"log_offset > {_committed_sql(committed)}"))
+        .filter(F.expr(f"{_HAS_OFFSET} AND log_offset > {_committed_sql(committed)}"))
         .dropDuplicates(["log_partition", "log_offset"])
         .withColumn("_grp", F.col("log_offset") - F.row_number().over(w))
         .groupBy("log_partition", "_grp")
@@ -83,31 +88,23 @@ def offset_islands(
     )
 
 
-def offset_runs(
-    batch_df: DataFrame, committed: dict[int, int]
-) -> tuple[list[tuple[int, int, int]], list[str]]:
-    """``offset_islands``' runs as ``(log_partition, lo, hi)`` tuples, and
-    the batch's source files (``input_file_name``, fenced rows included),
-    from ONE aggregate per micro-batch: per partition the min, max and
-    distinct count of the offsets above the committed watermark. A partition
-    whose new offsets span exactly their distinct count (``hi - lo + 1 ==
-    n``) is one run; only a partition with a gap pays the window sort."""
+def offset_runs(batch_df: DataFrame, committed: dict[int, int]) -> list[tuple[int, int, int]]:
+    """``offset_islands``' runs as ``(log_partition, lo, hi)`` tuples from
+    ONE aggregate: per partition the min, max and distinct count of the
+    offsets above the committed watermark. A partition whose new offsets
+    span exactly their distinct count (``hi - lo + 1 == n``) is one run;
+    only a partition with a gap pays the window sort. The path for a batch
+    that is not a list of local files (the Kafka tail, object stores)."""
     summary = (
-        batch_df.selectExpr(
+        batch_df.where(_HAS_OFFSET)
+        .selectExpr(
             "log_partition",
             f"CASE WHEN log_offset > {_committed_sql(committed)} THEN log_offset END AS _o",
-            "input_file_name() AS _f",
         )
         .groupBy("log_partition")
-        .agg(
-            F.expr("min(_o) AS lo"),
-            F.expr("max(_o) AS hi"),
-            F.expr("count(DISTINCT _o) AS n"),
-            F.expr("collect_set(_f) AS files"),
-        )
+        .agg(F.expr("min(_o) AS lo"), F.expr("max(_o) AS hi"), F.expr("count(DISTINCT _o) AS n"))
         .collect()
     )
-    files = sorted({f for r in summary for f in r["files"] if f})
     runs: list[tuple[int, int, int]] = []
     gapped: list[int] = []
     for r in summary:
@@ -120,7 +117,54 @@ def offset_runs(
     if gapped:
         islands = offset_islands(batch_df.filter(F.col("log_partition").isin(gapped)), committed)
         runs += [(int(r["log_partition"]), r["lo"], r["hi"]) for r in islands.collect()]
-    return sorted(runs), files
+    return sorted(runs)
+
+
+def _file_offsets(path: str):
+    """One local parquet file's ``(log_partition, log_offset)`` as two int64
+    arrays, rows with a NULL in either dropped. A file under a
+    ``log_partition=N/`` dir takes N from the path, as Spark's partition
+    discovery does (the innermost such dir wins)."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    dirs = _PART_DIR_RE.findall(path)
+    cols = ["log_offset"] if dirs else ["log_partition", "log_offset"]
+    t = pq.ParquetFile(path).read(columns=cols).drop_null()
+    off = t.column("log_offset").to_numpy().astype(np.int64)
+    if dirs:
+        return np.full(len(off), int(dirs[-1]), np.int64), off
+    return t.column("log_partition").to_numpy().astype(np.int64), off
+
+
+def file_offset_runs(
+    files: list[str], committed: dict[int, int]
+) -> list[tuple[int, int, int]] | None:
+    """``offset_islands``' runs proved on the driver from the batch's own
+    files: their ``log_partition``/``log_offset`` columns are read with
+    pyarrow, the offsets above the committed watermark are made unique per
+    partition, and the sorted pairs split wherever the partition changes or
+    the offset steps by more than one. No Spark job. None when a file is not
+    local (the caller runs ``offset_runs``)."""
+    import numpy as np
+
+    paths = [_local_path(f) for f in files]
+    if None in paths:
+        return None
+    if not paths:
+        return []
+    parts, offs = zip(*map(_file_offsets, paths))
+    p, o = np.concatenate(parts), np.concatenate(offs)
+    keys, inv = np.unique(p, return_inverse=True)
+    wm = np.array([committed.get(int(k), -1) for k in keys], np.int64)
+    new = o > wm[inv]
+    pairs = np.unique(np.stack([p[new], o[new]], axis=1), axis=0)
+    if not len(pairs):
+        return []
+    pp, oo = pairs[:, 0], pairs[:, 1]
+    cuts = np.flatnonzero((np.diff(pp) != 0) | (np.diff(oo) != 1)) + 1
+    starts, ends = np.r_[0, cuts], np.r_[cuts - 1, len(pp) - 1]
+    return [(int(pp[a]), int(oo[a]), int(oo[b])) for a, b in zip(starts, ends)]
 
 
 class CdcEngine:
@@ -224,24 +268,22 @@ class CdcEngine:
         return self._apply(batch, ranges, batch_id)
 
     def apply_stream_batch(
-        self,
-        batch_df: DataFrame,
-        batch_id: str | None = None,
-        check_files: Callable[[list[str]], None] | None = None,
+        self, batch_df: DataFrame, batch_id: str | None = None, files: list[str] | None = None
     ) -> dict:
-        """Apply a Structured Streaming micro-batch (foreachBatch body).
+        """Apply one micro-batch: a pass of the file tail, or a Kafka
+        ``foreachBatch`` call.
 
         The micro-batch IS the work unit (≈ FlushControlMessage boundary,
         SURVEY §2.11); ranges are derived from the batch's own offsets, and
-        rows at offsets ≤ the committed watermark are fenced out —
-        engine-level exactly-once layered on top of (and independent of) the
-        stream checkpoint.
+        rows at offsets ≤ the committed watermark are fenced out. The table
+        commit is the only exactly-once state.
 
-        One aggregate per micro-batch (``offset_runs``) gives each
-        partition's new-offset min, max and distinct count and the batch's
-        source files. ``check_files(files)`` runs on that list before
-        anything commits, fenced batches included (``tail_changelog``'s
-        schema check raises from it)."""
+        ``files``: the batch's source files. When given and all local, the
+        offset runs are proved on the driver from the files themselves
+        (``file_offset_runs``), with no Spark job; otherwise one aggregate
+        over ``batch_df`` proves them (``offset_runs``). A row whose
+        ``log_partition`` or ``log_offset`` is NULL is in no run, so it is
+        never applied."""
         committed = self.committed_watermarks()
 
         # Offset-gap guard (≈ FineGrainedWatermarkTracker.java:181-200 —
@@ -255,9 +297,9 @@ class CdcEngine:
         # ``pending_ranges``; the watermark advances over the contiguous
         # prefix and the disconnected remainder is carried (atomically, in
         # the same commit) until the gap heals.
-        runs, files = offset_runs(batch_df, committed)
-        if check_files is not None and files:
-            check_files(files)
+        runs = None if files is None else file_offset_runs(files, committed)
+        if runs is None:
+            runs = offset_runs(batch_df, committed)
         if not runs:
             return {"batch_id": batch_id, "skipped": True}
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -66,6 +67,16 @@ def discover_low_watermarks(changelog: DataFrame) -> dict[int, int]:
 
 
 _PART_DIR_RE = re.compile(r"(?:^|/)log_partition=(\d+)/")
+
+
+def _local_path(uri: str) -> str | None:
+    """Filesystem path of a ``file:`` URI or bare path; None for any other
+    scheme (pyarrow cannot open ``s3a://`` and the like)."""
+    u = urlparse(uri)
+    if u.scheme in ("", "file"):
+        return unquote(u.path)
+    return None
+
 
 # footer reads are independent ~KB-sized ops; a pool keeps plan latency
 # O(files / workers) instead of O(files) — at 10^5 files the difference is

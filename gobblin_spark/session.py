@@ -42,6 +42,15 @@ _DEFAULTS = {
     # listing costs microseconds. A caller who builds their own session
     # (not through get_spark) does not get this and pays the job.
     "spark.sql.sources.parallelPartitionDiscovery.threshold": str(2**31 - 1),
+    # Do not capture a Python call site for every DataFrame and Column
+    # operation. The capture costs ~3 extra py4j round trips per operation
+    # (getActiveSession, a conf read, an origin set and clear): about half
+    # the ~1,500 round trips of a tail micro-batch. Two costs: a DataFrame
+    # error no longer names the Python line that built the failing
+    # expression, and, being a static conf, it is only in effect for a
+    # session built here — one built another way (e.g.
+    # scripts/replay_job.py) still captures.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # local[N] runs the whole "cluster" in the driver JVM — size its heap for
     # 32 concurrent task threads (on a real cluster this maps to executor
     # memory; the sandbox host has 128 GiB).

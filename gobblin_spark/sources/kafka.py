@@ -7,10 +7,11 @@ Spark's Kafka source implements the reference's whole offset state machine —
 bootstrap-with-earliest/latest, out-of-range reset, per-partition resume —
 as options; this module maps the reference's knobs onto them, maps the
 source's WIRE SCHEMA (key/value binary + topic/partition/offset/timestamp)
-onto the engine's changelog shape, and wires the stream into the same
-``apply_stream_batch`` foreachBatch body as the file tail — the engine is
-source-agnostic past the plan, including the gaps-and-islands offset
-fencing (exactly-once survives checkpoint loss).
+onto the engine's changelog shape, and applies each ``foreachBatch``
+micro-batch with the same ``apply_stream_batch`` as the file tail — the
+engine is source-agnostic past the plan, including the gaps-and-islands
+offset fencing (exactly-once survives checkpoint loss). A Kafka batch is
+not a file list, so its offsets are proved by ``engine.offset_runs``.
 
 No Kafka broker (and no spark-sql-kafka jar) exists in the sandbox, so
 ``tail_kafka`` is exercised end-to-end in tests through a STATIC DataFrame

@@ -21,6 +21,19 @@ import os
 import tempfile
 
 
+def write_json_atomic(path: str, doc: dict) -> None:
+    """Write ``doc`` to a temp file in ``path``'s dir, then rename it over
+    ``path``: a reader sees the old document or the new one, never a part."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(doc, f, indent=1, default=str)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+
+
 class StateStore:
     def __init__(self, root: str):
         self.root = root
@@ -40,8 +53,8 @@ class StateStore:
             default=-1,
         )
         path = os.path.join(d, f"{seq:06d}.json")
-        self._atomic_write(path, doc)
-        self._atomic_write(os.path.join(d, "current.json"), {"seq": seq, **doc})
+        write_json_atomic(path, doc)
+        write_json_atomic(os.path.join(d, "current.json"), {"seq": seq, **doc})
         return path
 
     def get_current(self, store: str) -> dict | None:
@@ -59,14 +72,3 @@ class StateStore:
                 with open(os.path.join(d, f)) as fh:
                     docs.append(json.load(fh))
         return docs
-
-    @staticmethod
-    def _atomic_write(path: str, doc: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(doc, f, indent=1, default=str)
-            os.replace(tmp, path)
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)

@@ -1,63 +1,54 @@
-"""Structured Streaming tail of the changelog (≈ the reference's streaming
-task flow, StreamModelTaskRunner.java:79-171, re-expressed as
-readStream → foreachBatch → fenced MERGE → checkpoint).
+"""File tail of the changelog as a driver loop (≈ the reference's streaming
+task flow, StreamModelTaskRunner.java:79-171, over FileBasedSource's snapshot
+diff, FileBasedSource.java:58): list → footer schema → driver offset proof →
+fenced MERGE → listing cache.
 
 Mapping of reference semantics (SURVEY §2.11):
 - ``FlushControlMessage`` every flush interval (FlushingExtractor.java:84-85)
-  ⇒ the micro-batch trigger (``processingTime`` / ``availableNow``);
+  ⇒ one pass of the loop (``trigger_seconds`` / ``available_now``);
 - per-record ack + committable-watermark tracking
   (FineGrainedWatermarkTracker.java:181-200) ⇒ micro-batch atomicity: the
-  whole batch commits (MERGE + watermarks in one snapshot swap) or replays;
+  pass's offset runs are proved from its files, and the whole batch commits
+  (MERGE + watermarks + ``pending_ranges`` in one snapshot swap) or replays;
 - resume from committed watermarks (KafkaStreamingExtractor.java:305-313)
-  ⇒ two independent layers: the stream checkpoint (source progress) AND the
-  table's own watermark fencing — if the checkpoint is lost, redelivered
-  batches are fenced out by offset, so end-to-end delivery stays exactly-once;
-- ``maxOffsetsPerTrigger`` throttling ⇒ ``maxFilesPerTrigger`` on the file
-  source (or Kafka's own option when tailing Kafka).
+  ⇒ ONE exactly-once layer, the table's own watermark fences. The
+  checkpoint dir holds only a cache of the files already applied, which
+  spares re-reading them: a cache that lags a commit, or is lost, redelivers
+  files whose rows the fences skip;
+- ``maxOffsetsPerTrigger`` throttling ⇒ ``max_files_per_trigger``;
+- ``MetadataUpdateControlMessage`` (a mid-stream added column) ⇒ each pass
+  widens the read schema from its files' footers, in place.
 
-The file-based source here models a binlog landing zone (new files appear as
-the log grows); the same ``foreachBatch`` body works unchanged over
-``readStream.format("kafka")``.
+A micro-batch is a deterministic batch job over durably stored input
+("Discretized streams", SOSP 2013), so the loop needs no Structured
+Streaming: no offset or commit log, no read schema frozen at start, and no
+Spark job to list a batch's files (inside ``foreachBatch`` a batch's
+``inputFiles()`` is empty). The Kafka tail (``sources/kafka.py``) keeps
+``foreachBatch`` and calls the same ``CdcEngine.apply_stream_batch``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
+import time
 from functools import partial
-from urllib.parse import unquote, urlparse
 
+from pyspark import InheritableThread
 from pyspark.sql import types as T
 
 from .engine import CdcEngine
-from .planner import _footer_map
+from .planner import _footer_map, _local_path
 from .schema import merge_schemas
+from .sources.filebased import list_files, unseen
+from .state import write_json_atomic
 
-
-# Sentinel framing for cross-thread exception transport: foreachBatch
-# exceptions reach the caller WRAPPED in StreamingQueryException with only the
-# message text reliably preserved, so the merged schema rides the message as
-# a delimited JSON payload. The marker is unique enough that an unrelated
-# error can't trigger a schema restart (the round-2 substring match on the
-# class name "SchemaChangedError" could).
-_SCHEMA_SENTINEL = "<<gobblin-spark:schema-changed:"
-_SCHEMA_SENTINEL_END = ":end-schema>>"
-
-
-class SchemaChangedError(RuntimeError):
-    """A file in the current micro-batch carries a schema WIDER than the
-    stream's frozen read schema (the mid-stream added-column case,
-    ≈ MetadataUpdateControlMessage / KafkaSchemaChangeInjector.java:53-77).
-    Raised BEFORE the batch is applied, so nothing commits; the caller
-    restarts the tail with the merged schema and the failed batch replays
-    from the stream checkpoint under the new schema."""
-
-    def __init__(self, new_schema: T.StructType):
-        super().__init__(
-            f"stream schema widened {_SCHEMA_SENTINEL}{new_schema.json()}"
-            f"{_SCHEMA_SENTINEL_END}"
-        )
-        self.new_schema = new_schema
+# the listing cache in the checkpoint dir: path → [size, mtime] of every
+# applied file that is still listed
+_APPLIED = "applied-files.json"
+# how long an idle continuous tail waits before it lists again
+_IDLE_POLL_S = 0.1
 
 
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
@@ -114,15 +105,6 @@ def _footer_schema(path: str, infer_ntz: bool) -> str:
     return _nullable(schema).json()
 
 
-def _local_path(uri: str) -> str | None:
-    """Filesystem path of a ``file:`` URI or bare path; None for any other
-    scheme (pyarrow cannot open ``s3a://`` and the like)."""
-    u = urlparse(uri)
-    if u.scheme in ("", "file"):
-        return unquote(u.path)
-    return None
-
-
 def widened_schema(spark, frozen: T.StructType, files: list[str]) -> T.StructType:
     """``frozen`` merged with the read schema of every file in ``files``
     (equal to ``frozen`` unless a file is wider). Footers are read on the
@@ -138,6 +120,105 @@ def widened_schema(spark, frozen: T.StructType, files: list[str]) -> T.StructTyp
     return merged
 
 
+class FileTail:
+    """A running file tail, with the ``awaitTermination()``/``stop()`` of a
+    StreamingQuery. The loop runs in a ``pyspark.InheritableThread``, so the
+    Spark local properties of the thread that started it (job group,
+    scheduler pool) carry over to every batch's jobs. An exception in a pass
+    ends the loop and re-raises from ``awaitTermination()``; a pass that
+    fails before its commit has committed nothing."""
+
+    def __init__(
+        self,
+        engine: CdcEngine,
+        changelog_path: str,
+        checkpoint_dir: str,
+        schema: T.StructType | None,
+        max_files_per_trigger: int | None,
+        on_batch,
+        detect_schema_change: bool,
+    ):
+        self.engine = engine
+        self.path = changelog_path
+        self.schema = schema
+        self.max_files = max_files_per_trigger
+        self.on_batch = on_batch
+        self.detect_schema_change = detect_schema_change
+        self._cache = os.path.join(checkpoint_dir, _APPLIED)
+        self.applied: dict[str, list[int]] = {}
+        if os.path.exists(self._cache):
+            with open(self._cache) as f:
+                self.applied = json.load(f)["files"]
+        self._stop = threading.Event()
+        self._error: Exception | None = None
+        self._thread: InheritableThread | None = None
+
+    def run_batch(self, only: set[str] | None = None) -> bool:
+        """One pass: apply the oldest unapplied files (of ``only``, if
+        given), at most ``max_files_per_trigger`` of them, then record them
+        in the listing cache. False when there was nothing to apply."""
+        spark = self.engine.spark
+        listed = list_files(spark, self.path)
+        new = [f for f in unseen(listed, self.applied) if only is None or f in only]
+        batch = new[: self.max_files] if self.max_files else new
+        # the cache keeps only listed files: a file that left the landing
+        # dir leaves it (a changed file keeps its old entry until applied)
+        applied = {f: st for f, st in self.applied.items() if f in listed}
+        if batch:
+            if self.detect_schema_change or self.schema is None:
+                self.schema = widened_schema(spark, self.schema or T.StructType(), batch)
+            df = spark.read.schema(self.schema).option("basePath", self.path).parquet(*batch)
+            result = self.engine.apply_stream_batch(df, files=batch)
+            applied.update((f, listed[f]) for f in batch)
+        if applied != self.applied:
+            os.makedirs(os.path.dirname(self._cache), exist_ok=True)
+            write_json_atomic(self._cache, {"files": applied})
+            self.applied = applied
+        if batch and self.on_batch is not None:
+            self.on_batch(result)
+        return bool(batch)
+
+    def start(self, available_now: bool, trigger_seconds: int | None) -> "FileTail":
+        def loop() -> None:
+            if available_now:
+                only = set(unseen(list_files(self.engine.spark, self.path), self.applied))
+                while not self._stop.is_set() and self.run_batch(only):
+                    pass
+                return
+            while not self._stop.is_set():
+                t0 = time.monotonic()
+                busy = self.run_batch()
+                wait = t0 + (trigger_seconds or 0) - time.monotonic()
+                self._stop.wait(max(wait, 0 if busy else _IDLE_POLL_S))
+
+        def main() -> None:
+            try:
+                loop()
+            except Exception as e:  # noqa: BLE001 — re-raised by awaitTermination
+                self._error = e
+
+        self._thread = InheritableThread(main, daemon=True)
+        self._thread.start()
+        return self
+
+    @property
+    def isActive(self) -> bool:
+        return self._thread is not None and self._thread.is_alive()
+
+    def awaitTermination(self, timeout: float | None = None) -> bool | None:
+        """Wait for the loop to end; re-raise a batch's exception. With a
+        ``timeout``, return whether the loop has ended."""
+        self._thread.join(timeout)
+        if self._error is not None:
+            raise self._error
+        return None if timeout is None else not self._thread.is_alive()
+
+    def stop(self) -> None:
+        """End the loop after the pass in flight, and wait for it."""
+        self._stop.set()
+        self._thread.join()
+
+
 def tail_changelog(
     engine: CdcEngine,
     changelog_path: str,
@@ -148,133 +229,52 @@ def tail_changelog(
     max_files_per_trigger: int | None = None,
     on_batch=None,
     detect_schema_change: bool = True,
-):
-    """Start the streaming tail; returns the StreamingQuery.
+) -> FileTail:
+    """Start tailing the landing directory ``changelog_path`` (flat, or in
+    ``write_changelog``'s ``log_partition=N/`` layout); returns the running
+    ``FileTail``. A file must appear whole: write it under a name that
+    starts with ``.`` or ``_`` (never listed) and rename it in.
 
-    Use ``available_now=True`` to drain the current backlog and stop (the
+    Each pass lists the files not yet applied, takes the oldest (by mtime)
+    ``max_files_per_trigger`` of them, reads them with
+    ``spark.read.schema(s).option("basePath", changelog_path).parquet(*files)``
+    and applies them through ``CdcEngine.apply_stream_batch``, which proves
+    their offset runs from the files on the driver. A late file (an older
+    mtime, or offsets below ones already applied) is still applied: the
+    diff is by path, and the gap guard holds the watermark below it.
+
+    ``available_now=True`` drains the files present at start and ends (the
     incremental-batch mode Gobblin's batch jobs implement); a positive
-    ``trigger_seconds`` for a continuous tail (the streaming mode).
+    ``trigger_seconds`` starts a pass every that many seconds (the streaming
+    mode); with neither, passes run back to back and an idle tail lists
+    again every ``_IDLE_POLL_S``.
 
-    ``detect_schema_change``: Structured Streaming freezes the read schema at
-    stream start, so a mid-stream widened file would silently DROP its new
-    columns. With detection on, each micro-batch's source files (listed by
-    the same aggregate that proves its offsets contiguous, see
-    ``CdcEngine.apply_stream_batch``) are footer-checked against the frozen
-    schema on the driver; a widening raises SchemaChangedError before
-    anything commits — fail-and-restart, the same model lakehouse streaming
-    sinks use. At very high file rates, gate this behind a control-message
-    channel instead of per-batch footer reads (the reference's
-    MetadataUpdateControlMessage).
+    ``checkpoint_dir`` (a local directory) holds one document, the listing
+    cache: path → size and mtime of each applied file that is still listed,
+    replaced atomically after each commit. It bounds itself as files leave
+    the landing dir. A crash between a commit and the cache write, or a
+    lost ``checkpoint_dir``, re-lists files that the table's watermark
+    fences then skip.
+
+    ``schema`` is the starting read schema (default: the first batch's
+    footers). With ``detect_schema_change``, each pass merges its files'
+    footer schemas into it (``widened_schema``, on the driver), so a file
+    with an added column flows into the table with no restart; without it
+    the read schema stays as it started and new columns are dropped.
     """
-    spark = engine.spark
-    if schema is None:
-        schema = spark.read.option("mergeSchema", True).parquet(changelog_path).schema
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(changelog_path)
-    frozen = schema
-
-    def _check(files: list[str]) -> None:
-        merged = widened_schema(spark, frozen, files)
-        if merged != frozen:
-            raise SchemaChangedError(merged)
-
-    def _apply(batch_df, epoch_id: int):
-        result = engine.apply_stream_batch(
-            batch_df,
-            batch_id=f"epoch-{epoch_id:06d}",
-            check_files=_check if detect_schema_change else None,
-        )
-        if on_batch is not None:
-            on_batch(result)
-
-    writer = stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", os.path.join(checkpoint_dir, "stream")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return FileTail(
+        engine, changelog_path, checkpoint_dir, schema, max_files_per_trigger, on_batch, detect_schema_change
+    ).start(available_now, trigger_seconds)
 
 
 def drain(engine: CdcEngine, changelog_path: str, checkpoint_dir: str, **kwargs) -> list[dict]:
     """Run the tail until the current backlog is fully applied, then stop.
     Returns the per-batch apply results."""
     results: list[dict] = []
-    q = tail_changelog(
-        engine,
-        changelog_path,
-        checkpoint_dir,
-        available_now=True,
-        on_batch=results.append,
-        **kwargs,
-    )
-    q.awaitTermination()
+    tail_changelog(
+        engine, changelog_path, checkpoint_dir, available_now=True, on_batch=results.append, **kwargs
+    ).awaitTermination()
     return results
-
-
-def drain_evolving(
-    engine: CdcEngine,
-    changelog_path: str,
-    checkpoint_dir: str,
-    schema: T.StructType | None = None,
-    max_restarts: int = 4,
-    **kwargs,
-) -> list[dict]:
-    """Drain with automatic schema-evolution restarts: when a micro-batch
-    surfaces a widened file, the failed (uncommitted) batch replays under the
-    merged schema on the next attempt and the new column flows through the
-    engine's existing schema-merge-on-write path into the table."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    results: list[dict] = []  # shared across attempts: batches applied before
-    current = schema          # a schema abort are already committed
-
-    def _collect(r: dict) -> None:
-        # after a restart the stream checkpoint replays batches that already
-        # committed; they come back fenced ({"skipped": True}) — keep only
-        # real applies so callers see one entry per committed batch
-        if not r.get("skipped"):
-            results.append(r)
-
-    for _ in range(max_restarts + 1):
-        q = tail_changelog(
-            engine,
-            changelog_path,
-            checkpoint_dir,
-            schema=current,
-            available_now=True,
-            on_batch=_collect,
-            **kwargs,
-        )
-        try:
-            q.awaitTermination()
-            return results
-        except StreamingQueryException as e:
-            # foreachBatch exceptions surface wrapped with only the message
-            # text preserved; the sentinel frames the merged schema as JSON
-            msg = str(e)
-            i = msg.find(_SCHEMA_SENTINEL)
-            if i < 0:
-                raise
-            j = msg.find(_SCHEMA_SENTINEL_END, i)
-            current = None
-            if j > i:
-                try:
-                    current = T.StructType.fromJson(
-                        json.loads(msg[i + len(_SCHEMA_SENTINEL) : j])
-                    )
-                except (ValueError, KeyError):
-                    current = None  # payload mangled in transport — fall back
-            if current is None:
-                actual = engine.spark.read.option("mergeSchema", True).parquet(
-                    changelog_path
-                ).schema
-                current = merge_schemas(schema, actual) if schema is not None else actual
-    raise RuntimeError(f"schema still evolving after {max_restarts} restarts")
 
 
 def stateful_lww_updates(

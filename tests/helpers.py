@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -68,3 +69,22 @@ def oracle_final(clog: pd.DataFrame, pages: pd.DataFrame | None) -> pd.DataFrame
     exp = reduce_changelog(clog, pages)
     exp["text"] = exp["html"].map(lambda h: extract_text(h) if h is not None else None)
     return exp
+
+
+@contextmanager
+def py4j_calls(spark):
+    """Record every py4j command the driver sends to the JVM, from any
+    thread, while the block runs; yields the list of commands."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls: list[str] = []
+
+    def counting(command, *args, **kwargs):
+        calls.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield calls
+    finally:
+        del client.send_command  # the class's method again

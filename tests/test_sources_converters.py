@@ -4,6 +4,7 @@ option mapping), converters chain, and retention delete."""
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 import pandas as pd
 import pytest
@@ -17,6 +18,7 @@ from gobblin_spark.sources import (
     plan_query_partitions,
     watermark_predicates,
 )
+from gobblin_spark.sources.filebased import _hadoop_listing, list_files
 from gobblin_spark.state import StateStore
 
 from helpers import PAGES_SCHEMA
@@ -43,6 +45,24 @@ def test_file_source_incremental(spark, tmp_path):
     assert [os.path.basename(f) for f in second] == ["f2.parquet"]
     src.commit(second)
     assert src.plan(pattern) == []
+
+
+def test_hadoop_listing_equals_local_listing(spark, tmp_path):
+    """A non-local landing dir is listed through Hadoop's FileSystem; on a
+    ``file:`` URI that listing holds the same files and sizes as the
+    driver's own walk, hidden names skipped in both."""
+    for d in ("log_partition=0", "log_partition=1", "_temporary", ".hidden"):
+        (tmp_path / d).mkdir()
+        pd.DataFrame({"a": [1, 2]}).to_parquet(tmp_path / d / "f.parquet")
+    (tmp_path / "_SUCCESS").write_text("")
+    (tmp_path / ".f.parquet.crc").write_text("x")
+    local = list_files(spark, str(tmp_path))
+    assert sorted(os.path.relpath(p, tmp_path) for p in local) == [
+        "log_partition=0/f.parquet",
+        "log_partition=1/f.parquet",
+    ]
+    hadoop = _hadoop_listing(spark, "file://" + str(tmp_path))
+    assert {urlparse(u).path: st[0] for u, st in hadoop.items()} == {p: st[0] for p, st in local.items()}
 
 
 # ------------------------------------------------------------ jdbc planning

@@ -1,30 +1,35 @@
-"""Structured Streaming tail: incremental drain equivalence + exactly-once
-under checkpoint loss / redelivery (≈ TaskContinuousTest semantics,
+"""File tail: incremental drain equivalence + exactly-once under cache loss,
+redelivery and crashes (≈ TaskContinuousTest semantics,
 gobblin-runtime/src/test/.../TaskContinuousTest.java:72 — stream records in,
 poll committed watermarks, assert table/watermark consistency)."""
 
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 import random
 import shutil
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark.errors.exceptions.captured import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gobblin_spark.fixtures import _to_arrow, make_changelog
 from gobblin_spark.lake import SnapshotTable
-from gobblin_spark.engine import CdcEngine, offset_islands, offset_runs
+from gobblin_spark.engine import CdcEngine, file_offset_runs, offset_islands, offset_runs
 from gobblin_spark.schema import merge_schemas
-from gobblin_spark.streaming import drain, drain_evolving, tail_changelog, widened_schema
+from gobblin_spark.streaming import _APPLIED, drain, tail_changelog, widened_schema
 
 from conftest import table_fingerprint
-from helpers import PAGES_SCHEMA, oracle_final, visible_with_offset
+from helpers import PAGES_SCHEMA, oracle_final, py4j_calls, visible_with_offset
+
+# test_file_tail_py4j_calls_per_microbatch measured 696 calls per batch on
+# the 4-core host; the Structured Streaming tail made 1,513 on the same batches
+PY4J_CALLS_PER_BATCH = 900
 
 
 @pytest.fixture()
@@ -44,7 +49,11 @@ def stream_env(spark, tmp_path):
 
 
 def _land(df, src, name):
-    pq.write_table(_to_arrow(df.reset_index(drop=True)), os.path.join(src, name))
+    """Land a file as a landing zone must: written under a hidden name the
+    tail does not list, then renamed in, so no pass sees half a file."""
+    tmp = os.path.join(src, "." + name)
+    pq.write_table(_to_arrow(df.reset_index(drop=True)), tmp)
+    os.replace(tmp, os.path.join(src, name))
 
 
 def test_stream_drain_incremental_equals_oracle(spark, stream_env):
@@ -83,10 +92,10 @@ def test_stream_redelivery_is_fenced(spark, stream_env):
 
 
 def test_stream_schema_evolution_mid_tail(spark, stream_env):
-    """A column added MID-TAIL (a widened file arriving after the stream
-    froze its schema) must land in the table, not be silently dropped: the
-    widened batch fails before commit, the tail restarts with the merged
-    schema, and the replayed batch flows through schema-merge-on-write
+    """A column added MID-TAIL (a widened file arriving after the tail
+    started on the old schema) must land in the table, not be silently
+    dropped: the pass widens its read schema from the file's footer and the
+    batch flows through schema-merge-on-write with no restart
     (≈ KafkaSchemaChangeInjector end-to-end, now in streaming too)."""
     clog, seg_a, seg_b, src, table, engine, ckpt = stream_env
 
@@ -98,11 +107,9 @@ def test_stream_schema_evolution_mid_tail(spark, stream_env):
     )
     pq.write_table(widened, os.path.join(src, "part-001.parquet"))
 
-    # maxFilesPerTrigger=1 ⇒ the old-schema file applies in batch 1; batch 2
-    # surfaces the widened file, aborts uncommitted, and the drain restarts
-    results = drain_evolving(
-        engine, src, ckpt, schema=frozen, max_files_per_trigger=1
-    )
+    # max_files_per_trigger=1 ⇒ the old-schema file applies in batch 1 and
+    # the widened file in batch 2
+    results = drain(engine, src, ckpt, schema=frozen, max_files_per_trigger=1)
     applied = [r for r in results if not r.get("skipped")]
     assert len(applied) >= 2
 
@@ -372,35 +379,12 @@ def test_stateful_lww_null_version_rows_never_win(spark, tmp_path):
     assert rows[0]["log_offset"] == 1
 
 
-def test_schema_sentinel_roundtrip():
-    """The merged schema survives the exception-message transport verbatim."""
-    import json
-
-    from gobblin_spark.streaming import (
-        _SCHEMA_SENTINEL,
-        _SCHEMA_SENTINEL_END,
-        SchemaChangedError,
-    )
-
-    schema = T.StructType(
-        [T.StructField("url", T.StringType()), T.StructField("lang", T.StringType())]
-    )
-    msg = str(SchemaChangedError(schema))
-    i = msg.find(_SCHEMA_SENTINEL)
-    j = msg.find(_SCHEMA_SENTINEL_END, i)
-    assert 0 <= i < j
-    parsed = T.StructType.fromJson(json.loads(msg[i + len(_SCHEMA_SENTINEL) : j]))
-    assert parsed == schema
-    # an unrelated error that merely MENTIONS the class name must not match
-    assert _SCHEMA_SENTINEL not in "user code raised SchemaChangedError-like text"
-
-
-# --------------------------------------------- one-aggregate micro-batch path
+# ------------------------------------------- offset runs: three derivations
 
 _COMMITTED = {0: 9, 1: -1, 3: 40}  # partition 2 has nothing committed
 
 
-def _offsets_case(kind: str, seed: int) -> list[tuple[int, int]]:
+def _offsets_case(kind: str, seed: int) -> list[tuple[int | None, int | None]]:
     """(log_partition, log_offset) rows straddling ``_COMMITTED``."""
     rng = random.Random(seed)
     if kind == "empty":
@@ -413,7 +397,7 @@ def _offsets_case(kind: str, seed: int) -> list[tuple[int, int]]:
         if kind == "fenced" and p == 3:
             hi = wm  # every row of partition 3 is already committed
         offs = list(range(lo, hi + 1))
-        if kind == "gaps":
+        if kind in ("gaps", "hive"):
             offs = [o for o in offs if rng.random() > 0.2]
         if kind == "gap_and_duplicate":
             # one hole and one repeat above the watermark: the row count
@@ -421,9 +405,35 @@ def _offsets_case(kind: str, seed: int) -> list[tuple[int, int]]:
             hole, dup = rng.sample([o for o in offs[1:-1] if o > wm], 2)
             offs = [o for o in offs if o != hole] + [dup]
         rows += [(p, o) for o in offs]
-    if kind == "duplicates":
+    if kind in ("duplicates", "hive"):
         rows += rng.sample(rows, len(rows) // 3)
+    if kind == "nulls":
+        # a NULL partition (whose offsets would otherwise open a run) and a
+        # NULL offset: neither row is in any run
+        rows += [(None, 1000), (None, 1001), (2, None)]
     return rows
+
+
+def _write_offsets(tmp_path, rows, hive: bool) -> list[str]:
+    """Two files of ``rows``; in the hive layout one file per partition dir
+    and half, with ``log_partition`` only in the dir name."""
+    half = len(rows) // 2
+    files = []
+    for i, part in enumerate((rows[:half], rows[half:])):
+        groups = {} if hive else {None: []}
+        for p, o in part:
+            groups.setdefault(p if hive else None, []).append((p, o))
+        for p, grp in groups.items():
+            cols = {"log_offset": pa.array([o for _, o in grp], pa.int64())}
+            d = tmp_path
+            if hive:
+                d = tmp_path / f"log_partition={p}"
+                d.mkdir(exist_ok=True)
+            else:
+                cols = {"log_partition": pa.array([q for q, _ in grp], pa.int32()), **cols}
+            files.append(str(d / f"f{i}.parquet"))
+            pq.write_table(pa.table(cols), files[-1])
+    return files
 
 
 @pytest.mark.parametrize(
@@ -433,58 +443,63 @@ def _offsets_case(kind: str, seed: int) -> list[tuple[int, int]]:
         for k in ("contiguous", "gaps", "duplicates", "gap_and_duplicate", "fenced")
         for s in (11, 12, 13)
     ]
-    + [("empty", 0)],
+    + [("empty", 0), ("hive", 11), ("hive", 12), ("nulls", 11)],
 )
 def test_offset_runs_equal_window_reference(spark, tmp_path, kind, seed):
     """The one-aggregate path (min/max/count-distinct, window only for a
-    gapped partition) yields exactly ``offset_islands``' runs, and lists the
-    batch's source files, fenced rows' files included."""
+    gapped partition) and the driver proof over the batch's files (unique
+    pairs split at gaps) both yield exactly ``offset_islands``' runs."""
     rows = _offsets_case(kind, seed)
     random.Random(seed).shuffle(rows)
-    half = len(rows) // 2
-    for i, part in enumerate((rows[:half], rows[half:])):
-        pq.write_table(
-            pa.table(
-                {
-                    "log_partition": pa.array([p for p, _ in part], pa.int32()),
-                    "log_offset": pa.array([o for _, o in part], pa.int64()),
-                }
-            ),
-            str(tmp_path / f"f{i}.parquet"),
-        )
+    files = _write_offsets(tmp_path, rows, hive=kind == "hive")
     df = spark.read.parquet(str(tmp_path))
-    runs, files = offset_runs(df, _COMMITTED)
     ref = sorted(
         (r["log_partition"], r["lo"], r["hi"])
         for r in offset_islands(df, _COMMITTED).collect()
     )
-    assert runs == ref
+    assert offset_runs(df, _COMMITTED) == ref
+    assert file_offset_runs(files, _COMMITTED) == ref
+    assert file_offset_runs(["file://" + f for f in files], _COMMITTED) == ref
     if kind == "empty":
-        assert runs == [] and files == []
+        assert ref == []
     else:
-        assert runs
-        assert [os.path.basename(f) for f in files] == ["f0.parquet", "f1.parquet"]
+        assert ref and all(None not in r for r in ref)
     if kind == "fenced":
-        assert 3 not in {p for p, _, _ in runs}
+        assert 3 not in {p for p, _, _ in ref}
+    # a file the driver cannot open sends the batch to the Spark aggregate
+    assert file_offset_runs(files + ["s3a://bucket/f.parquet"], _COMMITTED) is None
+
+
+def _count_tail_jobs(spark, engine, src, ckpt, group: str) -> tuple[list[dict], int]:
+    """Drain one micro-batch per file under a job group set on this thread:
+    the tail's loop thread inherits it, so every job of every batch counts."""
+    sc = spark.sparkContext
+    results: list[dict] = []
+    sc.setJobGroup(group, "file tail micro-batches")
+    try:
+        q = tail_changelog(
+            engine, src, ckpt, available_now=True, max_files_per_trigger=1, on_batch=results.append
+        )
+        q.awaitTermination()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return results, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_stream_microbatch_job_count(spark, stream_env):
-    """A non-fold micro-batch runs at most 5 Spark jobs, schema check
-    included: the offset aggregate (3 adaptive jobs) and the delta write
-    (2). Streaming submits every job of a query under its run id."""
+    """A non-fold delta micro-batch runs at most 2 Spark jobs, schema check
+    and offset proof included: both run on the driver, so the delta write's
+    2 jobs are all."""
     clog, seg_a, seg_b, src, table, engine, ckpt = stream_env
     engine.merge_mode = "delta"
     quarter = len(clog) // 4
     for i in range(4):
         _land(clog.iloc[i * quarter : (i + 1) * quarter], src, f"f{i}.parquet")
-    results: list[dict] = []
-    q = tail_changelog(
-        engine, src, ckpt, available_now=True, max_files_per_trigger=1, on_batch=results.append
-    )
-    q.awaitTermination()
+    results, n_jobs = _count_tail_jobs(spark, engine, src, ckpt, "tail-job-count")
     assert len(results) == 4 and not any(r.get("skipped") for r in results)
-    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
-    assert len(jobs) / len(results) <= 5, len(jobs)
+    assert not any(r.get("folded_buckets") for r in results)
+    assert n_jobs / len(results) <= 2, n_jobs
 
 
 def _spark_file(spark, tmp_path, name: str, df) -> str:
@@ -537,9 +552,10 @@ def test_footer_schema_check_agrees_with_spark_reader(spark, tmp_path):
     assert widened_schema(spark, frozen, ["file://" + files[0], "file://" + same]) == frozen
 
 
-def test_widened_fenced_replay_raises_before_commit(spark, stream_env):
-    """A widened file aborts its micro-batch before commit even when every
-    row in it is already committed (a replay after checkpoint loss)."""
+def test_widened_fenced_replay_commits_nothing(spark, stream_env):
+    """A widened file whose every row is already committed (a replay after
+    the listing cache is lost) widens the read schema, is fenced, and
+    commits nothing; it does not raise."""
     clog, seg_a, seg_b, src, table, engine, ckpt = stream_env
     _land(seg_a, src, "part-000.parquet")
     frozen = spark.read.parquet(src).schema
@@ -551,6 +567,138 @@ def test_widened_fenced_replay_raises_before_commit(spark, stream_env):
     widened = _to_arrow(seg_a.reset_index(drop=True))
     widened = widened.append_column("source_tag", pa.array(["x"] * len(widened)))
     pq.write_table(widened, os.path.join(replay, "part-000.parquet"))
-    with pytest.raises(StreamingQueryException, match="stream schema widened"):
-        drain(engine, replay, ckpt + "-replay", schema=frozen)
+    results = drain(engine, replay, ckpt + "-replay", schema=frozen)
+    assert results and all(r.get("skipped") for r in results)
     assert table.version == version
+
+
+def _thirds(clog, src, mtimes) -> None:
+    """Land ``clog`` as three files of consecutive rows (each a contiguous
+    offset run of every partition) whose mtimes are ``mtimes``; None leaves
+    a third unlanded."""
+    third = len(clog) // 3
+    for i, mtime in enumerate(mtimes):
+        if mtime is None:
+            continue
+        name = f"f{i}.parquet"
+        _land(clog.iloc[i * third : None if i == 2 else (i + 1) * third], src, name)
+        os.utime(os.path.join(src, name), (mtime, mtime))
+
+
+def _assert_oracle_and_counts(table, clog) -> None:
+    assert table_fingerprint(visible_with_offset(table)) == table_fingerprint(oracle_final(clog, None))
+    per_partition = clog.groupby("log_partition").size()
+    assert table.properties["partition_counts"] == {str(p): int(n) for p, n in per_partition.items()}
+    assert table.properties["pending_ranges"] == {}
+
+
+def test_late_file_with_older_mtime_is_applied(spark, stream_env):
+    """The middle third lands after the last one, with the OLDEST mtime: the
+    listing diff is by path, so it is still applied, and the gap guard held
+    the watermark below it until then."""
+    clog, seg_a, seg_b, src, table, engine, ckpt = stream_env
+    now = int(time.time())
+    _thirds(clog, src, [now - 20, None, now - 10])
+    drain(engine, src, ckpt)
+    assert table.properties["pending_ranges"]  # the gap is open
+    _thirds(clog, src, [None, now - 1000, None])
+    results = drain(engine, src, ckpt)
+    assert len(results) == 1 and not results[0]["skipped"]
+    _assert_oracle_and_counts(table, clog)
+
+
+def test_crash_between_data_write_and_commit_replays(spark, stream_env, monkeypatch):
+    """The second micro-batch dies after its data and manifest are written
+    but before the head swap. The next drain re-lists that file (its cache
+    entry was never written) and the table ends equal to the oracle, each
+    event counted once."""
+    clog, seg_a, seg_b, src, table, engine, ckpt = stream_env
+    now = int(time.time())
+    _thirds(clog, src, [now - 30, now - 20, now - 10])
+    swap = SnapshotTable._swap_head
+    calls = []
+
+    def crash_on_second(self, version):
+        calls.append(version)
+        if len(calls) == 2:
+            raise RuntimeError("crash before the head swap")
+        return swap(self, version)
+
+    monkeypatch.setattr(SnapshotTable, "_swap_head", crash_on_second)
+    with pytest.raises(RuntimeError, match="crash before the head swap"):
+        drain(engine, src, ckpt, max_files_per_trigger=1)
+    monkeypatch.setattr(SnapshotTable, "_swap_head", swap)
+    with open(os.path.join(ckpt, _APPLIED)) as f:
+        assert [os.path.basename(p) for p in json.load(f)["files"]] == ["f0.parquet"]
+
+    reopened = SnapshotTable(spark, table.root)
+    resumed = CdcEngine(spark, reopened)
+    results = drain(resumed, src, ckpt, max_files_per_trigger=1)
+    assert [r["skipped"] for r in results] == [False, False]
+    _assert_oracle_and_counts(reopened, clog)
+
+
+def test_listing_cache_holds_only_listed_files(spark, stream_env):
+    """The cache in the checkpoint dir drops applied files that left the
+    landing dir, so it stays as small as the landing dir."""
+    clog, seg_a, seg_b, src, table, engine, ckpt = stream_env
+    _thirds(clog, src, [100, 200, 300])
+    drain(engine, src, ckpt)
+
+    def cached() -> list[str]:
+        with open(os.path.join(ckpt, _APPLIED)) as f:
+            return sorted(os.path.basename(p) for p in json.load(f)["files"])
+
+    assert cached() == ["f0.parquet", "f1.parquet", "f2.parquet"]
+    os.remove(os.path.join(src, "f0.parquet"))
+    assert drain(engine, src, ckpt) == []
+    assert cached() == ["f1.parquet", "f2.parquet"]
+
+
+def test_continuous_trigger_stops_and_surfaces_a_failed_batch(spark, stream_env, monkeypatch):
+    """A ``trigger_seconds`` tail applies a file that lands while it runs;
+    ``stop()`` ends its thread. A batch that raises ends the loop, commits
+    nothing, and re-raises from ``awaitTermination()``."""
+    clog, seg_a, seg_b, src, table, engine, ckpt = stream_env
+    results: list[dict] = []
+    q = tail_changelog(engine, src, ckpt, trigger_seconds=1, on_batch=results.append)
+    try:
+        _land(seg_a, src, "part-000.parquet")
+        deadline = time.monotonic() + 120
+        while not results and q.isActive and time.monotonic() < deadline:
+            time.sleep(0.1)
+        q.awaitTermination(0)  # re-raises if the loop died
+        assert results and not results[0]["skipped"]
+        assert q.isActive
+    finally:
+        q.stop()
+    assert not q.isActive
+
+    version = table.version
+
+    def failing_merge(*args, **kwargs):
+        raise RuntimeError("batch failed")
+
+    monkeypatch.setattr(table, "merge", failing_merge)
+    q = tail_changelog(engine, src, ckpt, trigger_seconds=1)
+    _land(seg_b, src, "part-001.parquet")
+    with pytest.raises(RuntimeError, match="batch failed"):
+        q.awaitTermination(120)
+    assert not q.isActive
+    assert table.version == version
+
+
+def test_file_tail_py4j_calls_per_microbatch(spark, stream_env):
+    """Driver round trips to the JVM per non-fold delta micro-batch, listing,
+    schema check, offset proof and commit included. With Structured
+    Streaming, its offset aggregate and DataFrame call-site capture it took
+    about 1,500."""
+    clog, seg_a, seg_b, src, table, engine, ckpt = stream_env
+    engine.merge_mode = "delta"
+    quarter = len(clog) // 4
+    for i in range(4):
+        _land(clog.iloc[i * quarter : (i + 1) * quarter], src, f"f{i}.parquet")
+    with py4j_calls(spark) as calls:
+        results = drain(engine, src, ckpt, max_files_per_trigger=1)
+    assert len(results) == 4 and not any(r.get("skipped") for r in results)
+    assert len(calls) / len(results) <= PY4J_CALLS_PER_BATCH, len(calls)
