@@ -283,7 +283,15 @@ class CdcEngine:
         (``file_offset_runs``), with no Spark job; otherwise one aggregate
         over ``batch_df`` proves them (``offset_runs``). A row whose
         ``log_partition`` or ``log_offset`` is NULL is in no run, so it is
-        never applied."""
+        never applied.
+
+        Stream batches alone never advance a partition whose first offset is
+        above 0 (a Kafka topic past its retention, a landing dir that starts
+        mid-log): on a fresh table every run waits in ``pending_ranges`` for
+        the offsets below it, which never come, so the watermark stays −1
+        while the rows are applied and counted. Bootstrap such a log with
+        ``run()``, which plans from the log's retention floor; the stream
+        batches then extend the committed prefix."""
         committed = self.committed_watermarks()
 
         # Offset-gap guard (≈ FineGrainedWatermarkTracker.java:181-200 —

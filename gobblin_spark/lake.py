@@ -486,17 +486,6 @@ class SnapshotTable:
         self._commit(self._successor(self.manifest(), sort_order=list(cols)))
 
     @staticmethod
-    def _clustered(df: DataFrame, m: dict) -> DataFrame:
-        """``df``, already hash-partitioned on ``_bucket`` by the caller's one
-        exchange, sorted within partitions by ``_bucket`` and ``m``'s sort
-        order when it has one. sortWithinPartitions adds no exchange — the
-        hash partitioning Catalyst sees is preserved."""
-        so = [c for c in m.get("sort_order") or [] if c in df.columns]
-        if so:
-            df = df.sortWithinPartitions("_bucket", *so)
-        return df
-
-    @staticmethod
     def _writer(df: DataFrame, m: dict):
         """Overwrite writer with the table's parquet write options applied:
         ``write.bloom.cols`` (comma list) turns on parquet bloom filters for
@@ -514,6 +503,24 @@ class SnapshotTable:
         if mrpf:
             w = w.option("maxRecordsPerFile", int(mrpf))
         return w
+
+    def _write_buckets(
+        self, df: DataFrame, m: dict, version: int, tag: str = ""
+    ) -> tuple[str, dict[int, dict]]:
+        """Write ``df``, already hash-partitioned on ``_bucket`` by the
+        caller's one exchange, to a newly claimed data dir, one ``_bucket=``
+        dir per bucket, with ``m``'s ``write.*`` options. Every commit that
+        writes data writes here. Each task holds whole buckets, so a written
+        bucket gets one file (more only under ``write.max-records-per-file``);
+        ``m``'s sort order clusters rows within partitions, which adds no
+        exchange. Returns the data dir and its ``_bucket_dir_stats``."""
+        so = [c for c in m.get("sort_order") or [] if c in df.columns]
+        if so:
+            df = df.sortWithinPartitions("_bucket", *so)
+        data_rel = self._alloc_data_rel(version, tag)
+        out_path = os.path.join(self.root, data_rel)
+        self._writer(df, m).partitionBy("_bucket").parquet(out_path)
+        return data_rel, _bucket_dir_stats(out_path)
 
     def _file_key_ranges(self, out_path: str) -> dict[int, dict[str, list[str]]]:
         """Per-file [min, max] of the merge key from parquet footers
@@ -1054,6 +1061,84 @@ class SnapshotTable:
             return sorted(out)
         return sorted(int(b) for b in set(bf) | set(bt) if bf.get(b) != bt.get(b))
 
+    def _generations(self, m: dict, buckets: list[int] | None = None) -> dict:
+        """Bucket → generation entries of ``m``, for ``buckets`` (default:
+        every bucket). Keyed access: a lazy (sharded) index loads only the
+        shards these buckets live in."""
+        bmap = m["buckets"]
+        if buckets is not None:
+            bmap = {str(b): bmap[str(b)] for b in sorted(set(buckets)) if str(b) in bmap}
+        return {str(b): self._bucket_entries(e) for b, e in bmap.items()}
+
+    def _collapse(
+        self, m: dict, gens: dict, n: int, exchange: bool = True, probe: str | None = None
+    ) -> DataFrame:
+        """One row per key of the buckets in ``gens`` (bucket → generation
+        entries of ``m``), hidden columns included, plus ``_bucket`` under an
+        ``n``-bucket layout. Multi-generation buckets are exchanged once on
+        ``_bucket``, ``exchange_width(n)`` wide, and collapsed by LWW on
+        (``_bucket``, key) over the hidden version columns, riding that
+        exchange: newest wins, tombstones included. A single-generation bucket
+        holds one row per key already: it is never aggregated, and exchanged
+        the same way only when ``exchange`` is set. A union of two such
+        exchanges keeps their partitioning, so a join, sort or bucketed write
+        above it adds none. ``probe`` skips files whose manifest key range
+        cannot hold it."""
+        groups: tuple[dict, dict] = ({}, {})  # single, multi: schema id → paths
+        for b, entries in gens.items():
+            for ent in entries:
+                paths = [os.path.join(self.root, ent["data"], f"_bucket={b}")]
+                if probe is not None and ent.get("ranges") is not None:
+                    # the ranges cover every file of the entry (_file_key_ranges)
+                    paths = [
+                        os.path.join(paths[0], fn)
+                        for fn, (lo, hi) in sorted(ent["ranges"].items())
+                        if lo <= probe <= hi
+                    ]
+                if paths:
+                    groups[len(entries) > 1].setdefault(ent["schema_id"], []).extend(paths)
+        full = _with_hidden(self._era_schema(m))
+        scans = [self._scan_eras(m, list(g.items())) for g in groups]
+        if scans[0] is None and scans[1] is None:  # nothing to read
+            scans[0] = self.spark.createDataFrame([], full)
+        parts = []
+        for multi, df in enumerate(scans):
+            if df is None:
+                continue
+            df = df.withColumn("_bucket", self.bucket_expr(n=n))
+            if multi or exchange:
+                df = df.repartition(self.exchange_width(n), F.col("_bucket"))
+            if multi:
+                df = lww_latest(
+                    df, ["_bucket", self.key], ["_version_ts", "_version_off"]
+                ).select(*full.fieldNames(), "_bucket")
+            parts.append(df)
+        return functools.reduce(DataFrame.unionByName, parts)
+
+    @staticmethod
+    def _mark_deleted(df: DataFrame, m: dict) -> DataFrame:
+        """Merge-on-read predicate deletes (Iceberg v2 equality-delete
+        analogue): a delta ``delete_where`` commit stores only the predicate
+        and a VERSION FENCE; rows of ``df`` (collapsed under ``m``) that match
+        it with a row version <= the fence are marked ``_deleted``. Marking the
+        LWW winner, not filtering before the collapse, keeps a purge from
+        resurrecting an older, unmatched version of the same key; marking
+        instead of filtering lets ``read`` drop the rows, ``changes_between``
+        classify them as deletes and the rewrites materialize them. Only
+        ``m``'s predicates apply (time travel to a pre-delete snapshot sees
+        the rows). NULL-safe: a predicate that evaluates NULL keeps the row."""
+        for d in m.get("delete_preds") or []:
+            us, off = F.lit(int(d["fence_us"])), F.lit(int(d["fence_off"]))
+            row_us = F.unix_micros(F.col("_version_ts"))
+            fenced = (row_us < us) | ((row_us == us) & (F.col("_version_off") <= off))
+            hit = (
+                F.coalesce(F.expr(d["pred"]), F.lit(False))
+                & F.coalesce(fenced, F.lit(False))
+                & ~F.coalesce(F.col("_deleted"), F.lit(False))
+            )
+            df = df.withColumn("_deleted", F.col("_deleted") | hit)
+        return df
+
     def read(
         self,
         buckets: list[int] | None = None,
@@ -1072,13 +1157,12 @@ class SnapshotTable:
         been expired.
 
         Merge-on-read: buckets holding multiple delta GENERATIONS are
-        collapsed to one row per key by LWW over the hidden version columns
-        (newest wins — tombstones included, so a delete in a later generation
-        hides every earlier version). Single-generation buckets skip the
-        collapse entirely: the extra shuffle is paid only for the fraction of
-        the table that compaction hasn't folded yet, which is what makes
-        delta commits O(batch) on write without making every read O(table)
-        in shuffle.
+        collapsed to one row per key (``_collapse``). Single-generation
+        buckets are scanned with no exchange at all; only the fraction of the
+        table that compaction hasn't folded yet pays one ``_bucket``
+        exchange, which is what makes delta commits O(batch) on write without
+        making every read O(table) in shuffle. Pending predicate deletes are
+        marked after the collapse (``_mark_deleted``).
 
         ``key_equals`` plans a POINT LOOKUP from metadata alone: the key's
         bucket is resolved driver-side (pure-Python XXH64, no job), and
@@ -1089,6 +1173,7 @@ class SnapshotTable:
         applied, so the result is exact either way; with a key-leading sort
         order this touches 1 bucket and typically 1 file of the table."""
         m = self.manifest() if at_version is None else self.manifest_at(at_version)
+        nb = int(m["n_buckets"])
         probe = None
         if key_equals is not None:
             from .xxh64 import xxh64
@@ -1096,78 +1181,15 @@ class SnapshotTable:
             probe = str(key_equals)
             # resolve against THIS manifest's bucket count — a time-travel
             # read across a rebucket() must probe the era's own layout
-            kb = xxh64(probe.encode("utf-8")) % int(m["n_buckets"])
+            kb = xxh64(probe.encode("utf-8")) % nb
             buckets = [kb] if buckets is None else [b for b in buckets if b == kb]
-        full = _with_hidden(self._era_schema(m))
-        single: dict[tuple[str, int], list[str]] = {}
-        multi: dict[tuple[str, int], list[str]] = {}
-        bmap = m["buckets"]
-        if buckets is None:
-            it = bmap.items()
-        else:
-            # keyed access — a lazy (sharded) index loads only the shards
-            # these buckets live in, O(touched), never the whole table index
-            it = ((str(b), bmap[str(b)]) for b in sorted(set(buckets)) if str(b) in bmap)
-        for b, e in it:
-            entries = self._bucket_entries(e)
-            target = single if len(entries) == 1 else multi
-            for ent in entries:
-                bucket_dir = os.path.join(self.root, ent["data"], f"_bucket={b}")
-                ranges = ent.get("ranges") if probe is not None else None
-                if ranges is not None:
-                    # file-level skip: ranges cover EVERY file of the entry
-                    # (the _file_key_ranges invariant), so files outside the
-                    # probe's range provably hold no matching row
-                    paths = [
-                        os.path.join(bucket_dir, fn)
-                        for fn, (lo, hi) in sorted(ranges.items())
-                        if lo <= probe <= hi
-                    ]
-                    if not paths:
-                        continue
-                else:
-                    paths = [bucket_dir]
-                target.setdefault((ent["data"], ent["schema_id"]), []).extend(paths)
-
-        base = self._scan_eras(m, [(sid, p) for (_, sid), p in single.items()])
-        delta = self._scan_eras(m, [(sid, p) for (_, sid), p in multi.items()])
-        if delta is not None:
-            delta = lww_latest(delta, [self.key], ["_version_ts", "_version_off"])
-            delta = delta.select(full.fieldNames())
-        if base is None and delta is None:
-            out = self.spark.createDataFrame([], full)
-        elif base is None:
-            out = delta
-        elif delta is None:
-            out = base
-        else:
-            out = base.unionByName(delta)
+        gens = self._generations(m, buckets)
+        out = self._collapse(m, gens, nb, exchange=False, probe=probe).drop("_bucket")
         if probe is not None:
             # file pruning dropped rows of OTHER keys; the equality filter
             # makes the result exact regardless of which files survived
             out = out.filter(F.col(self.key) == probe)
-        # Merge-on-read predicate deletes (Iceberg v2 equality-delete
-        # analogue): a delta delete_where() commit stores only the predicate
-        # + a VERSION FENCE; matching rows whose row version is <= the fence
-        # are marked tombstoned here, POST-collapse — marking the LWW winner
-        # (not filtering pre-collapse) is what keeps a purge from
-        # resurrecting an older, unmatched version of the same key. Marking
-        # instead of filtering also makes the purge visible to every
-        # downstream consumer of read(): visible scans drop the rows,
-        # changes_between classifies them as deletes, and the rewrite/compact
-        # paths materialize the mark into data files. Applied only to rows of
-        # THIS manifest's era (time travel to a pre-delete snapshot sees the
-        # rows). NULL-safe: a predicate that evaluates NULL keeps the row.
-        for d in m.get("delete_preds") or []:
-            us, off = F.lit(int(d["fence_us"])), F.lit(int(d["fence_off"]))
-            row_us = F.unix_micros(F.col("_version_ts"))
-            fenced = (row_us < us) | ((row_us == us) & (F.col("_version_off") <= off))
-            hit = (
-                F.coalesce(F.expr(d["pred"]), F.lit(False))
-                & F.coalesce(fenced, F.lit(False))
-                & ~F.coalesce(F.col("_deleted"), F.lit(False))
-            )
-            out = out.withColumn("_deleted", F.col("_deleted") | hit)
+        out = self._mark_deleted(out, m)
         if not include_hidden:
             out = out.filter(~F.col("_deleted")).drop(*HIDDEN)
         return out
@@ -1188,9 +1210,11 @@ class SnapshotTable:
         entry lists differ between the two snapshots are read (on either
         side). A table where a batch touched 10 of 10^6 buckets reads 10
         buckets twice, not the table twice; cost is O(changed data), driver
-        cost O(n_buckets) dict compares. Both sides are repartitioned once on
-        the layout bucket and joined on (_bucket, key) — the same
-        co-partitioned single-shuffle-per-side shape as merge(). Caveat:
+        cost O(n_buckets) dict compares. Each side is ``_collapse``'s output
+        under the current table's bucket function, already hash-partitioned
+        on ``_bucket`` at ``exchange_width()``, and the sides join on
+        (_bucket, key) with no further exchange — the co-partitioned shape of
+        merge(). Caveat:
         compaction/fold rewrites bucket entries without logical changes, so a
         window spanning a compaction commit prunes nothing (still correct —
         identical versions classify as no-change and drop out).
@@ -1250,28 +1274,17 @@ class SnapshotTable:
         # widest of the two eras so both sides conform to one shape
         full = _with_hidden(self._era_schema(m_to))
         names = full.fieldNames()
-        # the old era's column names may have been renamed/dropped inside the
-        # window — walk them forward to v_to's names before conforming
-        old = conform(
-            self._to_current_names(
-                self.read(buckets=changed, include_hidden=True, at_version=v_from),
-                m_from["current_schema_id"],
-                m_to,
-            ),
-            full,
+        sides = []
+        for mv in (m_from, m_to):
+            df = self._collapse(mv, self._generations(mv, changed), self.n_buckets)
+            # the old era's column names may have been renamed/dropped inside
+            # the window — walk them forward to v_to's names before conforming
+            df = self._to_current_names(self._mark_deleted(df, mv), mv["current_schema_id"], m_to)
+            sides.append(conform(df, full, keep=["_bucket"]))
+        o, n = (
+            df.select([F.col(c).alias(f"{p}_{c}") for c in [*names, "_bucket"]])
+            for p, df in zip("on", sides)
         )
-        new = conform(
-            self.read(buckets=changed, include_hidden=True, at_version=v_to), full
-        )
-        width = self.exchange_width()
-        old = old.withColumn("_bucket", self.bucket_expr()).repartition(
-            width, F.col("_bucket")
-        )
-        new = new.withColumn("_bucket", self.bucket_expr()).repartition(
-            width, F.col("_bucket")
-        )
-        o = old.select([F.col(c).alias(f"o_{c}") for c in [*names, "_bucket"]])
-        n = new.select([F.col(c).alias(f"n_{c}") for c in [*names, "_bucket"]])
         j = o.join(
             n,
             (F.col("o__bucket") == F.col("n__bucket"))
@@ -1322,18 +1335,18 @@ class SnapshotTable:
         columns. Deletes arrive as rows with ``_deleted=true``.
 
         Scale shape (single-shuffle-per-side merge): each side is hash
-        repartitioned ONCE on ``_bucket`` into ``exchange_width()``
-        partitions; the full-outer join keys on (_bucket, key), and because
-        HashPartitioning(_bucket) clusters every join key pair, Spark's
-        EnsureRequirements recognizes both sides as co-partitioned — no
-        further exchange for the join, and none for the bucketed write either
-        (FileFormatWriter imposes no distribution; each task holds whole
-        buckets, so the commit produces one file per bucket, not #tasks ×
-        #buckets slivers). Callers that pre-partition ``updates`` on a
-        ``_bucket`` column into ``exchange_width()`` partitions, as the engine
-        does, pay ZERO extra shuffle here. Another width, or a Python eval
-        node above that exchange (it reports unknown output partitioning),
-        makes the join shuffle that side again.
+        partitioned ONCE on ``_bucket`` into ``exchange_width()`` partitions.
+        The target side is ``_collapse``'s output, so the LWW collapse of a
+        multi-generation bucket rides that same exchange. The full-outer join
+        keys on (_bucket, key); HashPartitioning(_bucket) clusters every join
+        key pair, so Spark's EnsureRequirements sees both sides as
+        co-partitioned and adds no exchange for the join, nor for the
+        bucketed write (each task holds whole buckets: one file per bucket,
+        not #tasks × #buckets slivers). Callers that pre-partition
+        ``updates`` on a ``_bucket`` column into ``exchange_width()``
+        partitions, as the engine does, pay ZERO extra shuffle here. Another
+        width, or a Python eval node above that exchange (it reports unknown
+        output partitioning), makes the join shuffle that side again.
         Only affected buckets are read and rewritten; the rest of the table is
         carried forward by manifest reference, zero data movement.
 
@@ -1368,11 +1381,8 @@ class SnapshotTable:
             u = u.repartition(self.exchange_width(), F.col("_bucket"))
 
         if mode == "delta":
-            data_rel = self._alloc_data_rel(self._next_version(m["version"] + 1))
-            out_path = os.path.join(self.root, data_rel)
-            u_out = self._clustered(u.select([*names, "_bucket"]), m)
-            self._writer(u_out, m).partitionBy("_bucket").parquet(out_path)
-            file_stats = _bucket_dir_stats(out_path)
+            u = u.select([*names, "_bucket"])
+            data_rel, file_stats = self._write_buckets(u, m, self._next_version(m["version"] + 1))
             info: dict = {}
 
             def append(head: dict) -> dict:
@@ -1435,10 +1445,8 @@ class SnapshotTable:
         else:
             affected = sorted(set(affected))
         u = u.select([F.col(c).alias(f"u_{c}") for c in [*names, "_bucket"]])
-        tgt = conform(self.read(buckets=affected, include_hidden=True), full)
-        tgt = tgt.withColumn("_bucket", self.bucket_expr()).repartition(
-            self.exchange_width(), F.col("_bucket")
-        )
+        tgt = self._collapse(m, self._generations(m, affected), self.n_buckets)
+        tgt = conform(self._mark_deleted(tgt, m), full, keep=["_bucket"])
         tgt = tgt.select([F.col(c).alias(f"t_{c}") for c in [*names, "_bucket"]])
 
         joined = tgt.join(
@@ -1459,12 +1467,9 @@ class SnapshotTable:
         merged = joined.select(
             F.coalesce(F.col("t__bucket"), F.col("u__bucket")).alias("_bucket"), *out_cols
         )
-
-        data_rel = self._alloc_data_rel(self._next_version(m["version"] + 1))
-        out_path = os.path.join(self.root, data_rel)
-        # sorted only — no repartition, the co-partitioned join's single
-        # exchange per side stays the whole shuffle story
-        self._writer(self._clustered(merged, m), m).partitionBy("_bucket").parquet(out_path)
+        # no repartition: the co-partitioned join's single exchange per side
+        # stays the whole shuffle story
+        data_rel, file_stats = self._write_buckets(merged, m, self._next_version(m["version"] + 1))
 
         # Manifest entries advance only for buckets the write actually
         # produced. `affected` may be a superset of the buckets present in
@@ -1476,7 +1481,6 @@ class SnapshotTable:
         # entry (or stay absent). The converse — a written bucket outside
         # `affected` — would silently drop the target rows that were never
         # read, so it is a hard error, not a repair.
-        file_stats = _bucket_dir_stats(out_path)
         stray = set(file_stats) - set(affected)
         if stray:
             raise ValueError(
@@ -1504,14 +1508,12 @@ class SnapshotTable:
         """Bounded manifest growth (LSM-style) for a delta commit building
         ``new``: a bucket of ``overlay`` whose generation list exceeds
         ``max_generations`` is folded back to ONE entry in the SAME commit —
-        its generations are read, LWW-collapsed (tombstones kept: they still
-        fence replays), and rewritten to a fold dir referenced by the new
-        manifest. The rewrite takes the commit's plan shape: ONE hash
-        exchange on ``_bucket``, ``exchange_width()`` wide, which the LWW
-        groupBy on (``_bucket``, key) rides as in ``CdcEngine._updates``; the
-        write runs one task per partition of that exchange, not one per
-        bucket, and still writes one file per bucket. Cost is O(overflowing
-        buckets), amortized O(1/max_generations) of the table per commit
+        its generations are LWW-collapsed by ``_collapse`` (tombstones kept:
+        they still fence replays; pending predicate deletes stay unmarked)
+        and written by ``_write_buckets`` to a fold dir the new manifest
+        references, one task per partition of the collapse's one ``_bucket``
+        exchange and one file per bucket. Cost is O(overflowing buckets),
+        amortized O(1/max_generations) of the table per commit
         stream; manifest size stays ≤ n_buckets·max_generations entries
         forever. A crash before the pointer swap leaves only an unreferenced
         fold dir — the usual replay story. Rewrites ``overlay``/``removed`` in
@@ -1522,26 +1524,9 @@ class SnapshotTable:
         overflow = sorted(int(b) for b, ents in overlay.items() if len(ents) > cap)
         if not overflow:
             return []
-        fold_rel = self._alloc_data_rel(new["version"], "f")
-        fold_path = os.path.join(self.root, fold_rel)
-        by_schema: dict[int, list[str]] = {}
-        for b in overflow:
-            for ent in overlay[str(b)]:
-                by_schema.setdefault(ent["schema_id"], []).append(
-                    os.path.join(self.root, ent["data"], f"_bucket={b}")
-                )
-        scan = self._scan_eras(new, list(by_schema.items()))
-        collapsed = lww_latest(
-            scan.withColumn("_bucket", self.bucket_expr()).repartition(
-                self.exchange_width(), F.col("_bucket")
-            ),
-            ["_bucket", self.key],
-            ["_version_ts", "_version_off"],
-        ).select(*_with_hidden(self._era_schema(new)).fieldNames(), "_bucket")
-        self._writer(self._clustered(collapsed, new), new).partitionBy("_bucket").parquet(
-            fold_path
-        )
-        fold_stats = _bucket_dir_stats(fold_path)
+        gens = {str(b): overlay[str(b)] for b in overflow}
+        collapsed = self._collapse(new, gens, int(new["n_buckets"]))
+        fold_rel, fold_stats = self._write_buckets(collapsed, new, new["version"], "f")
         for b in overflow:
             if b in fold_stats:
                 overlay[str(b)] = {
@@ -1573,26 +1558,21 @@ class SnapshotTable:
         """Whole-table rewrite behind ``compact``/``rebucket`` and
         ``delete_where(mode="rewrite")``, which differ only in the row
         filter ``keep`` (None keeps every row, tombstones included): the
-        rows of ``read(include_hidden=True)`` that pass ``keep`` are
-        re-bucketed into ``n_buckets`` (default: unchanged) through one
-        ``_bucket`` exchange, ``exchange_width(n_buckets)`` wide, clustered
-        by the sort order, written with the table's ``write.*`` options and
-        committed with per-file key ranges in one snapshot."""
+        table's ``_collapse`` under ``n_buckets`` (default: unchanged), with
+        predicate deletes marked, filtered by ``keep``, written by
+        ``_write_buckets`` and committed with per-file key ranges in one
+        snapshot."""
         m = self.manifest()
         nb = int(n_buckets or m["n_buckets"])
-        df = self.read(include_hidden=True).withColumn("_bucket", self.bucket_expr(n=nb))
+        df = self._mark_deleted(self._collapse(m, self._generations(m), nb), m)
         if keep is not None:
             df = df.filter(keep)
-        data_rel = self._alloc_data_rel(self._next_version(m["version"] + 1))
-        out_path = os.path.join(self.root, data_rel)
-        df = df.repartition(self.exchange_width(nb), F.col("_bucket"))
-        self._writer(self._clustered(df, m), m).partitionBy("_bucket").parquet(out_path)
-        file_stats = _bucket_dir_stats(out_path)
+        data_rel, file_stats = self._write_buckets(df, m, self._next_version(m["version"] + 1))
         # Iceberg-style data-file column stats: per-file [min,max] of the
         # merge key, captured once at rewrite time from the parquet footers.
         # With a key-leading sort order the per-file ranges are disjoint, so
         # a point read opens exactly the files that can hold the key.
-        ranges = self._file_key_ranges(out_path)
+        ranges = self._file_key_ranges(os.path.join(self.root, data_rel))
         new = self._successor(
             m,
             properties,
@@ -1606,9 +1586,9 @@ class SnapshotTable:
                 }
                 for b, st in sorted(file_stats.items())
             },
-            # pending merge-on-read predicate deletes were applied by the
-            # read above (matched rows marked _deleted, then dropped or
-            # materialized) — the purge is now physical, clear the preds
+            # pending merge-on-read predicate deletes were marked above
+            # (matched rows _deleted, then dropped or materialized) — the
+            # purge is now physical, clear the preds
             delete_preds=[],
         )
         self._commit(new)

@@ -13,6 +13,14 @@ engine is source-agnostic past the plan, including the gaps-and-islands
 offset fencing (exactly-once survives checkpoint loss). A Kafka batch is
 not a file list, so its offsets are proved by ``engine.offset_runs``.
 
+A topic whose retained offsets start above 0 must be bootstrapped with
+``CdcEngine.run()`` (which plans from the retention floor) before it is
+tailed. Stream batches alone hold a fresh table's watermark at −1: each
+batch's offsets wait in ``pending_ranges`` for the expired ones below them.
+``starting_offsets_from_watermarks`` maps −1 to "earliest", so every restart
+re-reads the whole retained topic, and ``pending_ranges`` skips every row of
+it.
+
 No Kafka broker (and no spark-sql-kafka jar) exists in the sandbox, so
 ``tail_kafka`` is exercised end-to-end in tests through a STATIC DataFrame
 of the exact wire schema feeding the identical transform + foreachBatch

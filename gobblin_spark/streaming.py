@@ -120,6 +120,21 @@ def widened_schema(spark, frozen: T.StructType, files: list[str]) -> T.StructTyp
     return merged
 
 
+def _whole(path: str) -> bool:
+    """Whether ``path``'s parquet footer parses. A file still being written
+    has no footer yet; a non-local file is left to Spark's reader."""
+    import pyarrow.parquet as pq
+
+    local = _local_path(path)
+    if local is None:
+        return True
+    try:
+        pq.read_metadata(local)
+    except (OSError, ValueError):  # pyarrow's ArrowInvalid is a ValueError
+        return False
+    return True
+
+
 class FileTail:
     """A running file tail, with the ``awaitTermination()``/``stop()`` of a
     StreamingQuery. The loop runs in a ``pyspark.InheritableThread``, so the
@@ -156,11 +171,23 @@ class FileTail:
     def run_batch(self, only: set[str] | None = None) -> bool:
         """One pass: apply the oldest unapplied files (of ``only``, if
         given), at most ``max_files_per_trigger`` of them, then record them
-        in the listing cache. False when there was nothing to apply."""
+        in the listing cache. False when there was nothing to apply.
+
+        A file whose footer does not parse yet (caught mid-write) is left
+        out of the pass and out of the cache, so the next pass retries it;
+        a pass over ``only`` (``available_now``) raises and names it."""
         spark = self.engine.spark
         listed = list_files(spark, self.path)
-        new = [f for f in unseen(listed, self.applied) if only is None or f in only]
-        batch = new[: self.max_files] if self.max_files else new
+        batch: list[str] = []
+        for f in unseen(listed, self.applied):
+            if self.max_files and len(batch) == self.max_files:
+                break
+            if only is not None and f not in only:
+                continue
+            if _whole(f):
+                batch.append(f)
+            elif only is not None:
+                raise ValueError(f"{f} is not a whole parquet file: its footer does not parse")
         # the cache keeps only listed files: a file that left the landing
         # dir leaves it (a changed file keeps its old entry until applied)
         applied = {f: st for f, st in self.applied.items() if f in listed}
@@ -232,8 +259,10 @@ def tail_changelog(
 ) -> FileTail:
     """Start tailing the landing directory ``changelog_path`` (flat, or in
     ``write_changelog``'s ``log_partition=N/`` layout); returns the running
-    ``FileTail``. A file must appear whole: write it under a name that
-    starts with ``.`` or ``_`` (never listed) and rename it in.
+    ``FileTail``. A file should appear whole: write it under a name that
+    starts with ``.`` or ``_`` (never listed) and rename it in. A continuous
+    pass skips a listed file whose parquet footer does not parse yet and
+    retries it next pass; ``available_now`` raises on it.
 
     Each pass lists the files not yet applied, takes the oldest (by mtime)
     ``max_files_per_trigger`` of them, reads them with
@@ -241,7 +270,10 @@ def tail_changelog(
     and applies them through ``CdcEngine.apply_stream_batch``, which proves
     their offset runs from the files on the driver. A late file (an older
     mtime, or offsets below ones already applied) is still applied: the
-    diff is by path, and the gap guard holds the watermark below it.
+    diff is by path, and the gap guard holds the watermark below it. The
+    same guard holds a fresh table's watermark at −1 for good when the log
+    starts above offset 0 (``CdcEngine.apply_stream_batch``): bootstrap such
+    a log with ``CdcEngine.run()`` before tailing it.
 
     ``available_now=True`` drains the files present at start and ends (the
     incremental-batch mode Gobblin's batch jobs implement); a positive

@@ -34,6 +34,15 @@ def _bucket(col):
     return F.pmod(F.xxhash64(F.col(col)), F.lit(8)).cast("int")
 
 
+def _bucket_exchanges(plan: str, width: int = 4) -> int:
+    """Number of Exchange nodes in ``plan``, asserting each one is a hash
+    exchange on ``_bucket``, ``width`` wide (none on the merge key)."""
+    lines = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    for ln in lines:
+        assert re.search(rf"Exchange hashpartitioning\(_bucket#\d+, {width}\)", ln), plan
+    return len(lines)
+
+
 def test_apply_chain_single_exchange_per_side(spark, tmp_path):
     clog = make_changelog(300, n_urls=40, n_partitions=4, seed=3)
     path = os.path.join(str(tmp_path), "clog")
@@ -128,40 +137,48 @@ def test_engine_exchange_is_core_wide(spark, tmp_path, monkeypatch, kw):
 def test_engine_rewrite_commit_single_exchange_per_side(spark, tmp_path, monkeypatch):
     """What a rewrite-mode MERGE from the engine writes, at n_buckets=8 on
     local[4]: one 4-wide _bucket exchange for the updates and one for the
-    target rows; the co-partitioned join and the bucketed write add none."""
+    target rows; the co-partitioned join and the bucketed write add none.
+    When every target bucket holds two delta generations, their LWW collapse
+    rides the target's exchange: still no exchange on the key."""
     from helpers import setup_pipeline
 
     from gobblin_spark.lake import SnapshotTable
 
-    _, _, _, eng = setup_pipeline(spark, str(tmp_path), n_buckets=8)
+    _, _, table, eng = setup_pipeline(spark, str(tmp_path), n_buckets=8)
     assert eng.merge_mode == "rewrite"
-    captured = []
 
     def writer(df, m):
         captured.append(df)
         raise _Captured
 
-    monkeypatch.setattr(SnapshotTable, "_writer", staticmethod(writer))
-    with pytest.raises(_Captured):
-        eng.run(os.path.join(str(tmp_path), "changelog"))
-    plan = _explain(captured[0], "simple")
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
-    widths = re.findall(r"Exchange hashpartitioning\(_bucket#\d+, (\d+)\)", plan)
-    assert widths == ["4", "4"], plan
-    assert plan.count("Exchange") == 2, plan
+    for generations in (1, 2):
+        if generations == 2:
+            table.merge(table.read(include_hidden=True), mode="delta")
+            gens = [len(table._bucket_entries(e)) for e in table.manifest()["buckets"].values()]
+            assert gens == [2] * 8, gens
+        captured = []
+        with monkeypatch.context() as mp:
+            mp.setattr(SnapshotTable, "_writer", staticmethod(writer))
+            with pytest.raises(_Captured):
+                eng.run(os.path.join(str(tmp_path), "changelog"))
+        plan = _explain(captured[0], "simple")
+        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
+        assert _bucket_exchanges(plan) == 2, plan
 
 
 def test_fold_and_compact_bucket_exchange_is_core_wide(spark, tmp_path, monkeypatch):
     """What a delta commit's generation fold and a compaction write, at
     n_buckets=8 on local[4]: the fold's frame has exactly one exchange, on
-    _bucket and 4 wide, which its LWW and the sort ride; compaction's
-    _bucket exchange is 4 wide too."""
+    _bucket and 4 wide, which its LWW and the sort ride. ``compact()`` and
+    ``rebucket()`` of a table whose buckets hold several generations
+    collapse them on that same exchange: every exchange is on _bucket and 4
+    wide, none is on the key."""
     from gobblin_spark.lake import SnapshotTable
     from tests.test_iceberg_backend import SCHEMA, _updates
 
     t = SnapshotTable.create(
         spark, str(tmp_path / "t"), SCHEMA, key="url", n_buckets=8,
-        max_generations=1, sort_order=["url"],
+        max_generations=2, sort_order=["url"],
     )
     captured = []
     write = SnapshotTable._writer
@@ -170,18 +187,23 @@ def test_fold_and_compact_bucket_exchange_is_core_wide(spark, tmp_path, monkeypa
         captured.append(df)
         return write(df, m)
 
+    def delta(text, ts):
+        return t.merge(_updates(spark, [(f"u{i}", text, ts, i) for i in range(40)]), mode="delta")
+
     monkeypatch.setattr(SnapshotTable, "_writer", staticmethod(writer))
-    t.merge(_updates(spark, [(f"u{i}", "a", 1, i) for i in range(40)]), mode="delta")
-    res = t.merge(_updates(spark, [(f"u{i}", "b", 2, i) for i in range(40)]), mode="delta")
+    delta("a", 1)
+    delta("b", 2)
+    res = delta("c", 3)
     assert res["folded_buckets"]
     plan = _explain(captured[-1], "simple")  # the fold writes after the delta
-    widths = re.findall(r"Exchange hashpartitioning\(_bucket#\d+, (\d+)\)", plan)
-    assert widths == ["4"] and plan.count("Exchange") == 1, plan
+    assert _bucket_exchanges(plan) == 1, plan
 
-    t.compact()
-    plan = _explain(captured[-1], "simple")
-    widths = re.findall(r"Exchange hashpartitioning\(_bucket#\d+, (\d+)\)", plan)
-    assert widths == ["4"], plan
+    for ts, rewrite in ((4, t.compact), (5, lambda: t.rebucket(16))):
+        delta("d", ts)
+        assert any(len(t._bucket_entries(e)) > 1 for e in t.manifest()["buckets"].values())
+        rewrite()
+        assert _bucket_exchanges(_explain(captured[-1], "simple")) >= 1
+    assert t.n_buckets == 16
 
 
 def test_read_plans_without_listing_job(spark, tmp_path):
@@ -276,14 +298,20 @@ def test_delta_commit_plan_has_no_target_scan(spark, tmp_path):
     t.merge(upd, mode="delta")  # seed a generation
     t.merge(upd, mode="delta")
 
-    # delta READ collapses generations with exactly one aggregate; a
-    # single-generation table reads with none
-    plan = _explain(t.read(), "simple")
+    # delta READ collapses generations with exactly one aggregate, riding
+    # exactly one exchange, on _bucket; a single-generation table reads with
+    # neither
+    plan = _explain(t.read(include_hidden=True), "simple")
     assert "max_by" in plan or "Aggregate" in plan or "HashAggregate" in plan, plan
+    assert _bucket_exchanges(plan) == 1, plan
+    # both sides of changes_between arrive bucket-partitioned: the join on
+    # (_bucket, key) adds no exchange on the key
+    plan = _explain(t.changes_between(t.version - 1, t.version), "simple")
+    assert _bucket_exchanges(plan) == 2, plan
 
     t.compact()
-    plan = _explain(t.read(), "simple")
-    assert "max_by" not in plan, plan  # folded: collapse-free scan again
+    plan = _explain(t.read(include_hidden=True), "simple")
+    assert "max_by" not in plan and "Exchange" not in plan, plan  # folded
 
 
 def test_partition_pruning_on_hive_partition_column(spark, tmp_path):

@@ -10,13 +10,19 @@ KeyDedupReducerTest / TaskContinuousTest pattern.
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from pyspark.sql import functions as F
+
 from gobblin_spark.dedup import lww_latest, lww_latest_salted, lww_latest_window
+from gobblin_spark.engine import CdcEngine
+from gobblin_spark.lake import SnapshotTable
 from gobblin_spark.oracle import reduce_changelog
 
 BASE = pd.Timestamp("2026-01-01")
@@ -124,3 +130,42 @@ def test_split_application_equals_single_fold(spark, clog, cut_frac):
     deleted_in_a = set(a.loc[a["op"] == "D", "url"])
     keep = lambda df: df[~df["url"].isin(deleted_in_a)]  # noqa: E731
     assert _canon(keep(two_step)) == _canon(keep(full))
+
+
+@given(
+    clog=changelogs(),
+    steps=st.lists(
+        st.tuples(st.sampled_from(["delta", "rewrite"]), st.booleans()), min_size=1, max_size=3
+    ),
+)
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+def test_mixed_merge_modes_match_oracle(spark, tmp_path, clog, steps):
+    """The changelog applied in ``len(steps)`` batches, each committed in
+    its drawn merge mode and optionally followed by ``compact()``, into a
+    table that folds past two generations: the visible table equals the
+    oracle fold. Delta generations, folds, rewrite MERGEs over a
+    multi-generation target and compactions all collapse through one LWW."""
+    schema = _spark_df(spark, clog).drop("op", "log_partition", "log_offset").schema
+    table = SnapshotTable.create(
+        spark, str(tmp_path / uuid.uuid4().hex), schema, key="url", n_buckets=4, max_generations=2
+    )
+    engine = CdcEngine(spark, table, extract=False)
+    for i, (mode, compact) in enumerate(steps):
+        engine.merge_mode = mode
+        # offsets rise with row position in every partition, so a row prefix
+        # is an offset prefix; run() applies what its watermarks have not
+        engine.run(_spark_df(spark, clog.iloc[: len(clog) * (i + 1) // len(steps)]))
+        if compact:
+            # tombstones stay: a later offset may carry an older warc_ts
+            table.compact(drop_tombstones=False)
+    got = (
+        table.read(include_hidden=True)
+        .filter(~F.col("_deleted"))
+        .withColumn("log_offset", F.col("_version_off"))
+        .toPandas()
+    )
+    assert _canon(got) == _canon(reduce_changelog(clog, None))

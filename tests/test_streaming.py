@@ -6,6 +6,7 @@ poll committed watermarks, assert table/watermark consistency)."""
 from __future__ import annotations
 
 import datetime as dt
+import io
 import json
 import os
 import random
@@ -335,6 +336,44 @@ def test_redelivered_gap_batch_not_recounted(spark, tmp_path):
     # 6 distinct offsets applied exactly once each
     assert t.properties["partition_counts"] == {"0": 6}
     assert t.read_visible().count() == 6
+
+
+def test_run_bootstraps_a_log_that_starts_above_zero(spark, tmp_path):
+    """Offsets 300–599 of partition 0, the lower ones expired. Stream
+    batches alone leave a fresh table's watermark at −1 (their runs wait in
+    ``pending_ranges`` for offsets 0–299); ``run()`` over offsets 300–399
+    plans from the log's floor, and two stream batches over 400–599 then
+    commit 599 with nothing pending."""
+    schema = T.StructType(
+        [
+            T.StructField("url", T.StringType()),
+            T.StructField("warc_ts", T.TimestampType()),
+            T.StructField("html", T.BinaryType()),
+        ]
+    )
+
+    def rows(lo, hi):
+        return spark.createDataFrame(
+            [(f"k{i % 37}", "U", _ts(i), b"v%d" % i, 0, i) for i in range(lo, hi + 1)],
+            CLOG_SCHEMA,
+        )
+
+    def engine(name):
+        t = SnapshotTable.create(spark, str(tmp_path / name), schema, key="url", n_buckets=4)
+        return t, CdcEngine(spark, t, job_id=name, extract=False)
+
+    t, stream_only = engine("stream_only")
+    stream_only.apply_stream_batch(rows(300, 399), batch_id="s0")
+    assert stream_only.committed_watermarks() == {0: -1}
+    assert t.properties["pending_ranges"] == {"0": [[300, 399]]}
+
+    t, eng = engine("bootstrapped")
+    eng.run(rows(300, 399))
+    assert eng.committed_watermarks() == {0: 399}
+    eng.apply_stream_batch(rows(400, 499), batch_id="s1")
+    eng.apply_stream_batch(rows(500, 599), batch_id="s2")
+    assert eng.committed_watermarks() == {0: 599}
+    assert not t.properties.get("pending_ranges")
 
 
 def test_stateful_lww_null_version_rows_never_win(spark, tmp_path):
@@ -686,6 +725,45 @@ def test_continuous_trigger_stops_and_surfaces_a_failed_batch(spark, stream_env,
         q.awaitTermination(120)
     assert not q.isActive
     assert table.version == version
+
+
+def test_file_caught_mid_write_is_retried(spark, stream_env):
+    """A listed file whose bytes are still landing (no parquet footer yet)
+    ends neither a continuous tail nor gets recorded in its listing cache:
+    each pass leaves it out, and the pass after it is whole applies it. An
+    ``available_now`` drain raises and names it."""
+    clog, seg_a, seg_b, src, table, engine, ckpt = stream_env
+    buf = io.BytesIO()
+    pq.write_table(_to_arrow(seg_b.reset_index(drop=True)), buf)
+    data = buf.getvalue()
+    late = os.path.join(src, "part-001.parquet")
+    _land(seg_a, src, "part-000.parquet")
+    with open(late, "wb") as f:
+        f.write(data[: len(data) // 2])
+    with pytest.raises(ValueError, match="part-001.parquet"):
+        drain(engine, src, ckpt)
+
+    results: list[dict] = []
+    q = tail_changelog(engine, src, ckpt, trigger_seconds=1, on_batch=results.append)
+    try:
+        deadline = time.monotonic() + 120
+        while not results and q.isActive and time.monotonic() < deadline:
+            time.sleep(0.1)
+        time.sleep(1.5)  # at least one more pass lists the half file
+        q.awaitTermination(0)  # re-raises if the loop died
+        assert q.isActive and len(results) == 1
+        with open(os.path.join(ckpt, _APPLIED)) as f:
+            assert late not in json.load(f)["files"]
+        with open(late, "wb") as f:
+            f.write(data)
+        while len(results) < 2 and q.isActive and time.monotonic() < deadline:
+            time.sleep(0.1)
+        q.awaitTermination(0)
+    finally:
+        q.stop()
+    assert len(results) == 2
+    got = table_fingerprint(visible_with_offset(table))
+    assert got == table_fingerprint(oracle_final(clog, None))
 
 
 def test_file_tail_py4j_calls_per_microbatch(spark, stream_env):
